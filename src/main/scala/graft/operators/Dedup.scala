@@ -222,8 +222,7 @@ object Dedup {
     else df.localCheckpoint(eager = true)
 
   /** Forked session for the CC loops, with the AQE posture pinned
-    * SESSION-LOCALLY per variant (measured A/B, plans/r18
-    * cc_aqe_ab.md):
+    * SESSION-LOCALLY per variant (measured A/B at sf0.1):
     *
     *  - `aqeOn = false` — min-label PROPAGATION. Its round join keys a
     *    PERSISTED edge table (InMemoryRelation, accurate stats) against
@@ -370,7 +369,7 @@ object Dedup {
     */
   def chunkDedupIncremental(newBatch: DataFrame, keepers: DataFrame,
       id: Column, text: Column, chunkWords: Int): DataFrame =
-    chunkDedupIncrementalLayers(newBatch, Seq(keepers), id, text, chunkWords)
+    reconstructDocs(newKeeperChunkRows(newBatch, Seq(keepers), id, text, chunkWords))
 
   /** `left` minus rows whose `key` appears in ANY state layer — ≡ one
     * left_anti against the layers' union (anti-join distributes over
@@ -399,16 +398,6 @@ object Dedup {
     case _ => left
   }
 
-  /** [[chunkDedupIncremental]] with the keeper state as LAYERS (base
-    * first, then deltas — [[graft.operators.Ingest.loadStates]]' chain
-    * shape): the state anti-join runs per layer so a bucketed base
-    * never shuffles. Output ≡ the single-frame form on the layers'
-    * union.
-    */
-  def chunkDedupIncrementalLayers(newBatch: DataFrame, keepers: Seq[DataFrame],
-      id: Column, text: Column, chunkWords: Int): DataFrame =
-    reconstructDocs(newKeeperChunkRows(newBatch, keepers, id, text, chunkWords))
-
   /** The SHARED intermediate of the chunk gate and the keeper-state
     * delta: batch-first chunk rows (h, keep, doc_id, n_chunks, idx,
     * chunk) that survive the keeper-state anti-join.
@@ -417,7 +406,9 @@ object Dedup {
     * the batch minus state — batchFirst's min-struct agg is exactly
     * chunkKeepers' keep). The ingest advance stages this frame once
     * instead of running the chunk-table derivation + state anti-join
-    * twice.
+    * twice. The keeper state comes as LAYERS (base first, then
+    * deltas — [[graft.operators.Ingest.loadStates]]' chain shape): the
+    * state anti-join runs per layer so a bucketed base never shuffles.
     */
   private[graft] def newKeeperChunkRows(newBatch: DataFrame, keepers: Seq[DataFrame],
       id: Column, text: Column, chunkWords: Int): DataFrame = {
@@ -575,25 +566,22 @@ object Dedup {
     */
   def selfRepSpansIncremental(batch: DataFrame, state: DataFrame,
       id: Column, text: Column, n: Int): DataFrame =
-    selfRepSpansIncrementalLayers(batch, Seq(state), id, text, n)
+    selfRepSpansIncrementalWithOwn(batch, None, Seq(state), id, text, n)
 
-  /** [[selfRepSpansIncremental]] with the first-doc state as layers.
+  /** [[selfRepSpansIncremental]] with the first-doc state as layers
+    * and an optional PRECOMPUTED batch-owner table.
+    *
     * The owner resolution left-joins each layer separately (the
     * bucketed base exchange-free, deltas broadcast) and coalesces the
     * per-layer first_doc columns — exact ≡ the union form whenever a
     * key lives in at most ONE layer, which is the
     * [[graft.operators.Ingest.StateDeltas]] append contract; with
-    * overlapping layers the union form's min would be needed, so this
-    * variant is for the chain shape only.
-    */
-  def selfRepSpansIncrementalLayers(batch: DataFrame, state: Seq[DataFrame],
-      id: Column, text: Column, n: Int): DataFrame =
-    selfRepSpansIncrementalWithOwn(batch, None, state, id, text, n)
-
-  /** [[selfRepSpansIncrementalLayers]] with an optional PRECOMPUTED
-    * batch-owner table (ng, first_doc) — the ingest advance passes its
-    * staged [[ngramFirstDocs]] batch table, which is the same
-    * groupBy-min over the same ngram hashes (positional vs
+    * overlapping layers the union form's min would be needed, so the
+    * layered form is for the chain shape only.
+    *
+    * The batch-owner table is (ng, first_doc) — the ingest advance
+    * passes its staged [[ngramFirstDocs]] batch table, which is the
+    * same groupBy-min over the same ngram hashes (positional vs
     * doc-distinct derivation cannot change a per-key min over the same
     * doc set), saving the second O(batch-ngrams) aggregation.
     */
@@ -899,19 +887,11 @@ object Dedup {
     * just ngramFirstDocs over corpus ∪ batch at compaction.
     */
   def ngramNoveltyIncremental(batch: DataFrame, state: DataFrame,
-      id: Column, text: Column, n: Int): DataFrame =
-    ngramNoveltyIncrementalLayers(batch, Seq(state), id, text, n)
-
-  /** [[ngramNoveltyIncremental]] with the state as layers (base first —
-    * see [[antiJoinLayers]]); output ≡ the single-frame form on the
-    * layers' union.
-    */
-  def ngramNoveltyIncrementalLayers(batch: DataFrame, state: Seq[DataFrame],
       id: Column, text: Column, n: Int): DataFrame = {
     val ngr = batch.select(id.as("doc_id"), explode(hashedNgrams(batch, text, n)).as("ng"))
     val sizes = ngr.groupBy(col("doc_id")).agg(count(lit(1)).as("nn"))
     val novels = antiJoinLayers(
-        ngr.groupBy(col("ng")).agg(min(col("doc_id")).as("first_doc")), "ng", state)
+        ngr.groupBy(col("ng")).agg(min(col("doc_id")).as("first_doc")), "ng", Seq(state))
       .groupBy(col("first_doc")).agg(count(lit(1)).as("novel"))
       .select(col("first_doc").as("doc_id"), col("novel"))
     sizes.join(novels, Seq("doc_id"), "left")
@@ -1509,13 +1489,14 @@ object Dedup {
     // AQE's per-stage materialization (several sequentially-scheduled
     // stage jobs per round) buys nothing the loop doesn't already do —
     // and its latency dominated wall time on shallow dedup graphs
-    // (measured ~2× the whole round at sf0.1). Off for the loop,
-    // restored after; the big upstream pair job still runs under AQE.
+    // (measured ~2× the whole round at sf0.1). The rounds therefore
+    // run in a forked AQE-off session (below); the caller's session,
+    // where the big upstream pair job runs, keeps its own AQE setting.
     // pairs feeds BOTH direction branches of the edge union — persist
     // first or the (expensive) upstream pair job runs twice. The count
-    // also materializes it BEFORE the AQE toggle below, so the big
-    // pair job still gets adaptive planning; only the micro-rounds
-    // run without it.
+    // also materializes it in the CALLER's session, BEFORE the plan
+    // moves to the loop session, so the big pair job still gets
+    // adaptive planning; only the micro-rounds run without it.
     val pr = pairs.select(col("id_a"), col("id_b")).persist(StorageLevel.MEMORY_AND_DISK)
     val nEdges = 2L * pr.count()
     if (nEdges == 0) {

@@ -20,8 +20,7 @@ import org.apache.spark.sql.functions._
   *    is 1.7× SLOWER (its three consumers re-explode the array the
   *    exploded layout reads materialized) — the broadcast-filtered
   *    scan is value-dominated, not row-count-dominated, so the
-  *    exploded layout stays; the array path remains behind the
-  *    probe-only `arrayNgr` toggles and the reader accepts both;
+  *    exploded layout stays;
   *  - `sizes` (doc_id, nn): shingle-set sizes — the Jaccard denominator;
   *  - `comp`  (doc_id, cluster_id): the min-label assignment over docs
   *    incident to at least one verified near-dup edge (q53's contract).
@@ -65,15 +64,9 @@ object DupState {
 
   /** The loaded state: append tables as plain unions of their layers;
     * `compLayers` tagged with their version for latest-wins merging.
-    * `ngr` is in whichever layout the chain was written (exploded
-    * `(doc_id, ng)` in production; per-doc ARRAY `(doc_id, ngs)` on
-    * probe-bootstrapped chains — [[ngrRows]] is the layout-independent
-    * view).
     */
   final case class LoadedDupState(bands: DataFrame, ngr: DataFrame,
       sizes: DataFrame, compLayers: DataFrame) {
-    /** The exploded (doc_id, ng) shingle view, whatever the layout. */
-    def ngrRows: DataFrame = explodedNgr(ngr)
     /** The current assignment: latest layer wins per doc_id (exactly
       * the full advance output, since an unchanged row's old layer
       * still holds). Bounded by the dup-doc domain, not the corpus.
@@ -85,49 +78,19 @@ object DupState {
 
   private val appendTables = Seq("bands", "ngr", "sizes")
 
-  /** The exploded (doc_id, ng) view of an ngr table in either layout —
-    * per-doc ARRAY (what init/advance write since r15) or the legacy
-    * exploded rows (old chains stay readable). Apply AFTER any doc_id
-    * filter so the filter runs on 1 row/doc in the array layout.
-    */
-  private def explodedNgr(ngr: DataFrame): DataFrame =
-    if (ngr.columns.contains("ngs"))
-      ngr.select(col("doc_id"), explode(col("ngs")).as("ng"))
-    else ngr
-
-  /** Batch-side derivations, shared by init and advance: the hashed-
-    * shingle table in its PERSISTED layout, the exploded (doc_id, ng)
-    * view for banding/verification, set sizes, band keys.
-    *
-    * `arrayNgr = false` is the production default — the MEASURED
-    * winner (tools/NgrLayoutProbe, see the object scaladoc): the
-    * per-doc ARRAY alternative (`true`) cuts the persisted row count
-    * ~200× but re-explodes per consumer, losing 1.7× at bootstrap for
-    * a wash at advance. The toggle exists ONLY for the probe to keep
-    * measuring both regimes against the same code (the initStatesImpl
-    * convention). Docs shorter than n words carry no row in either
-    * layout.
+  /** Batch-side derivations, shared by init and advance: the exploded
+    * (doc_id, ng) shingle table (the persisted layout — the MEASURED
+    * winner over a per-doc array, see the object scaladoc), set sizes,
+    * band keys. Docs shorter than n words carry no row.
     */
   private def derive(docs: DataFrame, id: Column, text: Column, n: Int,
-      bands: Int, rowsPerBand: Int,
-      arrayNgr: Boolean): (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    if (arrayNgr) {
-      val ngrArr = Dedup.stageEager(docs
-        .select(id.as("doc_id"), Dedup.hashedNgrams(docs, text, n).as("ngs"))
-        .filter(size(col("ngs")) > 0))
-      val ngr = explodedNgr(ngrArr)
-      val sizes = ngrArr.select(col("doc_id"), size(col("ngs")).cast("long").as("nn"))
-      val banded = Dedup.sigBands(ngr, Nil, bands, rowsPerBand)
-        .select(col("doc_id"), col("band"), col("bh"))
-      (ngrArr, ngr, sizes, banded)
-    } else {
-      val ngr = Dedup.stageEager(docs.select(id.as("doc_id"),
-        explode(Dedup.hashedNgrams(docs, text, n)).as("ng")))
-      val sizes = Dedup.stageEager(ngr.groupBy(col("doc_id")).agg(count(lit(1)).as("nn")))
-      val banded = Dedup.sigBands(ngr, Nil, bands, rowsPerBand)
-        .select(col("doc_id"), col("band"), col("bh"))
-      (ngr, ngr, sizes, banded)
-    }
+      bands: Int, rowsPerBand: Int): (DataFrame, DataFrame, DataFrame) = {
+    val ngr = Dedup.stageEager(docs.select(id.as("doc_id"),
+      explode(Dedup.hashedNgrams(docs, text, n)).as("ng")))
+    val sizes = Dedup.stageEager(ngr.groupBy(col("doc_id")).agg(count(lit(1)).as("nn")))
+    val banded = Dedup.sigBands(ngr, Nil, bands, rowsPerBand)
+      .select(col("doc_id"), col("band"), col("bh"))
+    (ngr, sizes, banded)
   }
 
   /** Exact-Jaccard verification of candidate (id_a, id_b) pairs from
@@ -198,19 +161,13 @@ object DupState {
   def init(docs: DataFrame, id: Column, text: Column, n: Int = 3,
       bands: Int = 4, rowsPerBand: Int = 4, minJaccard: Double = 0.5,
       salts: Int = 0): DupDeltas =
-    initImpl(docs, id, text, n, bands, rowsPerBand, minJaccard, salts, arrayNgr = false)
-
-  /** `arrayNgr` exists ONLY for tools/NgrLayoutProbe. */
-  private[graft] def initImpl(docs: DataFrame, id: Column, text: Column, n: Int,
-      bands: Int, rowsPerBand: Int, minJaccard: Double, salts: Int,
-      arrayNgr: Boolean): DupDeltas =
     Dedup.withStagingScope(docs.sparkSession) {
-      val (ngrOut, ngr, sizes, banded0) = derive(docs, id, text, n, bands, rowsPerBand, arrayNgr)
+      val (ngr, sizes, banded0) = derive(docs, id, text, n, bands, rowsPerBand)
       val banded = Dedup.stageEager(banded0)
       val cand = selfCandidates(banded, resolveSalts(salts, docs))
       val pairs = verify(cand, ngr, ngr, sizes, sizes, minJaccard)
       val comp = Dedup.connectedComponentsAuto(pairs)
-      DupDeltas(banded, ngrOut, sizes, comp)
+      DupDeltas(banded, ngr, sizes, comp)
     }
 
   /** Advance the persisted state by one batch of NEW docs (ids not in
@@ -226,23 +183,8 @@ object DupState {
   def advance(st: LoadedDupState, docs: DataFrame, id: Column, text: Column,
       n: Int = 3, bands: Int = 4, rowsPerBand: Int = 4,
       minJaccard: Double = 0.5, salts: Int = 0): DupDeltas =
-    // the batch delta's ngr layout FOLLOWS the loaded chain's (a chain
-    // must stay layout-homogeneous: load unions base + deltas in one
-    // multi-dir parquet read) — exploded in production, array only on
-    // chains a probe bootstrapped with the arrayNgr toggle
-    advanceImpl(st, docs, id, text, n, bands, rowsPerBand, minJaccard, salts,
-      arrayNgr = st.ngr.columns.contains("ngs"))
-
-  /** Explicit `arrayNgr` exists ONLY for tools/NgrLayoutProbe (it
-    * controls the BATCH delta's persisted layout; the state-side scan
-    * follows the loaded chain's own layout either way).
-    */
-  private[graft] def advanceImpl(st: LoadedDupState, docs: DataFrame, id: Column,
-      text: Column, n: Int, bands: Int, rowsPerBand: Int, minJaccard: Double,
-      salts: Int, arrayNgr: Boolean): DupDeltas =
     Dedup.withStagingScope(docs.sparkSession) {
-      val (bNgrOut, bNgr, bSizes, bBands0) = derive(docs, id, text, n, bands, rowsPerBand,
-        arrayNgr)
+      val (bNgr, bSizes, bBands0) = derive(docs, id, text, n, bands, rowsPerBand)
       val bBands = Dedup.stageEager(bBands0)
       // cross candidates: broadcast the batch's band keys into ONE scan
       // of the persisted bands table — the state side never exchanges
@@ -251,12 +193,9 @@ object DupState {
           Seq("band", "bh"))
         .select(col("id_a"), col("doc_id").as("id_b")).distinct()
       // old-side verify inputs: ONE scan of ngr/sizes, filtered by the
-      // batch-bounded candidate old-id set (broadcast semi-join). In
-      // the array layout the filter moves 1 row/doc and only the
-      // candidate slice explodes — the scan's row count stops being
-      // occurrence-sized (the subsystem's last ~200-rows/doc term)
+      // batch-bounded candidate old-id set (broadcast semi-join)
       val oldIds = candCross.select(col("id_b").as("doc_id")).distinct()
-      val oldNgr = explodedNgr(st.ngr.join(broadcast(oldIds), Seq("doc_id")))
+      val oldNgr = st.ngr.join(broadcast(oldIds), Seq("doc_id"))
       val oldSizes = st.sizes.join(broadcast(oldIds), Seq("doc_id"))
       val crossPairs = verify(candCross, bNgr, oldNgr, bSizes, oldSizes, minJaccard)
       // intra candidates: the batch against itself (id_a < id_b),
@@ -265,7 +204,7 @@ object DupState {
       val intraPairs = verify(candIntra, bNgr, bNgr, bSizes, bSizes, minJaccard)
       val edges = crossPairs.unionByName(intraPairs)
       val compDelta = Dedup.clusterStateAdvanceDelta(st.comp, edges)
-      DupDeltas(bBands, bNgrOut, bSizes, compDelta)
+      DupDeltas(bBands, bNgr, bSizes, compDelta)
     }
 
   /** Merge a loaded state with one advance's deltas into FULL tables —
@@ -275,11 +214,7 @@ object DupState {
     */
   def merged(st: LoadedDupState, d: DupDeltas): DupDeltas =
     DupDeltas(st.bands.unionByName(d.bands),
-      // a rebase of a LEGACY (exploded-layout) chain merges through the
-      // exploded views — the rewritten base then migrates the chain to
-      // whatever layout the delta carries only when both sides agree
-      if (st.ngr.columns.sameElements(d.ngr.columns)) st.ngr.unionByName(d.ngr)
-      else explodedNgr(st.ngr).unionByName(explodedNgr(d.ngr)),
+      st.ngr.unionByName(d.ngr),
       st.sizes.unionByName(d.sizes),
       st.compLayers.unionByName(d.comp.withColumn("layer", lit(Long.MaxValue)))
         .groupBy(col("doc_id"))

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Geospatial helpers — the reference maps stations to NOAA grid
@@ -18,17 +17,6 @@ object Geo {
     */
   def dist2(lat1: Column, lon1: Column, lat2: Column, lon2: Column): Column =
     (lat1 - lat2) * (lat1 - lat2) + (lon1 - lon2) * (lon1 - lon2)
-
-  /** Haversine distance in km (for reporting, not ranking — trig ulp
-    * differences across libm implementations make it unsuitable for
-    * cross-engine exact comparison).
-    */
-  def haversineKm(lat1: Column, lon1: Column, lat2: Column, lon2: Column): Column = {
-    val dLat = radians(lat2 - lat1)
-    val dLon = radians(lon2 - lon1)
-    val a = pow(sin(dLat / 2), 2) + cos(radians(lat1)) * cos(radians(lat2)) * pow(sin(dLon / 2), 2)
-    lit(2 * 6371.0) * asin(sqrt(a))
-  }
 
   /** Nearest-hub join: for every left row, the right row (small dim,
     * broadcast) minimizing dist2, ties by right id. One pass over the

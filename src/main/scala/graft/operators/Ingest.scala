@@ -100,20 +100,10 @@ object Ingest {
     * (IngestStateSpec/IngestStreamSpec).
     */
   def initStates(corpus: DataFrame, id: Column, text: Column,
-      chunkWords: Int = 12, k: Int = 64, depth: Int = 4, width: Int = 256): States =
-    initStatesImpl(corpus, id, text, chunkWords, k, depth, width,
-      stageCorpus = true, stageTok = false)
-
-  /** The stage toggles exist ONLY for tools/InitStageProbe to measure
-    * every regime against the same code — production uses the
-    * measured winner pinned in [[initStates]].
-    */
-  private[graft] def initStatesImpl(corpus: DataFrame, id: Column, text: Column,
-      chunkWords: Int, k: Int, depth: Int, width: Int,
-      stageCorpus: Boolean, stageTok: Boolean): States = Dedup.withStagingScope(corpus.sparkSession) {
-    val c = if (stageCorpus) Dedup.stageEager(corpus.select(id.as("doc_id"), text.as("text")))
-      else corpus.select(id.as("doc_id"), text.as("text"))
-    val tokC = if (stageTok) Dedup.stageEager(tok(c)) else tok(c)
+      chunkWords: Int = 12, k: Int = 64, depth: Int = 4,
+      width: Int = 256): States = Dedup.withStagingScope(corpus.sparkSession) {
+    val c = Dedup.stageEager(corpus.select(id.as("doc_id"), text.as("text")))
+    val tokC = tok(c)
     States(
       keepers = Dedup.chunkKeepers(c, col("doc_id"), col("text"), chunkWords),
       sigs = Dedup.simHashDf(c, col("doc_id"), col("text")),
@@ -143,8 +133,21 @@ object Ingest {
     */
   def advanceOnce(batch: DataFrame, st: States, id: Column, text: Column,
       chunkWords: Int = 12, k: Int = 64, depth: Int = 4,
-      width: Int = 256): (DataFrame, States) =
-    advanceOnceImpl(batch, st, id, text, chunkWords, k, depth, width, stage = true)
+      width: Int = 256): (DataFrame, States) = {
+    val (report, d) = advanceDeltas(batch, st, id, text, chunkWords, k, depth, width,
+      fullMode = true)
+    val next = States(
+      // keepers delta is already "new hashes only": union ≡ chunkKeepersMerged
+      keepers = st.keepers.unionByName(d.keepers),
+      sigs = st.sigs.unionByName(d.sigs),
+      // min-groupBy merge: exact against a from-scratch build under ANY
+      // id order (min associativity) — the batch API's contract
+      ng3 = st.ng3.unionByName(d.ng3ByMin).groupBy(col("ng")).agg(min(col("first_doc")).as("first_doc")),
+      ng8 = st.ng8.unionByName(d.ng8ByMin).groupBy(col("ng")).agg(min(col("first_doc")).as("first_doc")),
+      kmv = d.kmv,
+      cms = d.cms)
+    (report, next)
+  }
 
   /** [[advanceOnce]] that ALSO returns the batch-sized
     * [[StateDeltas]], for delta persistence ([[saveStatesDelta]]):
@@ -163,7 +166,7 @@ object Ingest {
       chunkWords: Int = 12, k: Int = 64, depth: Int = 4,
       width: Int = 256): (DataFrame, States, StateDeltas) = {
     val (report, d) = advanceDeltas(batch, st, id, text, chunkWords, k, depth, width,
-      stage = true, fullMode = false)
+      fullMode = false)
     val next = States(
       keepers = st.keepers.unionByName(d.keepers),
       sigs = st.sigs.unionByName(d.sigs),
@@ -172,28 +175,6 @@ object Ingest {
       kmv = d.kmv,
       cms = d.cms)
     (report, next, d.toDeltas)
-  }
-
-  /** `stage = false` exists ONLY for tools/IngestStageProbe to measure
-    * the unstaged regime against the same code — production always
-    * stages.
-    */
-  private[graft] def advanceOnceImpl(batch: DataFrame, st: States, id: Column, text: Column,
-      chunkWords: Int, k: Int, depth: Int,
-      width: Int, stage: Boolean): (DataFrame, States) = {
-    val (report, d) = advanceDeltas(batch, st, id, text, chunkWords, k, depth, width, stage,
-      fullMode = true)
-    val next = States(
-      // keepers delta is already "new hashes only": union ≡ chunkKeepersMerged
-      keepers = st.keepers.unionByName(d.keepers),
-      sigs = st.sigs.unionByName(d.sigs),
-      // min-groupBy merge: exact against a from-scratch build under ANY
-      // id order (min associativity) — the batch API's contract
-      ng3 = st.ng3.unionByName(d.ng3ByMin).groupBy(col("ng")).agg(min(col("first_doc")).as("first_doc")),
-      ng8 = st.ng8.unionByName(d.ng8ByMin).groupBy(col("ng")).agg(min(col("first_doc")).as("first_doc")),
-      kmv = d.kmv,
-      cms = d.cms)
-    (report, next)
   }
 
   /** Internal: (report, raw deltas). `ng3ByMin`/`ng8ByMin` on the
@@ -210,37 +191,36 @@ object Ingest {
 
   private def advanceDeltas(batch: DataFrame, st: States, id: Column, text: Column,
       chunkWords: Int, k: Int, depth: Int,
-      width: Int, stage: Boolean,
+      width: Int,
       fullMode: Boolean): (DataFrame, RawDeltas) = Dedup.withStagingScope(batch.sparkSession) {
-    def staged(df: DataFrame): DataFrame = if (stage) Dedup.stageEager(df) else df
     val b = batch.select(id.as("doc_id"), text.as("text"))
     // ONE chunk-table pass feeds gate 1 AND the keeper delta: the
     // batch-first rows surviving the keeper-state anti-join carry both
     // the reconstruct columns (the gate's survivors) and the (h, keep)
     // key — r14: previously the keeper delta re-ran the whole chunk
     // derivation + state anti-join a second time
-    val newKeeperRows = staged(Dedup.newKeeperChunkRows(
+    val newKeeperRows = Dedup.stageEager(Dedup.newKeeperChunkRows(
       b, st.keeperLayers, col("doc_id"), col("text"), chunkWords))
-    val s1 = staged(b.join(
+    val s1 = Dedup.stageEager(b.join(
       Dedup.reconstructDocs(newKeeperRows).select(col("doc_id")), Seq("doc_id")))
     // composite-band signature join (r13): the 4×16-bit single-chunk
     // scheme's candidate volume owned 143 of the advance's 157 s at
     // 500k docs — same exact pair set, 4× less verify volume
-    val shDup = staged(
+    val shDup = Dedup.stageEager(
       Dedup.simHashPairsIncrementalBanded(st.sigs, s1, col("doc_id"), col("text"),
           maxDist = 3)
         .select(col("id_new").as("doc_id")).distinct())
-    val s2 = staged(s1.join(shDup, Seq("doc_id"), "left_anti"))
+    val s2 = Dedup.stageEager(s1.join(shDup, Seq("doc_id"), "left_anti"))
     val kmv1 = Kmv.advance(st.kmv, tok(s2), Seq.empty, col("ng"), k)
     // the ng8 batch table ≡ the self-rep batch-owner table (same
     // per-key min over the same ngram hashes) — staged once, consumed
     // by the owner join AND the delta / min-merge path
-    val ng8b = staged(Dedup.ngramFirstDocs(s2, col("doc_id"), col("text"), 8))
+    val ng8b = Dedup.stageEager(Dedup.ngramFirstDocs(s2, col("doc_id"), col("text"), 8))
     // ng3b is consumed twice in full mode (novelty delta + min-merge)
     // but once in delta mode — staged only where shared (the r13
     // InitStageProbe lesson: staging single-consumer tables is a loss)
     val ng3b0 = Dedup.ngramFirstDocs(s2, col("doc_id"), col("text"), 3)
-    val ng3b = if (fullMode) staged(ng3b0) else ng3b0
+    val ng3b = if (fullMode) Dedup.stageEager(ng3b0) else ng3b0
     // the ng3 DELTA doubles as the novelty numerator: its rows are
     // exactly the batch-first ngrams absent from state, so novel_ppm =
     // |delta| · 1e6 DIV |batch (doc, ngram) pairs| — one ng3 state
@@ -248,7 +228,7 @@ object Ingest {
     // Staged in delta mode only (there the report AND saveStatesDelta
     // consume it; in full mode the report alone does)
     val ng3d0 = Dedup.antiJoinLayers(ng3b, "ng", st.ng3Layers)
-    val ng3d = if (fullMode) ng3d0 else staged(ng3d0)
+    val ng3d = if (fullMode) ng3d0 else Dedup.stageEager(ng3d0)
     val nn3 = s2.select(explode(Dedup.hashedNgrams(s2, col("text"), 3)).as("ng"))
     val report = b.agg(count(lit(1)).as("n_batch"))
       .crossJoin(s1.agg(count(lit(1)).as("n_chunk_surv")))
@@ -381,8 +361,9 @@ object Ingest {
     * every log-structured store serializes its manifest). The intended
     * driver is a single streaming query/scheduler whose checkpoint
     * serializes versions ([[graft.streaming.EventStream.ingestAdvanceStream]]);
-    * concurrent BACKFILLS go to separate dirs and merge via the
-    * IngestBackfillProbe shape.
+    * concurrent BACKFILLS go to separate dirs and merge by folding one
+    * dir's batches into the other's chain as sequential
+    * [[advanceOnce]] + [[saveStates]] steps.
     */
   def saveStates(st: States, dir: String, version: Long,
       buckets: Option[Int] = None): Unit = {

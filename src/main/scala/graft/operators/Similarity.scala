@@ -137,44 +137,6 @@ object Similarity {
     * join. Skewed buckets (mass near one hyperplane cell) → salt the
     * sig key, same recipe as the LSH band join (Skew.saltedJoin).
     */
-  /** Ingest-time signature stamp for the embedding-dedup state table:
-    * (vec_id, embedding, sig) — what [[cosineNearDupIncremental]]
-    * reads back as its corpus side. At 100 TB this is a column the
-    * lake carries next to the embedding (computed once per vector,
-    * ever) and the bucket key the lake is laid out by.
-    */
-  def stampRhSignatures(df: DataFrame, id: Column, emb: Column, nBits: Int = 8): DataFrame = {
-    val v = df.select(id.as("vec_id"), emb.as("embedding"))
-    v.withColumn("sig", rhSignatureExpr(df.sparkSession, col("embedding"), nBits))
-  }
-
-  /** Incremental embedding-cosine dedup — the daily-ingest shape of
-    * [[cosineNearDupPairs]] (the q67/q80/q81 batch×state pattern,
-    * completing the incremental family for the EMBEDDING modality):
-    * near-dup pairs between a NEW batch and the EXISTING corpus only,
-    * never corpus × corpus. The corpus arrives as its persisted
-    * signature table ([[stampRhSignatures]]) — a day's dedup hashes
-    * only the batch, joins cross-side on the 8-byte bucket key, and
-    * touches corpus embeddings only for bucket-colliding rows (at
-    * lake scale: a signature-bucketed layout makes that a pruned
-    * read, the writeIvfIndex pattern). The two sides are independent
-    * id namespaces. Returns (id_new, id_old, cos ≥ minCos).
-    */
-  def cosineNearDupIncremental(corpusState: DataFrame, newVecs: DataFrame,
-      id: Column, emb: Column, minCos: Double, nBits: Int = 8): DataFrame = {
-    val sp = newVecs.sparkSession
-    val b = stampRhSignatures(newVecs, id, emb, nBits)
-      .select(col("vec_id").as("id_new"), col("embedding").as("eb"), col("sig"))
-      .withColumn("nb", normSq(col("eb")))
-    val a = corpusState
-      .select(col("vec_id").as("id_old"), col("embedding").as("ea"), col("sig"))
-      .withColumn("na", normSq(col("ea")))
-    b.join(a, Seq("sig"))
-      .withColumn("cos", cosineExpr(sp, col("eb"), col("ea"), col("nb"), col("na")))
-      .filter(col("cos") >= minCos)
-      .select(col("id_new"), col("id_old"), col("cos"))
-  }
-
   def cosineNearDupPairs(df: DataFrame, id: Column, emb: Column,
       minCos: Double, nBits: Int = 8): DataFrame = {
     val v = df.select(id.as("vid"), emb.as("ve"))
@@ -500,10 +462,10 @@ object Similarity {
     * stored centroids, keep nProbe cells per query, and join the
     * broadcast probes against the cell-partitioned index on cent_id —
     * Catalyst's dynamic partition pruning turns the index scan into a
-    * read of only the probed cell directories (verify with
-    * `graft.tools.IvfIndexProbe`: the scan shows `dynamicpruning` in
-    * PartitionFilters). Results are identical to cosineTopKIvf with
-    * the same quantizer.
+    * read of only the probed cell directories (OperatorsSpec's
+    * "cell-partitioned IVF index probe prunes partitions" asserts the
+    * scan shows `dynamicpruning` in PartitionFilters). Results are
+    * identical to cosineTopKIvf with the same quantizer.
     */
   def probeIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, k: Int, nProbe: Int = 4): DataFrame = {

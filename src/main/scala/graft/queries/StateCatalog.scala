@@ -22,14 +22,14 @@ import PipelineCatalog.{corpusSql, minhashPairsSql, minLabelClosureSql, ccReachS
   * persisted oracles can never drift apart.
   */
 object StateCatalog {
-  /** Per-JVM scratch root for q127's IVF index round trip (VERDICT
-    * r12 nit: a fixed /tmp path silently accreted index copies across
-    * rounds). Fresh per process, recursively deleted at JVM exit; the
-    * same run's repeated q127 invocations still overwrite one path,
-    * keeping the round trip deterministic within a session.
+  /** A per-JVM scratch root (VERDICT r12 nit: a fixed /tmp path
+    * silently accreted index copies across rounds). Fresh per process,
+    * recursively deleted at JVM exit; the same run's repeated
+    * invocations of an entry still overwrite one path, keeping its
+    * round trip deterministic within a session.
     */
-  private[queries] lazy val ivfIngestScratch: String = {
-    val p = java.nio.file.Files.createTempDirectory("graft_ivf_ingest")
+  private def jvmScratch(prefix: String): String = {
+    val p = java.nio.file.Files.createTempDirectory(prefix)
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles).getOrElse(Array.empty).foreach(rm)
@@ -40,20 +40,16 @@ object StateCatalog {
     p.toString
   }
 
-  /** Per-JVM scratch root for q128's delta-state round trip (same
-    * lifecycle contract as [[ivfIngestScratch]]).
+  /** Scratch root for q127's IVF index round trip. Kept apart from
+    * [[ingestDeltaScratch]]: both key their subdirectory on the SF dir
+    * name, so one shared root would make q127 and q128 collide.
     */
-  private[queries] lazy val ingestDeltaScratch: String = {
-    val p = java.nio.file.Files.createTempDirectory("graft_delta_rt")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).getOrElse(Array.empty).foreach(rm)
-        f.delete(); ()
-      }
-      rm(p.toFile)
-    }))
-    p.toString
-  }
+  private[queries] lazy val ivfIngestScratch: String = jvmScratch("graft_ivf_ingest")
+
+  /** Scratch root for q128's delta-state round trip and the other
+    * state entries' chains.
+    */
+  private[queries] lazy val ingestDeltaScratch: String = jvmScratch("graft_delta_rt")
 
   // q129_cluster_incr — incremental duplicate-cluster maintenance:
   // the corpus's existing min-label assignment (bootstrapped in-query,

@@ -56,10 +56,9 @@ class DupStateSpec extends SparkSpecBase {
     // batch-only cluster across two batches: {102, 201} copy unseen doc 50
     assert(labels(st2.comp)(201L) == 102L)
     // append tables carry exactly one row set per doc, all layers united
-    // (ngrRows = the layout-independent exploded view)
     val expectNgr = allDocs.select(col("doc_id"),
       explode(Dedup.hashedNgrams(allDocs, col("text"), 3)).as("ng"))
-    assert(st2.ngrRows.except(expectNgr).isEmpty && expectNgr.except(st2.ngrRows).isEmpty)
+    assert(st2.ngr.except(expectNgr).isEmpty && expectNgr.except(st2.ngr).isEmpty)
     assert(st2.sizes.count() == 14L && st2.bands.count() == 14L * 4)
   }
 

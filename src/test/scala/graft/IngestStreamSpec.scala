@@ -86,6 +86,24 @@ class IngestStreamSpec extends SparkSpecBase {
     same(streamed.cms, st2.cms, "cms")
     assert(streamed.kmv.select(col("ks")).collect().map(_.getSeq[Long](0)).head ==
       st2.kmv.select(col("ks")).collect().map(_.getSeq[Long](0)).head, "kmv state diverged")
+
+    // backfill mergeability: the chained family ≡ a from-scratch
+    // bootstrap — keepers on the chunk-hash SET over every seen doc
+    // (the keep owner follows arrival), the gated states over the
+    // corpus plus the ADMITTED docs (read back from the final sigs)
+    val all = corpus.unionByName((batch1 ++ batch2).toDF().select("doc_id", "text"))
+    val admitted = all.join(st2.sigs.select(col("doc_id")), Seq("doc_id"))
+    val ref = Ingest.initStates(admitted, col("doc_id"), col("text"), kw, k, depth, width)
+    same(st2.keepers.select(col("h")),
+      Ingest.initStates(all, col("doc_id"), col("text"), kw, k, depth, width)
+        .keepers.select(col("h")), "keepers vs from-scratch")
+    same(st2.sigs, ref.sigs, "sigs vs from-scratch")
+    same(st2.ng3, ref.ng3, "ng3 vs from-scratch")
+    same(st2.ng8, ref.ng8, "ng8 vs from-scratch")
+    same(st2.cms, ref.cms, "cms vs from-scratch")
+    assert(st2.kmv.select(col("ks")).collect().map(_.getSeq[Long](0)).head ==
+      ref.kmv.select(col("ks")).collect().map(_.getSeq[Long](0)).head,
+      "kmv diverged from the from-scratch build")
   }
 
   test("keepLast retention in the sink: versions bounded, crash-replay still resolves") {

@@ -146,7 +146,7 @@ class DedupSpec extends SparkSpecBase {
     // bound — its pair SET must equal the single-chunk scheme's, at
     // every legal band size (the candidate sets differ, the verified
     // output cannot)
-    Seq(2, 3).foreach { r =>
+    Seq(2, 3, 4).foreach { r =>
       val banded = Dedup.simHashPairsIncrementalBanded(sigs, batch, col("id"), col("text"),
           maxDist = 3, bandSize = r)
         .select("id_new", "id_old", "dist").as[(Long, Long, Long)].collect().toSet
@@ -475,9 +475,25 @@ class CatalogSpec extends SparkSpecBase {
   }
 
   test("all queries run at sf0.001 and return rows") {
+    // entries that write (lake, IVF index, state chains) run twice and
+    // must return the same rows: a write that is not idempotent across
+    // in-session reruns passes every single-run gate
+    val writers = Set("lake_daily_prune", "q36_bucketed_latest", "q109_zorder_prune",
+      "q116_copy_verify", "q46_ivf_index", "q125_ivf_incr", "q127_ingest_advance",
+      "q128_delta_roundtrip", "q130_dup_state_roundtrip", "q134_daily_cycle_persisted",
+      "q135_daily_cycle_rebase")
+    assert(writers.subsetOf(SparkEntry.queries.keySet))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).toSeq.sortBy(_.toString)
     SparkEntry.queries.foreach { case (name, fn) =>
-      val n = fn(spark, sfDir).count()
-      assert(n > 0, s"query $name returned 0 rows")
+      if (writers(name)) {
+        val first = rows(fn(spark, sfDir))
+        assert(first.nonEmpty, s"query $name returned 0 rows")
+        assert(rows(fn(spark, sfDir)) == first, s"query $name diverged on rerun")
+      } else {
+        val n = fn(spark, sfDir).count()
+        assert(n > 0, s"query $name returned 0 rows")
+      }
     }
   }
 }
@@ -809,12 +825,20 @@ class BucketedLakeSpec extends SparkSpecBase {
     sp.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force non-broadcast to observe bucketing
     try {
       val ev = graft.sources.Tables.events(sp, sfDir).drop("ts_ns")
-      graft.sources.Lake.writeBucketed(ev.select("user_id", "value"), "ev_a", "user_id", 8)
+      graft.sources.Lake.writeBucketed(ev.select("user_id", "value", "ts", "event_id"),
+        "ev_a", "user_id", 8)
       graft.sources.Lake.writeBucketed(ev.select(col("user_id"), col("event_type")), "ev_b", "user_id", 8)
       val joined = sp.table("ev_a").join(sp.table("ev_b"), "user_id")
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange hashpartitioning"), s"unexpected shuffle:\n$plan")
       assert(joined.count() > 0)
+      // the keyed latest-per-user rollup (q36's shape) is exchange-free
+      // over the same bucketing
+      val latest = Rollups.latestPerKey(sp.table("ev_a"), Seq(col("user_id")),
+        Seq(col("ts"), col("event_id")))
+      val latestPlan = latest.queryExecution.executedPlan.toString
+      assert(!latestPlan.contains("Exchange hashpartitioning"),
+        s"bucketed rollup shuffled:\n$latestPlan")
     } finally {
       sp.conf.set("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
       sp.sql("DROP TABLE IF EXISTS ev_a"); sp.sql("DROP TABLE IF EXISTS ev_b")
