@@ -114,7 +114,9 @@ object GraftSession {
     "spark.graft.profile" -> p.name,
     "spark.sql.extensions" -> "graft.GraftExtensions",
     // FAIR job scheduling (guide §2.6): the engine overlaps independent
-    // jobs inside one application — par2's cycle-entry legs and
+    // jobs inside one application — StateVersions.par2's legs (the
+    // daily-cycle sink EventStream.dailyCycleStream and the
+    // q127/q129/q131/q134/q135 catalog entries) and
     // StateVersions.writeAll's concurrent table writes. Under FIFO a
     // leg whose jobs fill every core starves the other leg until its
     // own tail; FAIR round-robins the concurrent jobs so both legs

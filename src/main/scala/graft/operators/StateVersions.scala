@@ -121,6 +121,107 @@ private[graft] object StateVersions {
     }
   }
 
+  /** Local properties leg `b` of [[par2]] takes from the caller. Pool
+    * threads are reused and inherit the properties of whichever thread
+    * created them, so the leg sets these explicitly (and restores them
+    * on exit). The job group matters most: a stream's `query.stop()`
+    * cancels its run's job group, which must reach both legs' jobs.
+    */
+  private val CarriedProperties = Seq("spark.jobGroup.id", "spark.job.description",
+    "spark.job.interruptOnCancel", "spark.job.tags")
+
+  private val par2Calls = new java.util.concurrent.atomic.AtomicLong
+
+  /** Run two independent legs CONCURRENTLY (guide §2.6: overlap
+    * independent jobs) and return both results: `a` on the calling
+    * thread, `b` on a pool thread. Used by the two-family daily cycle
+    * (q131/q134/q135 and `EventStream.dailyCycleStream`'s sink), whose
+    * ingest and dup-cluster advances read neither the other's state,
+    * and by q127/q129. Any ORDERED step (the documented ingest-before-
+    * dup save order) stays OUTSIDE the legs — see the call sites.
+    *
+    * Leg `b` runs under the caller's Spark context: the active session,
+    * the [[CarriedProperties]] and the caller's staging token (a
+    * null-token `stageEager` on the pool thread registers blocks that
+    * `releaseCompleted` treats as a completed invocation's, so the
+    * other leg's scope entries could unpersist them mid-flight). Each
+    * leg runs in its OWN FAIR pool (GraftSession pins
+    * spark.scheduler.mode=FAIR): under FIFO a leg whose jobs fill every
+    * core starves the other until its own task tail. Pool and tag
+    * properties are inherited by threads a leg creates, so a nested
+    * [[writeAll]] stays in its leg's pool and under its leg's tag.
+    *
+    * Never returns with a leg still running, and never waits forever
+    * on a doomed one. Each leg's jobs carry a job tag of their own;
+    * once either leg fails, the other leg's jobs are cancelled by tag
+    * (again every 100 ms, until it settles, so a job it starts later
+    * is cancelled too) and then awaited. An interrupt of the calling
+    * thread (`query.stop()` interrupts the stream thread) dooms the
+    * call the same way: the await keeps draining, as [[writeAll]]'s
+    * does, and the interrupt flag is restored afterwards. The first
+    * failure is rethrown with the others attached as suppressed. A
+    * cancelled mid-write version stays unpublished (marker last).
+    */
+  def par2[A, B](a: => A, b: => B): (A, B) = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    import scala.util.{Failure, Success, Try}
+    val session = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+    val sc = session.map(_.sparkContext)
+    val carried = CarriedProperties.map(k => k -> sc.map(_.getLocalProperty(k)).orNull)
+    val tok = Dedup.currentStagingToken
+    val call = par2Calls.incrementAndGet()
+    val (tagA, tagB) = (s"graft-par2-$call-a", s"graft-par2-$call-b")
+    // the failure that doomed the call: whichever leg (or an interrupt)
+    // failed first — the other leg's cancellation is only its echo
+    val first = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    def attempt[T](body: => T): Try[T] =
+      try Success(body)
+      catch { case t: Throwable => first.compareAndSet(null, t); Failure(t) }
+    // set/restore: the carried properties, the leg's pool and its tag
+    def leg[T](pool: String, tag: String)(body: => T): T = sc match {
+      case None => body
+      case Some(c) =>
+        val props = carried :+ ("spark.scheduler.pool" -> pool)
+        val prev = props.map { case (k, _) => k -> c.getLocalProperty(k) }
+        props.foreach { case (k, v) => c.setLocalProperty(k, v) }
+        c.addJobTag(tag)
+        try body
+        finally prev.foreach { case (k, v) => c.setLocalProperty(k, v) }
+    }
+    def cancel(tag: String): Unit = sc.foreach(
+      _.cancelJobsWithTag(tag, "par2: the other leg failed or the caller was interrupted"))
+    val aSettled = new java.util.concurrent.CountDownLatch(1)
+    val fb = Future {
+      val prevSession = SparkSession.getActiveSession
+      session.foreach(SparkSession.setActiveSession)
+      try attempt(leg("graft-par2-b", tagB)(Dedup.withStagingToken(tok)(b)))
+      finally prevSession.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
+    }(ExecutionContext.global)
+    // b failed while a still runs: cancel a's jobs until a settles
+    fb.foreach { rb =>
+      if (rb.isFailure) while ({ cancel(tagA); !aSettled.await(100, MILLISECONDS) }) ()
+    }(ExecutionContext.global)
+    val ra = try attempt(leg("graft-par2-a", tagA)(a)) finally aSettled.countDown()
+    var interrupted = ra.failed.toOption.exists(_.isInstanceOf[InterruptedException])
+    var rb: Option[Try[B]] = None
+    while (rb.isEmpty) {
+      if (first.get != null) cancel(tagB)
+      try rb = Await.ready(fb, 100.millis).value.map(_.flatten)
+      catch {
+        case _: java.util.concurrent.TimeoutException =>
+        case e: InterruptedException => interrupted = true; first.compareAndSet(null, e)
+      }
+    }
+    if (interrupted) Thread.currentThread().interrupt()
+    Option(first.get) match {
+      case None => (ra.get, rb.get.get)
+      case Some(e) =>
+        (ra.failed.toOption ++ rb.get.failed.toOption).filter(_ ne e).foreach(e.addSuppressed)
+        throw e
+    }
+  }
+
   /** All `v=N` dirs under `dir` with their committed flag. Markers
     * are fetched in ONE `globStatus` call; a missing dir is an empty
     * family (first-ever bootstrap), not an error.

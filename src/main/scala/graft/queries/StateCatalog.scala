@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 import graft.operators.{Dedup, Ingest, Kmv, Similarity, Stats}
+import graft.operators.StateVersions.par2
 import PipelineCatalog.{corpusSql, minhashPairsSql, minLabelClosureSql, ccReachSql, polySql, lloydIterSql, ivfCosFull}
 
 /** The persisted/incremental STATE family of SURVEY.md §2C, split out
@@ -73,8 +74,8 @@ object StateCatalog {
             concat(col("text"), lit(" graft extra marker")).as("text")))
       // the corpus-side CC (eager label iterations) and the batch-side
       // pair DERIVATION are independent until the quotient advance
-      // consumes both — overlapped (par2/§2.6). The batch leg is
-      // staged EAGERLY inside the overlap: minHashLshPairs/
+      // consumes both — overlapped (StateVersions.par2, §2.6). The
+      // batch leg is staged EAGERLY inside the overlap: minHashLshPairs/
       // minHashLshPairsIncremental build lazy plans, so without the
       // stage the leg overlapped nothing and par2 measured exactly
       // 0.000 s here (r17 verdict/advice). The staged edge table is
@@ -203,8 +204,8 @@ object StateCatalog {
       // the gate staging chain (text) and the IVF index write+append
       // (embeddings) are INDEPENDENT until the final report join, and
       // both are eager — Q127AnatomyProbe: gates 2.3 s, IVF 3.7 s of
-      // the 7.1 s entry. Overlapped (par2/§2.6); everything after is
-      // lazy until the report action.
+      // the 7.1 s entry. Overlapped (StateVersions.par2, §2.6);
+      // everything after is lazy until the report action.
       val e = Tables.embeddings(s, dir)
       val path = s"$ivfIngestScratch/${new java.io.File(dir).getName}"
       val ((s1docs, shDup, s2docs), _) = par2({
@@ -649,59 +650,6 @@ object StateCatalog {
        |    SELECT ng, first_doc AS fd FROM state8 UNION ALL SELECT ng, doc_id AS fd FROM rtng) GROUP BY ng),
        |occ_s2 AS (SELECT ng FROM occ_c UNION ALL SELECT ng FROM occ_b)""".stripMargin
 
-  /** Run two independent legs of a cycle entry CONCURRENTLY (the §2.6
-    * overlap-independent-jobs lever, measured by CycleAnatomyProbe:
-    * the two families' bootstrap saves and advance computations are
-    * independent driver-side phases that previously serialized — e.g.
-    * q134 spent 3.3 s on sequential bootstraps and 7.4 s on
-    * sequential advances whose compute does not depend on each
-    * other). `b` runs on a future; `a` on the calling thread. Any
-    * ORDERED step (the documented ingest-before-dup save order) stays
-    * OUTSIDE the overlapped legs — see the call sites.
-    */
-  private def par2[A, B](a: => A, b: => B): (A, B) = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    // The future leg runs under the CALLER's staging token (r17
-    // verdict #1: a null-token stageEager on the pool thread registers
-    // blocks that releaseCompleted treats as a completed invocation's,
-    // so the other leg's scope entries could unpersist them mid-flight
-    // on the Cluster1000 staging path — the overlap then cancels
-    // itself). And BOTH legs settle before any failure propagates
-    // (r17 advice: a throwing `a` previously orphaned a live future
-    // that kept writing — and PUBLISHING — state versions behind the
-    // failed entry's back, a second live writer under replay).
-    val tok = Dedup.currentStagingToken
-    // Each leg runs in its OWN FAIR pool (GraftSession pins
-    // spark.scheduler.mode=FAIR; pools materialize on first use with
-    // default weight): under FIFO a leg whose jobs fill every core
-    // starves the other leg until its own task tails, so the overlap
-    // only ever harvested tail capacity. Pool properties are
-    // thread-local and inherited by child threads, so a leg's nested
-    // writeAll pool stays in its leg's pool; set/restore keeps reused
-    // scheduler threads clean.
-    def inPool[T](pool: String)(body: => T): T = {
-      val sc = org.apache.spark.sql.SparkSession.getActiveSession
-        .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-        .map(_.sparkContext)
-      val prev = sc.map(_.getLocalProperty("spark.scheduler.pool"))
-      sc.foreach(_.setLocalProperty("spark.scheduler.pool", pool))
-      try body
-      finally sc.foreach(_.setLocalProperty("spark.scheduler.pool", prev.orNull))
-    }
-    val fb = Future(inPool("graft-par2-b")(Dedup.withStagingToken(tok)(b)))
-    val ra = scala.util.Try(inPool("graft-par2-a")(a))
-    val rb = scala.util.Try(Await.result(fb, Duration.Inf))
-    (ra, rb) match {
-      case (scala.util.Success(x), scala.util.Success(y)) => (x, y)
-      case _ =>
-        val e = ra.failed.toOption.getOrElse(rb.failed.toOption.get)
-        rb.failed.toOption.filter(_ ne e).foreach(e.addSuppressed)
-        throw e
-    }
-  }
-
   /** The q127-planted 3-class batch (2-col Spark side of
     * [[cycleBatchSql]]): exact copies (+10000), near copies (+20000),
     * novel synthetic (+30000) — shared by q128/q131/q134 so the three
@@ -817,7 +765,9 @@ object StateCatalog {
       val batch = cycleBatch(d)
       // the ingest advance and the dup-cluster quotient advance are
       // independent until the final report join — their eager phases
-      // (staging chain / CC iterations) overlap (par2/§2.6)
+      // (staging chain / CC iterations) overlap (StateVersions.par2,
+      // §2.6 — the same two legs EventStream.dailyCycleStream's sink
+      // runs per batch)
       val (report, adv) = par2({
         // ingest family: the one-call per-batch step (gates → scoring →
         // sketch advances), exactly what ingestAdvanceStream runs
@@ -995,8 +945,9 @@ object StateCatalog {
       // lockstep bootstrap: BOTH dirs at v=0 before the first batch.
       // The two families' bootstraps are independent (different dirs,
       // both derived from the same corpus), so they run OVERLAPPED
-      // (par2/§2.6) — the barrier below still puts both at v=0 before
-      // any advance, which is all "lockstep" requires. Crash window
+      // (StateVersions.par2, §2.6) — the barrier below still puts
+      // both at v=0 before any advance, which is all "lockstep"
+      // requires. Crash window
       // (r17 advice): overlapping lets dup v=0 commit BEFORE ingest
       // v=0 — the inverse of the delta steps' documented dup-one-
       // behind state — but at v=0 that inversion is benign: the replay
@@ -1017,6 +968,7 @@ object StateCatalog {
       // The two ADVANCE computations are independent and overlap; only
       // the SAVES are ordered — dup's v=1 write starts strictly after
       // ingest's v=1 committed, exactly the documented choreography
+      // (EventStream.dailyCycleStream's sink runs these same legs)
       val (report, dupDelta) = par2({
         val (_, ist0) = Ingest.loadStates(s, ingDir, upTo = 0L)
         val (rep, _, d1) = Ingest.advanceOnceDelta(batch, ist0, col("doc_id"), col("text"))
@@ -1089,10 +1041,11 @@ object StateCatalog {
       val ingDir = s"$ingestDeltaScratch/cyc2_ing_$base"
       val dupDir = s"$ingestDeltaScratch/cyc2_dup_$base"
       val buckets = Some(graft.GraftSession.profileOf(s).lakeBuckets)
-      // both bootstraps overlapped (independent dirs — par2/§2.6);
-      // barrier before day 1, so lockstep-at-v=0 holds as before.
-      // Dup-ahead-at-bootstrap crash window: benign — see q134 (replay
-      // rewrites both v=0 idempotently; DailyCycleSpec drives it)
+      // both bootstraps overlapped (independent dirs —
+      // StateVersions.par2, §2.6); barrier before day 1, so
+      // lockstep-at-v=0 holds as before. Dup-ahead-at-bootstrap crash
+      // window: benign — see q134 (replay rewrites both v=0
+      // idempotently; DailyCycleSpec drives it)
       par2(
         Ingest.saveStates(Ingest.initStates(d, col("doc_id"), col("text")), ingDir, 0L,
           buckets = buckets),

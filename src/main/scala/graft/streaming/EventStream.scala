@@ -609,7 +609,21 @@ object EventStream {
     * dup one version behind, and the batch replay re-converges both
     * heads byte-identically (DailyCycleSpec drives the corner; each
     * family's save un-publishes, rewrites, re-publishes its own
-    * version). Both guards run on BOTH dirs per batch — version
+    * version).
+    *
+    * What overlaps and what stays ordered: the two families' load and
+    * advance run CONCURRENTLY as the two legs of one
+    * [[graft.operators.StateVersions.par2]] — leg a is ingest's load,
+    * advance and save, leg b dup's load and advance (its eager staging
+    * and CC rounds). Everything else runs after both legs settle, in
+    * order: dup's save (so dup's v=batchId+1 write starts only after
+    * ingest's has committed, and dup is never ahead of ingest), the
+    * `n_dup_assign` reload, the report write, retention. Leg b runs
+    * under the stream thread's session and job group, so
+    * `query.stop()` cancels both legs' jobs; a failed leg cancels the
+    * other's, and neither family publishes past the failure (ingest's
+    * version stays unpublished if its own save failed, dup's is never
+    * started). Both guards run on BOTH dirs per batch — version
     * arithmetic plus the `streamTag` pin, so a fresh checkpoint is
     * rejected before either family writes anything.
     *
@@ -652,26 +666,33 @@ object EventStream {
           StateVersions.requireStreamTag(sp, dupStateDir, tag, "dup-cluster")
         }
         val version = batchId + 1
-        // ingest family first (the documented save order)
-        val (_, ist) = Ingest.loadStates(sp, ingestStateDir, upTo = batchId)
-        val report = ingestRebaseEvery match {
-          case None =>
-            val (r, next) = Ingest.advanceOnce(b, ist, col("doc_id"), col("text"),
-              chunkWords, k, depth, width)
-            Ingest.saveStates(next, ingestStateDir, version, stateBuckets)
-            r
-          case Some(every) =>
-            val (r, next, d) = Ingest.advanceOnceDelta(b, ist, col("doc_id"), col("text"),
-              chunkWords, k, depth, width)
-            if (version % every == 0)
+        // the two families' load + advance run as the two legs of one
+        // par2: neither advance reads the other's state. Ingest's leg
+        // also saves; dup's save waits for both legs (below)
+        val (report, (dst, dd)) = StateVersions.par2({
+          val (_, ist) = Ingest.loadStates(sp, ingestStateDir, upTo = batchId)
+          ingestRebaseEvery match {
+            case None =>
+              val (r, next) = Ingest.advanceOnce(b, ist, col("doc_id"), col("text"),
+                chunkWords, k, depth, width)
               Ingest.saveStates(next, ingestStateDir, version, stateBuckets)
-            else Ingest.saveStatesDelta(d, ingestStateDir, version)
-            r
-        }
-        // dup-cluster family second — a crash above leaves this dir at
-        // version - 1 and the replay converges both (DailyCycleSpec)
-        val dst = DupState.load(sp, dupStateDir, upTo = batchId)._2
-        val dd = DupState.advance(dst, b, col("doc_id"), col("text"))
+              r
+            case Some(every) =>
+              val (r, next, d) = Ingest.advanceOnceDelta(b, ist, col("doc_id"), col("text"),
+                chunkWords, k, depth, width)
+              if (version % every == 0)
+                Ingest.saveStates(next, ingestStateDir, version, stateBuckets)
+              else Ingest.saveStatesDelta(d, ingestStateDir, version)
+              r
+          }
+        }, {
+          val dst = DupState.load(sp, dupStateDir, upTo = batchId)._2
+          (dst, DupState.advance(dst, b, col("doc_id"), col("text")))
+        })
+        // dup's save starts only after ingest's v=version committed
+        // (the documented save order) — a crash or a failed leg above
+        // leaves this dir at version - 1 and the replay converges both
+        // (DailyCycleSpec)
         dupRebaseEvery match {
           case Some(every) if version % every != 0 =>
             DupState.saveDelta(dd, dupStateDir, version)

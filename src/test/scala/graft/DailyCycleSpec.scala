@@ -1,10 +1,13 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.operators.{Dedup, DupState, Ingest, StateVersions}
 import graft.streaming.EventStream
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
 
 /** The two-family PERSISTED daily cycle (q134's contract, VERDICT r15
   * #1): one batch driver advances BOTH state dirs in lockstep —
@@ -130,18 +133,18 @@ class DailyCycleSpec extends SparkSpecBase {
     assert(labels(duX.comp) == labels(DupState.load(spark, dupC)._2.comp))
   }
 
-  test("sink-level crash between the family saves replays and converges on restart") {
-    // the DailyCycleSpec cycle() test drives the crash corner through
-    // the batch API; this one drives it through the SINK's own
-    // foreachBatch + checkpoint machinery: a file-source stream whose
-    // dup save FAILS mid-batch (v=1 pre-created as a plain FILE, so
-    // the parquet write cannot mkdir) after ingest's v=1 committed —
-    // the query dies, the blocker is cleared, and a restart on the
-    // SAME checkpoint replays batch 0: ingest rewrites v=1
-    // idempotently (the arithmetic guard admits the legitimate
-    // replay), dup catches up, both heads converge
-    val (ingDir, dupDir) = (tmp("sink_crash_ing"), tmp("sink_crash_dup"))
-    val reportDir = tmp("sink_crash_rep")
+  /** The sink-crash fixture: bootstrap both dirs, land `batch` as one
+    * file-source drop, pre-create `v=1` of the dir `blocked` picks as a
+    * plain FILE (so that family's parquet write cannot mkdir), run
+    * dailyCycleStream until the failure kills the query, check
+    * `afterCrash(ingDir, dupDir)`, then clear the blocker and restart
+    * on the SAME checkpoint: the replay of batch 0 must bring both
+    * heads to v=1 with the from-scratch closure as dup's labels.
+    */
+  private def sinkCrashThenRestart(tag: String, blocked: (String, String) => String)(
+      afterCrash: (String, String) => Unit): Unit = {
+    val (ingDir, dupDir) = (tmp(s"${tag}_ing"), tmp(s"${tag}_dup"))
+    val reportDir = tmp(s"${tag}_rep")
     bootstrap(ingDir, dupDir)
     val dropDir = java.nio.file.Files.createTempDirectory("graft_cycle_drop").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_cycle_ckpt").toString
@@ -150,8 +153,8 @@ class DailyCycleSpec extends SparkSpecBase {
     new java.io.File(stage).listFiles.filter(_.getName.endsWith(".parquet"))
       .foreach(f => java.nio.file.Files.move(f.toPath,
         java.nio.file.Paths.get(dropDir, f.getName)))
-    // the injected crash: dup's v=1 path exists as a plain file
-    val blocker = new java.io.File(dupDir.stripPrefix("file://"), "v=1")
+    // the injected crash: one family's v=1 path exists as a plain file
+    val blocker = new java.io.File(blocked(ingDir, dupDir).stripPrefix("file://"), "v=1")
     assert(blocker.createNewFile())
     def startQuery() = EventStream.dailyCycleStream(
         EventStream.readSnapshots(spark, dropDir, batch),
@@ -161,9 +164,7 @@ class DailyCycleSpec extends SparkSpecBase {
     intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       try q1.processAllAvailable() finally q1.stop()
     }
-    // ingest committed its half; dup is one version behind
-    assert(Ingest.loadStates(spark, ingDir)._1 == 1L)
-    assert(DupState.load(spark, dupDir)._1 == 0L)
+    afterCrash(ingDir, dupDir)
     // operator clears the blocker and restarts the SAME checkpoint
     assert(blocker.delete())
     val q2 = startQuery()
@@ -173,6 +174,122 @@ class DailyCycleSpec extends SparkSpecBase {
     assert(labels(DupState.load(spark, dupDir)._2.comp) ==
       labels(Dedup.dedupClusters(corpus.unionByName(batch), col("doc_id"), col("text"))))
     assert(spark.read.parquet(s"$reportDir/batch=0").count() == 1L)
+  }
+
+  test("sink-level crash between the family saves replays and converges on restart") {
+    // the DailyCycleSpec cycle() test drives the crash corner through
+    // the batch API; this one drives it through the SINK's own
+    // foreachBatch + checkpoint machinery: dup's save FAILS mid-batch
+    // after ingest's v=1 committed — the query dies, the blocker is
+    // cleared, and a restart on the SAME checkpoint replays batch 0:
+    // ingest rewrites v=1 idempotently (the arithmetic guard admits
+    // the legitimate replay), dup catches up, both heads converge
+    sinkCrashThenRestart("sink_crash", (_, dup) => dup) { (ingDir, dupDir) =>
+      // ingest committed its half; dup is one version behind
+      assert(Ingest.loadStates(spark, ingDir)._1 == 1L)
+      assert(DupState.load(spark, dupDir)._1 == 0L)
+    }
+  }
+
+  test("an ingest-leg failure while the dup advance runs publishes neither family's v=1") {
+    // the sink runs ingest's load/advance/save and dup's load/advance
+    // as two concurrent par2 legs; dup's save waits for both. Ingest's
+    // save failing (its v=1 blocked) must therefore leave dup unsaved
+    // too — dup never ahead of ingest — and the restart converges
+    sinkCrashThenRestart("ing_leg_crash", (ing, _) => ing) { (ingDir, dupDir) =>
+      assert(Ingest.loadStates(spark, ingDir)._1 == 0L)
+      assert(DupState.load(spark, dupDir)._1 == 0L)
+    }
+  }
+
+  test("every job of both sink legs runs under the stream query's job group") {
+    // query.stop() cancels the run's job group; the dup leg runs on a
+    // pool thread, so par2 must carry the group there explicitly
+    val sp = spark
+    import sp.implicits._
+    val (ingDir, dupDir) = (tmp("grp_ing"), tmp("grp_dup"))
+    bootstrap(ingDir, dupDir)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).foreach(p => jobs.add(
+          (p.getProperty("spark.jobGroup.id"), p.getProperty("spark.job.tags", ""))))
+    }
+    val mem = MemoryStream[(Long, String)](sp)
+    val q = EventStream.dailyCycleStream(mem.toDF.toDF("doc_id", "text"),
+      ingDir, dupDir, tmp("grp_rep"), kw, k, depth, width).start()
+    sp.sparkContext.addSparkListener(listener)
+    try {
+      mem.addData((100L, baseText(0)), (101L, nearText(1)), (102L, novelText(102L)))
+      q.processAllAvailable()
+    } finally q.stop()
+    import scala.jdk.CollectionConverters._
+    def legJobs(leg: String) =
+      jobs.asScala.toSeq.filter(_._2.split(',').exists(_.matches(s"graft-par2-\\d+-$leg")))
+    try eventually(timeout(Span(30, Seconds))) {
+      assert(legJobs("a").nonEmpty && legJobs("b").nonEmpty)
+    } finally sp.sparkContext.removeSparkListener(listener)
+    val runId = q.runId.toString
+    (legJobs("a") ++ legJobs("b")).foreach { case (group, tags) =>
+      assert(group == runId, s"leg job (tags $tags) ran in job group $group, not $runId")
+    }
+    assert(DupState.load(spark, dupDir)._1 == 1L)
+  }
+
+  /** A two-task job that runs for two minutes unless its tasks are
+    * killed — the doomed leg the par2 specs cancel.
+    */
+  private def slowJob(): Unit = spark.sparkContext.parallelize(1 to 2, 2).foreach { _ =>
+    val ctx = org.apache.spark.TaskContext.get()
+    val end = System.nanoTime() + 120L * 1000000000L
+    while (!ctx.isInterrupted() && System.nanoTime() < end) Thread.sleep(20)
+  }
+
+  private def awaitRunningJob(): Unit = eventually(timeout(Span(60, Seconds))) {
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().nonEmpty)
+  }
+
+  test("a failed par2 leg cancels the other leg's jobs and both settle before the rethrow") {
+    spark // par2 binds the session at call time: create it before the call
+    def failing(tag: String): Unit = { awaitRunningJob(); throw new IllegalStateException(tag) }
+    // either leg may fail first; the survivor is cancelled, not awaited out
+    for (failA <- Seq(true, false)) {
+      val survivorSettled = new java.util.concurrent.atomic.AtomicBoolean
+      def survivor(): Unit = try slowJob() finally survivorSettled.set(true)
+      val t0 = System.nanoTime()
+      val e = intercept[IllegalStateException] {
+        if (failA) StateVersions.par2(failing("a failed"), survivor())
+        else StateVersions.par2(survivor(), failing("b failed"))
+      }
+      val secs = (System.nanoTime() - t0) / 1e9
+      assert(e.getMessage == (if (failA) "a failed" else "b failed"))
+      assert(survivorSettled.get, "par2 returned with a leg still running")
+      assert(secs < 60, f"the doomed leg was awaited out ($secs%.1f s), not cancelled")
+      assert(e.getSuppressed.exists(_.isInstanceOf[org.apache.spark.SparkException]),
+        "the survivor's cancellation is not attached to the failure")
+    }
+  }
+
+  test("an interrupted par2 await cancels and drains leg b, then keeps the interrupt flag") {
+    // query.stop() interrupts the stream thread while it waits on the
+    // dup leg: par2 must neither orphan the leg nor swallow the flag
+    spark // par2 binds the session at call time: create it before the call
+    val bSettled = new java.util.concurrent.atomic.AtomicBoolean
+    val seen = new java.util.concurrent.atomic.AtomicReference[(Throwable, Boolean, Boolean)]
+    val caller = new Thread(() => {
+      val err = try { StateVersions.par2((), try slowJob() finally bSettled.set(true)); null }
+        catch { case t: Throwable => t }
+      seen.set((err, bSettled.get, Thread.currentThread().isInterrupted))
+    })
+    caller.start()
+    awaitRunningJob()
+    caller.interrupt()
+    caller.join(60000)
+    assert(!caller.isAlive, "par2 did not return after the interrupt")
+    val (err, settled, flag) = seen.get
+    assert(err.isInstanceOf[InterruptedException], s"got: $err")
+    assert(settled, "par2 returned with leg b still running")
+    assert(flag, "par2 swallowed the interrupt")
   }
 
   test("recommended rebase cadences are pinned to the measured values") {

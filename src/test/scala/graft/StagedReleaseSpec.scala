@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, StateVersions}
 
 /** The Cluster1000 staging contract (ADVICE r8): stageEager's
   * MEMORY_AND_DISK fallback must not leak cached blocks in a
@@ -159,22 +159,22 @@ class StagedReleaseSpec extends AnyFunSuite {
   test("a helper thread carrying the caller's token stages in-flight (par2 contract)") {
     // r17 verdict #1: par2's future leg ran with a NULL staging token,
     // so its staged blocks were releasable mid-flight by the other
-    // leg's scope entries. The leg now installs the caller's token
-    // (Dedup.withStagingToken around the future body); staging done
-    // under it must survive a concurrent entrant for as long as the
-    // caller's scope is live.
+    // leg's scope entries. The leg now installs the caller's token;
+    // staging done in StateVersions.par2's pool-thread leg must
+    // survive a concurrent entrant for as long as the caller's scope
+    // is live.
     val s = clusterSession
     assume(s.sparkContext.getCheckpointDir.isEmpty,
       "a checkpoint dir routes stageEager away from the persist branch")
     import s.implicits._
     val df = (1 to 10).map(i => (i.toLong, s"p$i")).toDF("id", "v")
     Dedup.withStagingScope(s) {
-      val tok = Dedup.currentStagingToken
-      assert(tok != null, "scope must install a token on the calling thread")
-      val t = new Thread(() =>
-        Dedup.withStagingToken(tok) { Dedup.stageEager(df); () })
-      t.start(); t.join(30000)
-      assert(!t.isAlive)
+      assert(Dedup.currentStagingToken != null,
+        "scope must install a token on the calling thread")
+      val (_, legThread) = StateVersions.par2((), {
+        Dedup.stageEager(df); Thread.currentThread()
+      })
+      assert(legThread ne Thread.currentThread(), "leg b must run on a pool thread")
       assert(Dedup.stagedBlockCount(s) == 1)
       // a concurrent entrant's entry-release must keep the block: it is
       // tagged with the CALLER's live token, not null
