@@ -277,11 +277,11 @@ object DupState {
     require(resolved.nonEmpty,
       s"version ${versions.max} under $dir is a delta with no full base ≤ $upTo")
     val (head, vb, deltaVs) = resolved.get
-    def tbl(t: String) = spark.read.parquet(
+    def tbl(t: String) = StateVersions.readParquet(spark,
       (s"$dir/v=$vb/$t" +: deltaVs.map(v => s"$dir/v=$v/$t.d")): _*)
     val compLayers = (Seq(vb -> s"$dir/v=$vb/comp")
         ++ deltaVs.map(v => v -> s"$dir/v=$v/comp.d"))
-      .map { case (v, p) => spark.read.parquet(p).withColumn("layer", lit(v)) }
+      .map { case (v, p) => StateVersions.readParquet(spark, p).withColumn("layer", lit(v)) }
       .reduce(_ unionByName _)
     (head, LoadedDupState(tbl("bands"), tbl("ngr"), tbl("sizes"), compLayers))
   }

@@ -309,7 +309,7 @@ object Ingest {
     // path may have changed bucket count or file listing, and a stale
     // catalog entry (or its cached FileIndex) would silently serve it
     spark.sql(s"DROP TABLE IF EXISTS $name")
-    val ddl = spark.read.parquet(path).schema.toDDL
+    val ddl = StateVersions.parquetSchema(spark, Seq(path)).toDDL
     spark.sql(s"CREATE TABLE $name ($ddl) USING PARQUET " +
       s"CLUSTERED BY ($key) SORTED BY ($key) INTO $buckets BUCKETS LOCATION '$path'")
     spark.table(name)
@@ -501,9 +501,9 @@ object Ingest {
       s"version ${versions.max} under $dir is a delta with no full base ≤ $upTo — the chain's " +
         "bootstrap/rebase base is missing (compacted externally?); rebuild a base with saveStates")
     val (head, vb, deltaVs) = resolved.get
-    def tbl(t: String) = spark.read.parquet(
+    def tbl(t: String) = StateVersions.readParquet(spark,
       (s"$dir/v=$vb/$t" +: deltaVs.map(v => s"$dir/v=$v/$t.d")): _*)
-    def atHead(t: String) = spark.read.parquet(s"$dir/v=$head/$t")
+    def atHead(t: String) = StateVersions.readParquet(spark, s"$dir/v=$head/$t")
     // When the base was written bucketed, ALSO expose the key-joined
     // tables as layers whose base leg is the registered bucketed scan:
     // the advance's batch×state joins then run per layer and the
@@ -512,7 +512,7 @@ object Ingest {
     val layers = bucketsOf(spark, dir, vb).map { b =>
       def layered(t: String): Seq[DataFrame] =
         readBucketedTable(spark, s"$dir/v=$vb/$t", bucketKeys(t), b) +:
-          deltaVs.map(v => spark.read.parquet(s"$dir/v=$v/$t.d"))
+          deltaVs.map(v => StateVersions.readParquet(spark, s"$dir/v=$v/$t.d"))
       StateLayers(layered("keepers"), layered("ng3"), layered("ng8"))
     }
     (head, States(tbl("keepers"), tbl("sigs"), tbl("ng3"), tbl("ng8"),

@@ -20,15 +20,6 @@ object Scoring {
       .when(choice === "under" && observed < forecast, 10)
       .otherwise(0)
 
-  /** Par scoring with tolerance (rain ±0.1, snow ±0.5, humidity ±5 —
-    * oracle.rs:662-737).
-    */
-  def oupPointsTol(choice: Column, forecast: Column, observed: Column, tol: Double): Column =
-    when(choice === "over" && observed > forecast, 10)
-      .when(choice === "par" && abs(observed - forecast) <= tol, 20)
-      .when(choice === "under" && observed < forecast, 10)
-      .otherwise(0)
-
   /** Composite total score with timestamp tie-break:
     * max(10000, base*10000) - (tsMillis % 10000) (oracle.rs:745-760).
     */

@@ -1,7 +1,10 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The version/marker/compaction protocol SHARED by the persisted
   * state families — [[Ingest]]'s six-table ingest state and
@@ -51,6 +54,48 @@ private[graft] object StateVersions {
 
   def fsOf(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The key under which Spark stores a written frame's schema in every
+    * parquet footer (Spark's `ParquetReadSupport.SPARK_METADATA_KEY`).
+    */
+  private val SparkRowMetadata = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The schema `spark.read.parquet(paths: _*)` infers, read by this
+    * call rather than a Spark job. Spark (no summary files, no
+    * `mergeSchema`) takes it from ONE footer — a data file of the
+    * first path that has one — and launches a one-task job to read it;
+    * a state load reads up to a dozen table dirs, so those jobs were a
+    * fixed per-batch cost. Every
+    * data file of one Spark write carries the same schema, so the
+    * lexicographically first file of that path stands for all of them.
+    * A footer without Spark's schema (a file not written by Spark)
+    * falls back to Spark's own inference.
+    */
+  def parquetSchema(spark: SparkSession, paths: Seq[String]): StructType = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val first = paths.iterator.map(new Path(_)).flatMap { p =>
+      val fs = p.getFileSystem(conf)
+      if (!fs.exists(p)) None
+      else fs.listStatus(p).filter { st =>
+        val n = st.getPath.getName
+        st.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }.sortBy(_.getPath.getName).headOption
+    }.nextOption()
+    val json = first.flatMap { st =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      try Option(reader.getFileMetaData.getKeyValueMetaData.get(SparkRowMetadata))
+      finally reader.close()
+    }
+    json.flatMap(j => scala.util.Try(DataType.fromJson(j)).toOption)
+      .collect { case s: StructType => s }
+      .getOrElse(spark.read.parquet(paths: _*).schema)
+  }
+
+  /** `spark.read.parquet(paths: _*)` with its schema from
+    * [[parquetSchema]]: same rows, same column types, no inference job.
+    */
+  def readParquet(spark: SparkSession, paths: String*): DataFrame =
+    spark.read.schema(parquetSchema(spark, paths)).parquet(paths: _*)
 
   /** The write prologue every full/delta save runs: un-publish
     * `dir/v=version` (delete its marker — a crash mid-rewrite then
@@ -124,11 +169,16 @@ private[graft] object StateVersions {
   /** Local properties leg `b` of [[par2]] takes from the caller. Pool
     * threads are reused and inherit the properties of whichever thread
     * created them, so the leg sets these explicitly (and restores them
-    * on exit). The job group matters most: a stream's `query.stop()`
-    * cancels its run's job group, which must reach both legs' jobs.
+    * on exit); a property the caller lacks is cleared on the leg. The
+    * job group matters most: a stream's `query.stop()` cancels its
+    * run's job group, which must reach both legs' jobs. The SQL
+    * execution and stream ids attribute the leg's jobs to the caller's
+    * query and micro-batch instead of the batch that created the thread.
     */
   private val CarriedProperties = Seq("spark.jobGroup.id", "spark.job.description",
-    "spark.job.interruptOnCancel", "spark.job.tags")
+    "spark.job.interruptOnCancel", "spark.job.tags",
+    "spark.sql.execution.id", "spark.sql.execution.root.id",
+    "streaming.sql.batchId", "sql.streaming.queryId")
 
   private val par2Calls = new java.util.concurrent.atomic.AtomicLong
 

@@ -614,24 +614,30 @@ object EventStream {
     * What overlaps and what stays ordered: the two families' load and
     * advance run CONCURRENTLY as the two legs of one
     * [[graft.operators.StateVersions.par2]] — leg a is ingest's load,
-    * advance and save, leg b dup's load and advance (its eager staging
-    * and CC rounds). Everything else runs after both legs settle, in
-    * order: dup's save (so dup's v=batchId+1 write starts only after
-    * ingest's has committed, and dup is never ahead of ingest), the
-    * `n_dup_assign` reload, the report write, retention. Leg b runs
-    * under the stream thread's session and job group, so
-    * `query.stop()` cancels both legs' jobs; a failed leg cancels the
-    * other's, and neither family publishes past the failure (ingest's
-    * version stays unpublished if its own save failed, dup's is never
-    * started). Both guards run on BOTH dirs per batch — version
-    * arithmetic plus the `streamTag` pin, so a fresh checkpoint is
-    * rejected before either family writes anything.
+    * advance and save, then its report's one row; leg b dup's load and
+    * advance (its eager staging and CC rounds), then the comp delta,
+    * materialized once. A second par2 follows once both legs settle:
+    * dup's save on one leg, the `n_dup_assign` count on the other. So
+    * dup's v=batchId+1 write starts only after ingest's has committed,
+    * and dup is never ahead of ingest. Then, in order: the report
+    * write (after dup has published), retention. Both par2 calls run
+    * leg b under the stream thread's session, job group and SQL/stream
+    * ids, so `query.stop()` cancels both legs' jobs; a failed leg
+    * cancels the other's, and neither family publishes past the
+    * failure (ingest's version stays unpublished if its own save
+    * failed, dup's is never started or stays unpublished, and no
+    * report is written). Both guards run on BOTH dirs per batch —
+    * version arithmetic plus the `streamTag` pin, so a fresh checkpoint
+    * is rejected before either family writes anything.
     *
     * The per-batch report row is the ingest advance report plus the
-    * dup head's reloaded assignment size (`n_dup_assign` — bounded by
-    * the dup-doc domain, read back from the files just written, so the
-    * report states what the persisted head actually serves), written
-    * under `reportDir/batch=<id>`. Retention (`keepLast`) compacts
+    * dup head's assignment size (`n_dup_assign` — bounded by the
+    * dup-doc domain), written under `reportDir/batch=<id>`. The size is
+    * counted from the state the sink already holds — the loaded comp
+    * layers plus this batch's comp delta, latest wins
+    * ([[graft.operators.DupState.merged]], the frame a rebase writes),
+    * which is exactly what the head just published serves; the head
+    * is never reloaded. Retention (`keepLast`) compacts
     * both dirs after the batch's saves + report all succeed.
     *
     * Rebase cadences are per-family ([[IngestRebaseRecommended]] /
@@ -650,7 +656,7 @@ object EventStream {
         "version ≤ N, which keepLast = 1 compacts away right after N commits"))
     (ingestRebaseEvery.toSeq ++ dupRebaseEvery).foreach(r => require(r >= 1,
       s"rebase cadence must be ≥ 1 (was $r); 1 = rebase every batch (full saves)"))
-    import graft.operators.{DupState, Ingest, StateVersions}
+    import graft.operators.{Dedup, DupState, Ingest, StateVersions}
     docs.writeStream.foreachBatch { (b: DataFrame, batchId: Long) =>
       if (!b.isEmpty) {
         val sp = b.sparkSession
@@ -668,10 +674,11 @@ object EventStream {
         val version = batchId + 1
         // the two families' load + advance run as the two legs of one
         // par2: neither advance reads the other's state. Ingest's leg
-        // also saves; dup's save waits for both legs (below)
-        val (report, (dst, dd)) = StateVersions.par2({
+        // also saves, then computes its report's one row; dup's leg
+        // computes the comp delta once, for the save and the count below
+        val (reportRow, (dst, dd)) = StateVersions.par2({
           val (_, ist) = Ingest.loadStates(sp, ingestStateDir, upTo = batchId)
-          ingestRebaseEvery match {
+          val report = ingestRebaseEvery match {
             case None =>
               val (r, next) = Ingest.advanceOnce(b, ist, col("doc_id"), col("text"),
                 chunkWords, k, depth, width)
@@ -685,23 +692,28 @@ object EventStream {
               else Ingest.saveStatesDelta(d, ingestStateDir, version)
               r
           }
+          // materialized here, while dup's leg still runs
+          sp.createDataFrame(java.util.Arrays.asList(report.collect(): _*), report.schema)
         }, {
           val dst = DupState.load(sp, dupStateDir, upTo = batchId)._2
-          (dst, DupState.advance(dst, b, col("doc_id"), col("text")))
+          val dd = DupState.advance(dst, b, col("doc_id"), col("text"))
+          (dst, dd.copy(comp = Dedup.stageEager(dd.comp)))
         })
+        // the head dup publishes below: the loaded comp layers plus the
+        // delta, latest wins (the frame a rebase writes)
+        val full = DupState.merged(dst, dd)
         // dup's save starts only after ingest's v=version committed
         // (the documented save order) — a crash or a failed leg above
         // leaves this dir at version - 1 and the replay converges both
-        // (DailyCycleSpec)
-        dupRebaseEvery match {
-          case Some(every) if version % every != 0 =>
-            DupState.saveDelta(dd, dupStateDir, version)
-          case _ =>
-            DupState.save(DupState.merged(dst, dd), dupStateDir, version)
-        }
-        // report what the persisted heads now serve
-        val nDup = DupState.load(sp, dupStateDir, upTo = version)._2.comp.count()
-        report.withColumn("batch_id", lit(batchId))
+        // (DailyCycleSpec). The head's size is counted alongside
+        val (_, nDup) = StateVersions.par2(
+          dupRebaseEvery match {
+            case Some(every) if version % every != 0 =>
+              DupState.saveDelta(dd, dupStateDir, version)
+            case _ => DupState.save(full, dupStateDir, version)
+          },
+          full.comp.count())
+        reportRow.withColumn("batch_id", lit(batchId))
           .withColumn("n_dup_assign", lit(nDup))
           .write.mode("overwrite").parquet(s"$reportDir/batch=$batchId")
         keepLast.foreach { n =>

@@ -4,6 +4,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.types.{LongType, StructType}
 import graft.operators.{Dedup, DupState, Ingest, StateVersions}
 import graft.streaming.EventStream
 import org.scalatest.concurrent.Eventually._
@@ -204,16 +205,18 @@ class DailyCycleSpec extends SparkSpecBase {
 
   test("every job of both sink legs runs under the stream query's job group") {
     // query.stop() cancels the run's job group; the dup leg runs on a
-    // pool thread, so par2 must carry the group there explicitly
+    // pool thread, so par2 must carry the group there explicitly — and
+    // the micro-batch id: a reused pool thread otherwise keeps the one
+    // of the batch that created it
     val sp = spark
     import sp.implicits._
     val (ingDir, dupDir) = (tmp("grp_ing"), tmp("grp_dup"))
     bootstrap(ingDir, dupDir)
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, String)]
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).foreach(p => jobs.add(
-          (p.getProperty("spark.jobGroup.id"), p.getProperty("spark.job.tags", ""))))
+        Option(e.properties).foreach(p => jobs.add((p.getProperty("spark.jobGroup.id"),
+          p.getProperty("spark.job.tags", ""), p.getProperty("streaming.sql.batchId"))))
     }
     val mem = MemoryStream[(Long, String)](sp)
     val q = EventStream.dailyCycleStream(mem.toDF.toDF("doc_id", "text"),
@@ -222,18 +225,32 @@ class DailyCycleSpec extends SparkSpecBase {
     try {
       mem.addData((100L, baseText(0)), (101L, nearText(1)), (102L, novelText(102L)))
       q.processAllAvailable()
+      mem.addData((200L, nearText(0)), (201L, novelText(201L)))
+      q.processAllAvailable()
     } finally q.stop()
     import scala.jdk.CollectionConverters._
-    def legJobs(leg: String) =
-      jobs.asScala.toSeq.filter(_._2.split(',').exists(_.matches(s"graft-par2-\\d+-$leg")))
+    val legTag = "graft-par2-(\\d+)-([ab])".r
+    // ((par2 call, leg), (job group, job tags, batch id)) per leg job
+    def legJobs = jobs.asScala.toSeq.flatMap { case (group, tags, batch) =>
+      tags.split(',').collectFirst { case legTag(call, leg) => ((call, leg), (group, tags, batch)) }
+    }
     try eventually(timeout(Span(30, Seconds))) {
-      assert(legJobs("a").nonEmpty && legJobs("b").nonEmpty)
+      val legs = legJobs.map(_._1).toSet
+      assert(legs.exists(_._2 == "a") && legs.exists(_._2 == "b"))
+      assert(legJobs.map(_._2._3).toSet == Set("0", "1"))
     } finally sp.sparkContext.removeSparkListener(listener)
     val runId = q.runId.toString
-    (legJobs("a") ++ legJobs("b")).foreach { case (group, tags) =>
+    legJobs.foreach { case (_, (group, tags, _)) =>
       assert(group == runId, s"leg job (tags $tags) ran in job group $group, not $runId")
     }
-    assert(DupState.load(spark, dupDir)._1 == 1L)
+    // every job of one par2 call carries the batch id of the batch that
+    // made the call, on both legs
+    legJobs.groupBy(_._1._1).foreach { case (call, js) =>
+      val batches = js.map(_._2._3).toSet
+      assert(batches.size == 1 && js.map(_._1._2).toSet == Set("a", "b"),
+        s"par2 call $call: legs ${js.map(_._1._2).distinct} carried batch ids $batches")
+    }
+    assert(DupState.load(spark, dupDir)._1 == 2L)
   }
 
   /** A two-task job that runs for two minutes unless its tasks are
@@ -310,7 +327,7 @@ class DailyCycleSpec extends SparkSpecBase {
     val mem = MemoryStream[(Long, String)](sp)
     val q = EventStream.dailyCycleStream(mem.toDF.toDF("doc_id", "text"),
       ingDir, dupDir, reportDir, kw, k, depth, width,
-      ingestRebaseEvery = Some(2), dupRebaseEvery = Some(2)).start()
+      ingestRebaseEvery = Some(2), dupRebaseEvery = Some(2), stateBuckets = Some(2)).start()
     val b2 = Seq((200L, nearText(0)), (201L, novelText(201L)))
     try {
       mem.addData((100L, baseText(0)), (101L, nearText(1)), (102L, novelText(102L)))
@@ -329,6 +346,95 @@ class DailyCycleSpec extends SparkSpecBase {
     val r = spark.read.parquet(s"$reportDir/batch=1")
     assert(r.columns.contains("n_dup_assign") && r.count() == 1L)
     assert(r.select(col("n_batch")).head.getLong(0) == 2L)
+    // the size counted in memory is the size of the head just published:
+    // v=1 a delta, v=2 a rebase
+    for (batchId <- Seq(0L, 1L)) {
+      val got = spark.read.parquet(s"$reportDir/batch=$batchId")
+        .select(col("n_dup_assign")).head.getLong(0)
+      assert(got == DupState.load(spark, dupDir, upTo = batchId + 1)._2.comp.count(),
+        s"batch $batchId reported n_dup_assign = $got")
+    }
+    // both loads, at the delta head and at the bucketed rebase head
+    for (upTo <- Seq(1L, 2L)) loadSchemasMatchInference(ingDir, dupDir, upTo)
+  }
+
+  /** Spark jobs whose start `body` caused on this thread: the body runs
+    * under a job group of its own, and a marker job after it bounds the
+    * (asynchronous, in-order) listener delivery.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"graft-jobs-of-${System.nanoTime()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-marker", "marker")
+      try sc.parallelize(1 to 1, 1).count() finally sc.clearJobGroup()
+      eventually(timeout(Span(30, Seconds))) { assert(seen.contains(s"$group-marker")) }
+      seen.toArray.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Both families' loads at `upTo` schedule no Spark job, and every
+    * table they return has exactly the column types a plain
+    * schema-inferring `spark.read.parquet` of the same dirs (and the
+    * `unionByName` of the comp layers) gives.
+    */
+  private def loadSchemasMatchInference(ingDir: String, dupDir: String, upTo: Long): Unit = {
+    var ing: Ingest.States = null
+    var dup: DupState.LoadedDupState = null
+    val jobs = jobsOf {
+      ing = Ingest.loadStates(spark, ingDir, upTo)._2
+      dup = DupState.load(spark, dupDir, upTo)._2
+    }
+    assert(jobs == 0, s"the loads at v=$upTo ran $jobs Spark job(s)")
+    def plain(paths: String*) = spark.read.parquet(paths: _*).schema
+    def chainOf(dir: String, classifier: String) = StateVersions.chain(
+      StateVersions.listVersions(spark, dir).filter(_ <= upTo),
+      StateVersions.layoutVersions(spark, dir, classifier).toSet).get
+    def same(got: DataFrame, exp: StructType, what: String) =
+      assert(got.schema == exp, s"$what at v=$upTo: ${got.schema.toDDL} != ${exp.toDDL}")
+    val (ih, ib, ids) = chainOf(ingDir, "keepers")
+    def ingPaths(t: String) = s"$ingDir/v=$ib/$t" +: ids.map(v => s"$ingDir/v=$v/$t.d")
+    Seq("keepers" -> ing.keepers, "sigs" -> ing.sigs, "ng3" -> ing.ng3, "ng8" -> ing.ng8)
+      .foreach { case (t, df) => same(df, plain(ingPaths(t): _*), s"ingest $t") }
+    same(ing.kmv, plain(s"$ingDir/v=$ih/kmv"), "ingest kmv")
+    same(ing.cms, plain(s"$ingDir/v=$ih/cms"), "ingest cms")
+    ing.layers.foreach { l =>
+      Seq("keepers" -> l.keepers, "ng3" -> l.ng3, "ng8" -> l.ng8).foreach { case (t, layers) =>
+        layers.zip(ingPaths(t)).foreach { case (df, p) => same(df, plain(p), s"ingest $t layer $p") }
+      }
+    }
+    val (_, db, dds) = chainOf(dupDir, "comp")
+    def dupPaths(t: String) = s"$dupDir/v=$db/$t" +: dds.map(v => s"$dupDir/v=$v/$t.d")
+    Seq("bands" -> dup.bands, "ngr" -> dup.ngr, "sizes" -> dup.sizes)
+      .foreach { case (t, df) => same(df, plain(dupPaths(t): _*), s"dup $t") }
+    same(dup.compLayers, ((db +: dds).zip(dupPaths("comp")).map { case (v, p) =>
+      spark.read.parquet(p).withColumn("layer", lit(v))
+    }.reduce(_ unionByName _)).schema, "dup compLayers")
+  }
+
+  test("state loads take Spark's inferred column types, int-typed ids included") {
+    // int doc ids: the comp delta widens them to long, which the comp
+    // layers' unionByName must widen exactly as before; the ingest base
+    // is bucketed, so its key tables load through the catalog
+    val asInt = (df: DataFrame) => df.withColumn("doc_id", col("doc_id").cast("int"))
+    val (ingDir, dupDir) = (tmp("int_ing"), tmp("int_dup"))
+    Ingest.saveStates(Ingest.initStates(asInt(corpus), col("doc_id"), col("text"),
+      kw, k, depth, width), ingDir, 0L, buckets = Some(2))
+    DupState.save(DupState.init(asInt(corpus), col("doc_id"), col("text")), dupDir, 0L)
+    cycle(ingDir, dupDir, 0L, asInt(batch))
+    val dup = DupState.load(spark, dupDir)._2
+    assert(spark.read.parquet(s"$dupDir/v=1/comp.d").schema("doc_id").dataType == LongType)
+    assert(dup.compLayers.schema("doc_id").dataType == LongType)
+    for (upTo <- Seq(0L, 1L)) loadSchemasMatchInference(ingDir, dupDir, upTo)
   }
 
   test("the sink's report row value-equals the batch API's report on the same batch") {
