@@ -36,14 +36,9 @@ import org.apache.spark.sql.functions._
   * aggregate is bounded by the DUP mass while the O(corpus·shingle)
   * tables never rewrite and never merge.
   *
-  * Version protocol: [[StateVersions]], SHARED with [[Ingest]] —
-  * `v=N` dirs published by a `_COMMITTED` marker created last
-  * (crash-safe replay: un-publish, rewrite, re-publish); full versions
-  * carry the four tables, delta versions `<t>.d` appends; the layout
-  * crossover on rewrite deletes the opposite layout's dirs first;
-  * reads take the newest full base ≤ upTo plus committed deltas above
-  * it; periodic full saves rebase the chain; compaction slides to the
-  * chain base and sweeps superseded crash debris. ONE writer per dir.
+  * Persistence: versioned parquet under [[StateVersions]], which owns
+  * the layout, the commit protocol, chain reads and retention (the
+  * same rules as [[Ingest]]'s family).
   *
   * Scale shape of an advance: the batch's shingles/signatures are
   * computed once (batch-sized); candidate pairs come from broadcasting
@@ -75,8 +70,6 @@ object DupState {
       compLayers.groupBy(col("doc_id"))
         .agg(expr("max_by(cluster_id, layer)").as("cluster_id"))
   }
-
-  private val appendTables = Seq("bands", "ngr", "sizes")
 
   /** Batch-side derivations, shared by init and advance: the exploded
     * (doc_id, ng) shingle table (the persisted layout — the MEASURED
@@ -220,80 +213,59 @@ object DupState {
         .groupBy(col("doc_id"))
         .agg(expr("max_by(cluster_id, layer)").as("cluster_id")))
 
-  /** Write a FULL version (bootstrap or rebase): the four tables under
-    * `dir/v=version`, marker last ([[StateVersions]] protocol); stale
-    * delta-layout dirs of a crashed prior write at the same version
-    * removed first.
+  /** The family's declaration to [[StateVersions]], which owns the
+    * on-disk layout: four tables, all written as `<t>.d` by a delta
+    * version (comp's delta is a changed-rows layer, merged latest-wins
+    * on read); `comp` marks a full version.
     */
-  def save(d: DupDeltas, dir: String, version: Long): Unit = {
-    val (fs, base) = StateVersions.beginVersionWrite(d.comp.sparkSession, dir, version,
-      (appendTables :+ "comp").map(t => s"$t.d"))
-    // the four writes overlap (StateVersions.writeAll, §2.6); marker
-    // still last
-    StateVersions.writeAll(
-      Seq(d.bands -> "bands", d.ngr -> "ngr", d.sizes -> "sizes", d.comp -> "comp")
-        .map { case (df, t) => () => df.write.mode("overwrite").parquet(s"$base/$t") })
-    StateVersions.publish(fs, base)
-  }
+  private[graft] val family = StateVersions.Family("dup-cluster",
+    tables = Seq("bands", "ngr", "sizes", "comp"),
+    deltaTables = Seq("bands", "ngr", "sizes", "comp"), classifier = "comp")
+
+  /** Write a FULL version (bootstrap or rebase) at `dir/v=version`. */
+  def save(d: DupDeltas, dir: String, version: Long): Unit =
+    StateVersions.writeVersion(family, dir, version, delta = false,
+      family.tables.zip(Seq(d.bands, d.ngr, d.sizes, d.comp)))
 
   /** Write a DELTA version: the advance's append rows and changed-rows
-    * comp layer as `<t>.d`, same marker protocol; stale full-layout
-    * dirs removed first (the shared crossover rule — a stale `comp`
-    * dir would make [[listFullVersions]] adopt this version as a
-    * chain base).
+    * comp layer.
     */
-  def saveDelta(d: DupDeltas, dir: String, version: Long): Unit = {
-    val (fs, base) = StateVersions.beginVersionWrite(d.comp.sparkSession, dir, version,
-      appendTables :+ "comp")
-    // delta writes overlap too (StateVersions.writeAll, §2.6)
-    StateVersions.writeAll(
-      Seq(d.bands -> "bands", d.ngr -> "ngr", d.sizes -> "sizes", d.comp -> "comp")
-        .map { case (df, t) => () => df.write.mode("overwrite").parquet(s"$base/$t.d") })
-    StateVersions.publish(fs, base)
-  }
+  def saveDelta(d: DupDeltas, dir: String, version: Long): Unit =
+    StateVersions.writeVersion(family, dir, version, delta = true,
+      family.tables.zip(Seq(d.bands, d.ngr, d.sizes, d.comp)))
 
-  private[graft] def listVersions(spark: SparkSession, dir: String): Array[Long] =
-    StateVersions.listVersions(spark, dir)
-
-  /** Committed FULL versions (chain bases), classified by the presence
-    * of a full-layout `comp` dir. Exhaustive because saveDelta removes
-    * full dirs before publishing, so a committed version carries
-    * exactly one layout.
+  /** The stream sinks' save of `version`: `full` (the merged tables,
+    * evaluated only then) on a rebase version, else the delta `d`.
     */
-  private[graft] def listFullVersions(spark: SparkSession, dir: String): Array[Long] = {
-    val layout = StateVersions.layoutVersions(spark, dir, "comp").toSet
-    listVersions(spark, dir).filter(layout)
-  }
+  private[graft] def sinkSave(d: DupDeltas, full: => DupDeltas, dir: String, version: Long,
+      rebaseEvery: Option[Int]): Unit =
+    if (StateVersions.rebaseAt(version, rebaseEvery)) save(full, dir, version)
+    else saveDelta(d, dir, version)
 
-  /** Read the state at `upTo` (default: newest committed): the newest
-    * full base ≤ head plus the committed delta layers above it, append
-    * tables as plain multi-dir unions, comp layered for latest-wins.
+  /** Read the state at `upTo` (default: newest committed): append
+    * tables as plain multi-dir unions of their layers, comp layered for
+    * latest-wins.
     */
   def load(spark: SparkSession, dir: String,
-      upTo: Long = Long.MaxValue): (Long, LoadedDupState) = {
-    val versions = listVersions(spark, dir).filter(_ <= upTo)
-    require(versions.nonEmpty, s"no committed DupState version ≤ $upTo under $dir")
-    val resolved = StateVersions.chain(versions, listFullVersions(spark, dir).toSet)
-    require(resolved.nonEmpty,
-      s"version ${versions.max} under $dir is a delta with no full base ≤ $upTo")
-    val (head, vb, deltaVs) = resolved.get
-    def tbl(t: String) = StateVersions.readParquet(spark,
-      (s"$dir/v=$vb/$t" +: deltaVs.map(v => s"$dir/v=$v/$t.d")): _*)
-    val compLayers = (Seq(vb -> s"$dir/v=$vb/comp")
-        ++ deltaVs.map(v => v -> s"$dir/v=$v/comp.d"))
-      .map { case (v, p) => StateVersions.readParquet(spark, p).withColumn("layer", lit(v)) }
+      upTo: Long = Long.MaxValue): (Long, LoadedDupState) =
+    loadResolved(StateVersions.resolve(spark, dir, family), upTo)
+
+  /** [[load]] from a resolution the caller already holds. */
+  private[graft] def loadResolved(r: StateVersions.Resolved,
+      upTo: Long): (Long, LoadedDupState) = {
+    val c = r.loadChain(upTo, s"no committed DupState version ≤ $upTo under ${r.dir}")
+    val compLayers = c.layers("comp")
+      .map { case (v, p) => StateVersions.readParquet(r.spark, p).withColumn("layer", lit(v)) }
       .reduce(_ unionByName _)
-    (head, LoadedDupState(tbl("bands"), tbl("ngr"), tbl("sizes"), compLayers))
+    (c.head, LoadedDupState(c.read("bands"), c.read("ngr"), c.read("sizes"), compLayers))
   }
 
-  /** Retention: keep the newest `keepLast` committed versions, never
-    * stranding a retained delta's chain base — [[StateVersions.compact]]
-    * with `comp` as the full-layout classifier, which also gives this
-    * family the shared debris sweep (ADVICE r14: a marker-less dir
-    * left by a crashed save below the floor previously accumulated
-    * forever). Returns the versions deleted.
+  /** Retention ([[StateVersions.compact]] with this family): keep the
+    * newest `keepLast` committed versions, never stranding a retained
+    * delta's chain base, and sweep crash debris older than
+    * `debrisGraceMs`. Returns the versions deleted.
     */
   def compact(spark: SparkSession, dir: String, keepLast: Int,
       debrisGraceMs: Long = 15 * 60 * 1000L): Seq[Long] =
-    StateVersions.compact(spark, dir, keepLast, "comp", debrisGraceMs)
+    StateVersions.compact(spark, dir, keepLast, family, debrisGraceMs)
 }

@@ -22,17 +22,14 @@ import org.apache.spark.sql.functions._
   * unionByName+min / Kmv.advance / Stats.cmsMerge) — mergeability is
   * what makes the persisted state exact at any batch cadence.
   *
-  * Persistence is VERSIONED parquet (`dir/v=N/<table>`): a step reads
-  * version ≤ batchId and overwrites version batchId+1, so replaying a
-  * failed micro-batch rewrites the same version instead of
-  * double-advancing — the standard idempotent-foreachBatch contract.
-  * A version is only visible once its `_COMMITTED` marker exists
-  * ([[saveStates]] creates it AFTER all six table writes succeed), so
-  * a crash mid-save can never be adopted as the latest state.
-  * Old versions are retained (time travel / audit); [[compactStates]]
-  * is the retention policy (keep the newest N versions). All path
-  * handling goes through the Hadoop FileSystem of the dir's own
-  * scheme, so `dir` may be local, HDFS or an object store alike.
+  * Arrival contract: a batch's docs are NEW ids, larger than every id
+  * already in state, so keepers/sigs/ng3/ng8 only ever gain rows the
+  * batch introduced — the append shape a delta version persists
+  * ([[StateDeltas]]). Persistence is versioned parquet under
+  * [[StateVersions]], which owns the layout, the commit protocol,
+  * chain reads and retention; a step reads version ≤ batchId and
+  * overwrites version batchId+1, so a replayed micro-batch rewrites the
+  * same version instead of double-advancing.
   */
 object Ingest {
 
@@ -71,12 +68,6 @@ object Ingest {
     */
   final case class StateDeltas(keepers: DataFrame, sigs: DataFrame,
       ng3: DataFrame, ng8: DataFrame, kmv: DataFrame, cms: DataFrame)
-
-  private val tables = Seq("keepers", "sigs", "ng3", "ng8", "kmv", "cms")
-  /** Tables persisted incrementally by [[saveStatesDelta]] (as
-    * `<table>.d`); kmv/cms are always written in full.
-    */
-  private val appendTables = Seq("keepers", "sigs", "ng3", "ng8")
 
   private def tok(f: DataFrame): DataFrame =
     f.select(explode(Dedup.hashedNgramSeq(f, col("text"), 1)).as("ng"))
@@ -230,18 +221,22 @@ object Ingest {
     val ng3d0 = Dedup.antiJoinLayers(ng3b, "ng", st.ng3Layers)
     val ng3d = if (fullMode) ng3d0 else Dedup.stageEager(ng3d0)
     val nn3 = s2.select(explode(Dedup.hashedNgrams(s2, col("text"), 3)).as("ng"))
-    val report = b.agg(count(lit(1)).as("n_batch"))
-      .crossJoin(s1.agg(count(lit(1)).as("n_chunk_surv")))
-      .crossJoin(shDup.agg(count(lit(1)).as("n_simhash_dup")))
-      .crossJoin(s2.agg(count(lit(1)).as("n_surv")))
-      .crossJoin(ng3d.agg(count(lit(1)).as("__novel"))
-        .crossJoin(nn3.agg(count(lit(1)).as("__nn")))
-        .select(expr(
+    // the report's seven row counts in ONE aggregate over one union of
+    // the sources, each row tagged with its source: a cross join of
+    // one-row aggregates costs a shuffle and a broadcast per count
+    val counted = Seq("n_batch" -> b, "n_chunk_surv" -> s1, "n_simhash_dup" -> shDup,
+      "n_surv" -> s2, "__novel" -> ng3d, "__nn" -> nn3,
+      "n_selfrep_spans" -> Dedup.selfRepSpansIncrementalWithOwn(s2, Some(ng8b), st.ng8Layers,
+        col("doc_id"), col("text"), 8))
+    val perSource = counted.zipWithIndex.map { case ((name, _), i) =>
+      count(when(col("__src") === i, 1)).as(name) }
+    val counts = counted.zipWithIndex.map { case ((_, f), i) => f.select(lit(i).as("__src")) }
+      .reduce(_ union _)
+      .agg(perSource.head, perSource.tail: _*)
+    val report = counts.select(col("n_batch"), col("n_chunk_surv"), col("n_simhash_dup"),
+        col("n_surv"), expr(
           "CASE WHEN __nn = 0 THEN CAST(0 AS BIGINT) ELSE __novel * 1000000 DIV __nn END")
-          .as("novel_ppm")))
-      .crossJoin(Dedup.selfRepSpansIncrementalWithOwn(s2, Some(ng8b), st.ng8Layers,
-          col("doc_id"), col("text"), 8)
-        .agg(count(lit(1)).as("n_selfrep_spans")))
+          .as("novel_ppm"), col("n_selfrep_spans"))
       .crossJoin(kmv1.select(Kmv.estimate(col("ks"), k, Dedup.PolyP1).as("est_vocab")))
     val deltas = RawDeltas(
       // new chunk hashes only (old keepers win: Dedup.chunkKeepersMerged's
@@ -257,17 +252,22 @@ object Ingest {
     (report, deltas)
   }
 
-  /** Name of the per-version commit marker — [[StateVersions]]' (the
-    * protocol is shared with [[DupState]]; see the module scaladoc).
-    */
-  private[graft] val CommitMarker = StateVersions.CommitMarker
-
   /** Name of the per-version bucket-layout marker: present (holding
     * the bucket count) iff the version's keepers/ng3/ng8 were written
-    * hash-bucketed by their join key. Written BEFORE the commit
-    * marker, so a committed version's layout is always readable.
+    * hash-bucketed by their join key.
     */
   private[graft] val BucketsMarker = "_BUCKETS"
+
+  /** The family's declaration to [[StateVersions]], which owns the
+    * on-disk layout: six tables; a delta version writes the four
+    * append-shaped ones as `<t>.d` and the bounded kmv/cms sketches in
+    * full; `keepers` marks a full version; every rewrite clears the
+    * bucket-layout marker (rewritten by a bucketed full save).
+    */
+  private[graft] val family = StateVersions.Family("ingest",
+    tables = Seq("keepers", "sigs", "ng3", "ng8", "kmv", "cms"),
+    deltaTables = Seq("keepers", "sigs", "ng3", "ng8"),
+    classifier = "keepers", markers = Seq(BucketsMarker))
 
   /** Bucketed-by-join-key parquet write of one state table (the
     * bucket-co-location the advance's batch×state joins exploit —
@@ -322,30 +322,10 @@ object Ingest {
     */
   private val bucketKeys = Map("keepers" -> "h", "ng3" -> "ng", "ng8" -> "ng")
 
-  /** Bucket count of a committed version's key tables, if bucketed. */
-  private def bucketsOf(spark: SparkSession, dir: String, version: Long): Option[Int] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/v=$version/$BucketsMarker")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-        "UTF-8").trim.toInt)
-      finally in.close()
-    }
-  }
-
-  /** Write the six state tables under `dir/v=version`, then publish
-    * the version ATOMICALLY by creating the [[CommitMarker]] file as
-    * the last step. Six sequential parquet writes are individually
-    * atomic but not jointly: a crash between them leaves a version
-    * with missing (or committer-partial) tables, and a `loadStates`
-    * with the default `upTo` would otherwise adopt that half-state as
-    * latest — silent truncation of the corpus memory. With the
-    * marker, a crashed save is simply invisible; the replay rewrites
-    * the same version (the marker is removed FIRST, so a crash
-    * mid-rewrite un-publishes rather than exposing a mix of old and
-    * new tables) and re-publishes at the end.
+  /** Write the six state tables as the FULL version `dir/v=version`
+    * ([[StateVersions.writeVersion]]: published by its commit marker,
+    * created last, so a crashed save is invisible and its replay
+    * rewrites the same version).
     *
     * `buckets = Some(B)` bucket-co-locates the three KEY-JOINED tables
     * (keepers by h, ng3/ng8 by ng — [[bucketKeys]]) so every
@@ -354,198 +334,120 @@ object Ingest {
     * extra shuffle+sort per table at write (StateBucketProbe: ~3× a
     * plain base write — pay it at bootstrap/rebase, never per delta).
     *
-    * Concurrency contract: ONE writer per state dir. The marker makes
-    * a crashed-and-replayed save of the same version safe, but two
-    * LIVE writers racing the same `v=N` would interleave table
-    * overwrites that no marker ordering can fence (the same reason
-    * every log-structured store serializes its manifest). The intended
-    * driver is a single streaming query/scheduler whose checkpoint
-    * serializes versions ([[graft.streaming.EventStream.ingestAdvanceStream]]);
-    * concurrent BACKFILLS go to separate dirs and merge by folding one
-    * dir's batches into the other's chain as sequential
-    * [[advanceOnce]] + [[saveStates]] steps.
+    * ONE writer per state dir. The intended writer is a single
+    * streaming query whose checkpoint serializes versions
+    * ([[graft.streaming.EventStream.ingestAdvanceStream]]); concurrent
+    * BACKFILLS go to separate dirs and merge by folding one dir's
+    * batches into the other's chain as sequential [[advanceOnce]] +
+    * [[saveStates]] steps.
     */
   def saveStates(st: States, dir: String, version: Long,
-      buckets: Option[Int] = None): Unit = {
-    // Stale-path rule (ADVICE r13): rewriting a version that previously
-    // held (or crashed holding) the DELTA layout must not leave `<t>.d`
-    // dirs behind — loadStates' layer scan unions every `.d` dir of
-    // versions above the base, so a stale delta dir would silently
-    // double rows into the chain read. The buckets marker of a previous
-    // layout goes with them — rewritten below when asked for.
-    val (fs, base) = StateVersions.beginVersionWrite(st.keepers.sparkSession, dir, version,
-      appendTables.map(t => s"$t.d") :+ BucketsMarker)
-    // the six writes run concurrently (StateVersions.writeAll — §2.6
-    // overlap; marker still last): a full save's wall becomes the
-    // slowest table, not the sum of six task tails + commits
-    StateVersions.writeAll(
-      Seq(st.keepers, st.sigs, st.ng3, st.ng8, st.kmv, st.cms).zip(tables).map {
-        case (df, t) => () => buckets match {
-          case Some(b) if bucketKeys.contains(t) =>
-            writeBucketedTable(df, s"$base/$t", bucketKeys(t), b)
-          case _ => df.write.mode("overwrite").parquet(s"$base/$t")
-        }
+      buckets: Option[Int] = None): Unit =
+    StateVersions.writeVersion(family, dir, version, delta = false,
+      family.tables.zip(Seq(st.keepers, st.sigs, st.ng3, st.ng8, st.kmv, st.cms)),
+      markers = buckets.map(b => BucketsMarker -> b.toString).toSeq,
+      write = (t, df, path) => (buckets, bucketKeys.get(t)) match {
+        case (Some(b), Some(key)) => writeBucketedTable(df, path, key, b)
+        case _ => df.write.mode("overwrite").parquet(path)
       })
-    buckets.foreach { b =>
-      val out = fs.create(new org.apache.hadoop.fs.Path(s"$base/$BucketsMarker"), true)
-      try out.write(b.toString.getBytes("UTF-8")) finally out.close()
-    }
-    StateVersions.publish(fs, base)
-  }
 
-  /** Write one advance's [[StateDeltas]] as a DELTA version (append
-    * tables as `<table>.d`, the bounded kmv/cms sketches in full),
-    * same atomic [[CommitMarker]] protocol as [[saveStates]]. This is
-    * the 100 TB-shaped advance persistence: [[saveStates]] rewrites
-    * the FULL corpus-sized state every version — O(corpus) of parquet
-    * written per daily batch, i.e. rewriting the lake daily — while a
-    * delta version writes O(batch). [[loadStates]] reads
-    * `newest full base ≤ upTo` ∪ the committed deltas above it (the
-    * LSM/log-structured read path, a plain multi-dir parquet scan —
-    * no merge aggregate, every key lives in exactly one layer by the
-    * append contract on [[StateDeltas]]); a periodic full
-    * [[saveStates]] rebases the chain so read fan-in and retention
-    * stay bounded ([[graft.streaming.EventStream.ingestAdvanceStream]]
-    * wires `deltaRebaseEvery`).
+  /** Write one advance's [[StateDeltas]] as the DELTA version
+    * `dir/v=version`: O(batch) parquet per advance, where
+    * [[saveStates]] rewrites the O(corpus) state. A periodic full
+    * [[saveStates]] rebases the chain so read fan-in and retention stay
+    * bounded ([[graft.streaming.EventStream.ingestAdvanceStream]] wires
+    * `deltaRebaseEvery`).
     */
-  def saveStatesDelta(d: StateDeltas, dir: String, version: Long): Unit = {
-    // Stale-path rule (ADVICE r13 medium): rewriting a version that
-    // previously held (or crashed holding) the FULL layout must not
-    // leave its table dirs behind — listFullVersions classifies a
-    // version as a chain base by the presence of a `keepers` dir, so a
-    // stale full-layout `keepers` (e.g. a crashed full save at v
-    // replayed as a delta after a restart flipped deltaRebaseEvery's
-    // phase) would make loadStates adopt v as the base and read the
-    // stale/partial full tables instead of the committed delta chain.
-    val (fs, base) = StateVersions.beginVersionWrite(d.keepers.sparkSession, dir, version,
-      appendTables :+ BucketsMarker)
-    // all six delta writes overlap (StateVersions.writeAll, §2.6);
-    // marker still last
-    StateVersions.writeAll(
-      Seq(d.keepers, d.sigs, d.ng3, d.ng8).zip(appendTables).map {
-        case (df, t) => () => df.write.mode("overwrite").parquet(s"$base/$t.d")
-      } ++ Seq(
-        () => d.kmv.write.mode("overwrite").parquet(s"$base/kmv"),
-        () => d.cms.write.mode("overwrite").parquet(s"$base/cms")))
-    StateVersions.publish(fs, base)
-  }
+  def saveStatesDelta(d: StateDeltas, dir: String, version: Long): Unit =
+    StateVersions.writeVersion(family, dir, version, delta = true,
+      family.tables.zip(Seq(d.keepers, d.sigs, d.ng3, d.ng8, d.kmv, d.cms)))
 
-  /** COMMITTED version directories under `dir` —
-    * [[StateVersions.listVersions]] (one globStatus for all markers;
-    * Hadoop FS of the dir's own scheme, so HDFS/S3 dirs work alike).
+  /** One-time migration for a family written before the commit-marker
+    * protocol existed ([[StateVersions.adoptLegacy]]): after an upgrade
+    * [[loadStates]] would otherwise see an empty family and steer the
+    * operator toward a re-bootstrap that loses the corpus memory
+    * (ADVICE r12). Run it ONCE, with no writer active on the family (a
+    * post-upgrade in-flight rewrite is marker-less by design). Returns
+    * the versions published.
     */
-  private[graft] def listVersions(spark: SparkSession, dir: String): Array[Long] =
-    StateVersions.listVersions(spark, dir)
+  def adoptLegacyVersions(spark: SparkSession, dir: String): Seq[Long] =
+    StateVersions.adoptLegacy(spark, dir, family)
 
-  /** One-time migration for a family written BEFORE the
-    * [[CommitMarker]] protocol existed: such dirs carry no marker, so
-    * after an upgrade [[loadStates]] would see an empty family and
-    * steer the operator toward a re-bootstrap that loses the corpus
-    * memory (ADVICE r12). A legacy version is adopted — its marker
-    * touched — only when ALL six table subdirs carry a parquet
-    * `_SUCCESS` file, i.e. every write completed through its
-    * committer; anything less stays invisible, exactly like a crashed
-    * save. Run this ONCE, with no writer active on the family (a
-    * post-upgrade in-flight rewrite is marker-less by design and must
-    * not be adopted mid-write). Returns the versions published.
-    */
-  def adoptLegacyVersions(spark: SparkSession, dir: String): Seq[Long] = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Full-layout check only, and that is exhaustive: the delta layout
-    // postdates the marker protocol, so a genuine pre-marker family can
-    // only ever carry full tables — do NOT point this at a
-    // marker-stripped delta chain and conclude its data is gone.
-    val adopted = StateVersions.listVersionDirs(spark, dir).collect { case (v, false) => v }
-      .filter(v => tables.forall(t =>
-        fs.exists(new org.apache.hadoop.fs.Path(s"$dir/v=$v/$t/_SUCCESS"))))
-      .sorted
-    adopted.foreach(v =>
-      fs.create(new org.apache.hadoop.fs.Path(s"$dir/v=$v/$CommitMarker"), true).close())
-    adopted.toSeq
-  }
-
-  /** Versions carrying the FULL table layout (bootstrap or rebase
-    * bases), classified by the `keepers` dir only full versions have
-    * (delta versions carry `keepers.d`).
-    */
-  private def listFullVersions(spark: SparkSession, dir: String): Array[Long] =
-    StateVersions.layoutVersions(spark, dir, "keepers")
-
-  /** Latest persisted version ≤ `upTo` (replay safety: a crashed
-    * attempt's half-written NEWER version is ignored and overwritten).
-    * Delta-aware: each append table reads the newest committed FULL
-    * base ≤ `upTo` plus every committed delta version above it — a
-    * plain multi-directory parquet scan (each key lives in exactly one
-    * layer by the [[StateDeltas]] append contract, so no merge step);
-    * kmv/cms always read from the newest version alone (full there in
-    * both layouts). A chain whose base was compacted away fails
-    * loudly — [[compactStates]] never strands a retained delta.
+  /** The state at the newest committed version ≤ `upTo` (replay
+    * safety: a crashed attempt's half-written NEWER version is ignored
+    * and overwritten): the append tables as their base ∪ delta layers,
+    * kmv/cms from the head alone. A chain whose base was compacted away
+    * fails loudly — [[compactStates]] never strands a retained delta.
     */
   def loadStates(spark: SparkSession, dir: String,
-      upTo: Long = Long.MaxValue): (Long, States) = {
-    val all = StateVersions.listVersionDirs(spark, dir)
-    val versions = all.collect { case (v, true) => v }.filter(_ <= upTo)
+      upTo: Long = Long.MaxValue): (Long, States) =
+    loadResolved(StateVersions.resolve(spark, dir, family), upTo)
+
+  /** [[loadStates]] from a resolution the caller already holds (a
+    * stream sink's guard resolved the dir for this batch).
+    */
+  private[graft] def loadResolved(r: StateVersions.Resolved, upTo: Long): (Long, States) = {
     // zero committed but unmarked v=N dirs present = a pre-marker
     // family after upgrade: halting with the migration by name beats
     // a misleading "run initStates first" that invites a re-bootstrap
-    require(versions.nonEmpty,
-      if (versions.isEmpty && all.exists(!_._2) && !all.exists(_._2))
-        s"no COMMITTED state version under $dir but ${all.length} unmarked v=N dir(s) exist — " +
-          "if this family predates the commit-marker protocol, verify and publish it with " +
-          "Ingest.adoptLegacyVersions(spark, dir) (adopts versions whose six tables all carry " +
-          "parquet _SUCCESS); do NOT re-bootstrap"
-      else s"no state version ≤ $upTo under $dir — run initStates + saveStates first")
-    val resolved = StateVersions.chain(versions, listFullVersions(spark, dir).toSet)
-    require(resolved.nonEmpty,
-      s"version ${versions.max} under $dir is a delta with no full base ≤ $upTo — the chain's " +
-        "bootstrap/rebase base is missing (compacted externally?); rebuild a base with saveStates")
-    val (head, vb, deltaVs) = resolved.get
-    def tbl(t: String) = StateVersions.readParquet(spark,
-      (s"$dir/v=$vb/$t" +: deltaVs.map(v => s"$dir/v=$v/$t.d")): _*)
-    def atHead(t: String) = StateVersions.readParquet(spark, s"$dir/v=$head/$t")
+    val c = r.loadChain(upTo,
+      if (r.committed.isEmpty && r.versions.nonEmpty)
+        s"no COMMITTED state version under ${r.dir} but ${r.versions.length} unmarked v=N " +
+          "dir(s) exist — if this family predates the commit-marker protocol, verify and " +
+          "publish it with Ingest.adoptLegacyVersions(spark, dir) (adopts versions whose six " +
+          "tables all carry parquet _SUCCESS); do NOT re-bootstrap"
+      else s"no state version ≤ $upTo under ${r.dir} — run initStates + saveStates first")
     // When the base was written bucketed, ALSO expose the key-joined
     // tables as layers whose base leg is the registered bucketed scan:
     // the advance's batch×state joins then run per layer and the
     // O(state) side never shuffles. The single-frame unions below stay
     // plain reads — same rows, and resilient to any catalog state.
-    val layers = bucketsOf(spark, dir, vb).map { b =>
-      def layered(t: String): Seq[DataFrame] =
-        readBucketedTable(spark, s"$dir/v=$vb/$t", bucketKeys(t), b) +:
-          deltaVs.map(v => StateVersions.readParquet(spark, s"$dir/v=$v/$t.d"))
+    val layers = c.baseMarker(BucketsMarker).map(_.trim.toInt).map { b =>
+      def layered(t: String): Seq[DataFrame] = {
+        val paths = c.layers(t).map(_._2)
+        readBucketedTable(r.spark, paths.head, bucketKeys(t), b) +:
+          paths.tail.map(StateVersions.readParquet(r.spark, _))
+      }
       StateLayers(layered("keepers"), layered("ng3"), layered("ng8"))
     }
-    (head, States(tbl("keepers"), tbl("sigs"), tbl("ng3"), tbl("ng8"),
-      atHead("kmv"), atHead("cms"), layers))
+    (c.head, States(c.read("keepers"), c.read("sigs"), c.read("ng3"), c.read("ng8"),
+      c.readHead("kmv"), c.readHead("cms"), layers))
   }
 
-  /** Retention: delete state versions older than the newest `keepLast`
-    * (the compaction policy the versioned layout otherwise delegates to
-    * the caller — the state-family analogue of
-    * [[graft.sources.Lake.compactPartition]]). Keeps the `keepLast`
-    * HIGHEST versions; replay safety is preserved because
-    * [[loadStates]]' `≤ upTo` contract still resolves for any
-    * `upTo ≥` the oldest retained version, and a replay older than
-    * retention fails loudly on loadStates' own require rather than
-    * silently double-advancing. `keepLast ≥ 1` — compacting away every
-    * version would turn the next advance into a silent re-bootstrap.
+  /** The stream sinks' ingest step for batch `batchId`: load ≤ batchId
+    * from the batch's resolution, advance, and save v=batchId+1 — the
+    * min-merge [[advanceOnce]] and a full save on every version when
+    * `rebaseEvery` is None, else [[advanceOnceDelta]] and a full or
+    * delta save by [[StateVersions.rebaseAt]]. Returns the report.
+    */
+  private[graft] def sinkStep(b: DataFrame, r: StateVersions.Resolved, batchId: Long,
+      rebaseEvery: Option[Int], buckets: Option[Int], chunkWords: Int, k: Int, depth: Int,
+      width: Int): DataFrame = {
+    val (_, st) = loadResolved(r, upTo = batchId)
+    val version = batchId + 1
+    rebaseEvery match {
+      case None =>
+        val (report, next) = advanceOnce(b, st, col("doc_id"), col("text"),
+          chunkWords, k, depth, width)
+        saveStates(next, r.dir, version, buckets)
+        report
+      case Some(_) =>
+        val (report, next, d) = advanceOnceDelta(b, st, col("doc_id"), col("text"),
+          chunkWords, k, depth, width)
+        if (StateVersions.rebaseAt(version, rebaseEvery)) saveStates(next, r.dir, version, buckets)
+        else saveStatesDelta(d, r.dir, version)
+        report
+    }
+  }
+
+  /** Retention ([[StateVersions.compact]] with this family): keep the
+    * newest `keepLast` committed versions, never stranding a retained
+    * delta's base, and sweep crash debris older than `debrisGraceMs`.
+    * A replay older than retention fails loudly on [[loadStates]]'
+    * require rather than silently re-bootstrapping. `keepLast ≥ 1`.
     * Returns the versions deleted.
-    *
-    * Concurrency (ADVICE r12): an in-flight [[saveStates]] of a NEW
-    * version (max committed + 1, the foreachBatch contract) is never
-    * touched — unmarked dirs at or above the newest committed version
-    * are left alone. A concurrent marker-less REWRITE of an older
-    * in-retention version (the time-travel `upTo` workflow re-saves
-    * below max) is indistinguishable from crashed-save debris by
-    * position alone, so the debris sweep additionally skips unmarked
-    * dirs whose modification time falls within `debrisGraceMs`
-    * (saveStates' marker delete and table writes keep the dir mtime
-    * fresh for the whole rewrite). The grace is best-effort on stores
-    * with weak directory mtimes — when in doubt, run compaction
-    * mutually exclusive with any below-max rewrite; the normal
-    * append-at-max loop needs no coordination.
     */
   def compactStates(spark: SparkSession, dir: String, keepLast: Int,
       debrisGraceMs: Long = 15 * 60 * 1000L): Seq[Long] =
-    StateVersions.compact(spark, dir, keepLast, "keepers", debrisGraceMs)
+    StateVersions.compact(spark, dir, keepLast, family, debrisGraceMs)
 }

@@ -6,54 +6,200 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 
-/** The version/marker/compaction protocol SHARED by the persisted
-  * state families — [[Ingest]]'s six-table ingest state and
-  * [[DupState]]'s four-table dup-cluster state. Extracted (VERDICT
-  * r14 #1) because the protocol had been duplicated: the r13 ADVICE
-  * layout-crossover fix had to be hand-mirrored into both copies, and
-  * the next protocol bug would have been fixed in one family and not
-  * the other. Both families now consume this module; a third state
-  * family starts here.
+/** The on-disk protocol of graft's persisted state families, and the
+  * ONE module that knows it. A family ([[Ingest]]'s six-table ingest
+  * state, [[DupState]]'s four-table dup-cluster state) declares its
+  * tables once as a [[Family]] and calls this module to resolve, read,
+  * write, guard and retain its versions; a third family starts here.
   *
-  * The protocol (each family's scaladoc carries the family-specific
-  * table layout; the rules below are family-independent):
+  * Layout of a state dir:
+  *  - `dir/v=N` holds version N. It is PUBLISHED only once its
+  *    zero-byte [[CommitMarker]] exists, created LAST: the table
+  *    writes of a save are individually atomic but not jointly, so an
+  *    unmarked dir (a save in flight, or a crashed one) is invisible;
+  *  - a FULL version (bootstrap or rebase) holds every table as a
+  *    plain `<t>` dir. A DELTA version holds the family's append
+  *    tables as `<t>.d` (one advance's new rows) and its other tables
+  *    plain. The family's classifier table is a plain dir only in full
+  *    versions, so its presence marks a version full;
+  *  - version-level markers the family declares (ingest's `_BUCKETS`,
+  *    the bucket count of a hash-bucketed base) are written after the
+  *    tables and before the commit marker;
+  *  - `dir/_STREAM_TAG` ([[StreamTagMarker]]) pins the dir to the one
+  *    stream driving it; it lives outside every version.
   *
-  *  - a version lives at `dir/v=N` and is PUBLISHED only once its
-  *    zero-byte [[CommitMarker]] exists, created LAST — six (or four)
-  *    sequential parquet writes are individually atomic but not
-  *    jointly, so a crash mid-save must stay invisible;
-  *  - a REWRITE un-publishes first (marker deleted), removes the
-  *    opposite layout's stale dirs (a crashed full save replayed as a
-  *    delta, or vice versa, must not leave dirs the other read path
-  *    would adopt), writes tables, re-publishes;
-  *  - FULL versions carry plain table dirs (chain bases); DELTA
-  *    versions carry `<table>.d` appends;
-  *  - reads resolve `newest committed full base ≤ upTo` plus the
-  *    committed deltas above it ([[chain]]);
-  *  - compaction ([[compact]]) keeps the newest `keepLast` committed
-  *    versions, slides the floor DOWN to the retained chain's base
-  *    (never strands a delta loadable state still serves), refuses
-  *    loudly when that base is missing, and sweeps committed-
-  *    superseded crash debris under an mtime grace window;
-  *  - ONE writer per dir (the markers fence crashed-and-replayed
-  *    saves of the same version, not two live writers).
+  * Rules:
+  *  - WRITE ([[writeVersion]]): un-publish (delete the commit marker),
+  *    delete the opposite layout's dirs and the family's markers, write
+  *    the tables ([[writeAll]]), write the markers, publish. A crashed
+  *    full save replayed as a delta (or the reverse) thus leaves no dir
+  *    the other read path would adopt: a stale classifier dir would
+  *    make a delta a chain base, a stale `.d` dir would double rows. A
+  *    crash anywhere leaves the version unpublished, and its replay
+  *    rewrites it. ONE writer per dir: the markers fence a crashed and
+  *    replayed save of a version, not two live writers;
+  *  - READ ([[resolve]], then [[Resolved.chainAt]]): the newest
+  *    committed full base ≤ upTo plus the committed deltas above it
+  *    ([[chain]]). An append table reads `base/<t>` ∪ every delta's
+  *    `<t>.d` (each key lives in exactly one layer under the family's
+  *    arrival contract, so no merge); a plain table reads the head. A
+  *    resolution is ONE listing of `dir` plus ONE glob of the names the
+  *    protocol reads inside the versions;
+  *  - RETAIN ([[compact]]): keep the newest `keepLast` committed
+  *    versions, sliding the floor DOWN to the retained chain's base so
+  *    no delta a load still serves is stranded; refuse loudly when that
+  *    base is missing; sweep uncommitted dirs below the newest committed
+  *    version (superseded crash debris) once past a grace window;
+  *  - STREAM SINKS ([[requireSinkArgs]], [[guardBatch]],
+  *    [[rebaseAt]]): batch N loads ≤ N and writes v=N+1, full on a
+  *    rebase version and delta otherwise; before anything is written,
+  *    every dir's checkpoint arithmetic and then its stream-tag pin
+  *    reject a stream whose checkpoint does not match the dir.
   *
   * All path handling goes through the Hadoop FileSystem of the dir's
-  * OWN scheme, so `dir` may be local, HDFS or an object store alike;
-  * marker discovery is one `globStatus` per listing (object-store
-  * `exists` calls are HEAD requests — N sequential RPCs per load
-  * otherwise).
+  * OWN scheme, so `dir` may be local, HDFS or an object store alike.
   */
 private[graft] object StateVersions {
 
-  /** Name of the per-version commit marker. A version directory is
-    * PUBLISHED only once this zero-byte file exists; [[listVersions]]
-    * (and therefore every family's load) never sees an unmarked one.
+  /** Name of the per-version commit marker. A version dir is PUBLISHED
+    * only once this zero-byte file exists; no resolution serves an
+    * unmarked one.
     */
   val CommitMarker = "_COMMITTED"
 
-  def fsOf(spark: SparkSession, dir: String): FileSystem =
+  private def fsOf(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** A state family's declaration: its `name` (in messages), the
+    * `tables` of a full version, the `deltaTables` a delta version
+    * writes as `<t>.d` (the others are plain in both layouts), the
+    * `classifier` table whose plain dir marks a full version, and the
+    * version-level `markers` a rewrite clears.
+    */
+  final case class Family(name: String, tables: Seq[String], deltaTables: Seq[String],
+      classifier: String, markers: Seq[String] = Nil) {
+    /** The dir table `t` is written to in a delta or a full version. */
+    def tableDir(t: String, delta: Boolean): String =
+      if (delta && deltaTables.contains(t)) s"$t.d" else t
+    /** What a rewrite into the given layout deletes before writing. */
+    private[StateVersions] def stale(delta: Boolean): Seq[String] =
+      deltaTables.map(tableDir(_, !delta)) ++ markers
+  }
+
+  /** One `v=N` dir as [[resolve]] saw it: committed, full (the
+    * classifier's plain dir present), the family markers it holds, and
+    * its modification time.
+    */
+  final case class Version(v: Long, committed: Boolean, full: Boolean,
+      markers: Set[String], mtime: Long)
+
+  /** A state dir's versions, ascending, and the family detected from
+    * its tables (None when no version holds a candidate family's
+    * classifier, plain or `.d`).
+    */
+  final case class Resolved(spark: SparkSession, fs: FileSystem, dir: String,
+      family: Option[Family], versions: Seq[Version]) {
+    def committed: Seq[Long] = versions.filter(_.committed).map(_.v)
+
+    /** Uncommitted dirs below the newest committed version: superseded
+      * crash debris, or a live below-max rewrite (the mtime tells them
+      * apart). Dirs at or above it may be a save in flight.
+      */
+    def debris: Seq[Version] =
+      committed.lastOption.toSeq.flatMap(m => versions.filter(x => !x.committed && x.v < m))
+
+    /** The read chain at `upTo`; None when no committed version ≤ upTo
+      * has a committed full base at or below it.
+      */
+    def chainAt(upTo: Long = Long.MaxValue): Option[Chain] =
+      chain(committed.filter(_ <= upTo).toArray, versions.filter(_.full).map(_.v).toSet)
+        .map { case (head, base, deltas) => Chain(this, head, base, deltas) }
+
+    /** [[chainAt]] for a load: fails loudly with `none` when no
+      * committed version ≤ upTo exists, and names the missing base when
+      * the newest one has none.
+      */
+    def loadChain(upTo: Long, none: => String): Chain = {
+      val vs = committed.filter(_ <= upTo)
+      require(vs.nonEmpty, none)
+      val c = chainAt(upTo)
+      require(c.nonEmpty,
+        s"version ${vs.max} under $dir is a delta with no full base ≤ $upTo — the chain's " +
+          "bootstrap/rebase base is missing (compacted externally?); rebuild a base with a full save")
+      c.get
+    }
+  }
+
+  /** A resolved read chain: `head`, its full `base` and the `deltas`
+    * between them, ascending.
+    */
+  final case class Chain(r: Resolved, head: Long, base: Long, deltas: Seq[Long]) {
+    /** Append table `t`'s layers, base first, with their versions. */
+    def layers(t: String): Seq[(Long, String)] =
+      (base -> s"${r.dir}/v=$base/$t") +: deltas.map(v => v -> s"${r.dir}/v=$v/$t.d")
+    /** Append table `t`: the union of its layers. */
+    def read(t: String): DataFrame = readParquet(r.spark, layers(t).map(_._2): _*)
+    /** Plain table `t`, read from the head alone. */
+    def readHead(t: String): DataFrame = readParquet(r.spark, s"${r.dir}/v=$head/$t")
+    /** The content of the base version's marker `name`, if it has one. */
+    def baseMarker(name: String): Option[String] =
+      if (!r.versions.exists(x => x.v == base && x.markers(name))) None
+      else Some(readString(r.fs, new Path(s"${r.dir}/v=$base/$name")))
+  }
+
+  private val VersionDir = "^v=(\\d+)$".r
+
+  private def readString(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
+    try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
+    finally in.close()
+  }
+
+  /** Resolve `dir` against the candidate `families` in ONE listing of
+    * the dir (every `v=N`, with its mtime) plus ONE glob of the names
+    * the protocol reads inside them: the commit marker, each family's
+    * classifier (plain and `.d`) and its markers. A missing dir is an
+    * empty family (first-ever bootstrap), not an error.
+    */
+  def resolve(spark: SparkSession, dir: String, families: Family*): Resolved = {
+    val fs = fsOf(spark, dir)
+    val dirs = (try fs.listStatus(new Path(dir)).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil })
+      .flatMap { st =>
+        val name = st.getPath.getName
+        VersionDir.findFirstMatchIn(name).map(m => (m.group(1).toLong, name, st.getModificationTime))
+      }.sortBy(_._1)
+    val names = (CommitMarker +: families.flatMap(f =>
+      Seq(f.classifier, s"${f.classifier}.d") ++ f.markers)).distinct
+    // globStatus may return null (not empty) on some FS when nothing matches
+    val found = if (dirs.isEmpty) Map.empty[String, Set[String]]
+      else Option(fs.globStatus(new Path(s"$dir/v=*/{${names.mkString(",")}}")))
+        .getOrElse(Array.empty).toSeq
+        .groupBy(_.getPath.getParent.getName)
+        .map { case (v, sts) => v -> sts.map(_.getPath.getName).toSet }
+    val family = families.find(f =>
+      found.values.exists(n => n(f.classifier) || n(s"${f.classifier}.d")))
+    val versions = dirs.map { case (v, name, mtime) =>
+      val n = found.getOrElse(name, Set.empty[String])
+      Version(v, n(CommitMarker), family.exists(f => n(f.classifier)),
+        family.toSeq.flatMap(_.markers).filter(n).toSet, mtime)
+    }
+    Resolved(spark, fs, dir, family, versions)
+  }
+
+  /** Resolve the read chain over an already-`≤ upTo`-filtered
+    * committed version set: (head, newest full base ≤ head, committed
+    * delta versions between base and head, ascending). None when no
+    * full base exists under the head.
+    */
+  def chain(versions: Array[Long], fulls: Long => Boolean): Option[(Long, Long, Seq[Long])] =
+    if (versions.isEmpty) None
+    else {
+      val head = versions.max
+      versions.filter(fulls).maxOption.map { base =>
+        (head, base, versions.filter(_ > base).sorted.toSeq)
+      }
+    }
 
   /** The key under which Spark stores a written frame's schema in every
     * parquet footer (Spark's `ParquetReadSupport.SPARK_METADATA_KEY`).
@@ -97,31 +243,47 @@ private[graft] object StateVersions {
   def readParquet(spark: SparkSession, paths: String*): DataFrame =
     spark.read.schema(parquetSchema(spark, paths)).parquet(paths: _*)
 
-  /** The write prologue every full/delta save runs: un-publish
-    * `dir/v=version` (delete its marker — a crash mid-rewrite then
-    * un-publishes rather than exposing a mix of old and new tables)
-    * and delete the `stale` paths (version-dir-relative) the layout
-    * crossover leaves behind. Returns (fs, version dir) for the
-    * table writes and [[publish]].
+
+  /** Write `dir/v=version` of `family` in the delta or the full layout
+    * (see the module rules): un-publish, delete [[Family.stale]], run
+    * every `(table, frame)` write concurrently through `write` (given
+    * the table and its dir), write the `(name, content)` markers, and
+    * publish last.
     */
-  def beginVersionWrite(spark: SparkSession, dir: String, version: Long,
-      stale: Seq[String]): (FileSystem, String) = {
+  def writeVersion(family: Family, dir: String, version: Long, delta: Boolean,
+      tables: Seq[(String, DataFrame)], markers: Seq[(String, String)] = Nil,
+      write: (String, DataFrame, String) => Unit =
+        (_, df, path) => df.write.mode("overwrite").parquet(path)): Unit = {
     val base = s"$dir/v=$version"
-    val fs = fsOf(spark, base)
+    val fs = fsOf(tables.head._2.sparkSession, base)
     val marker = new Path(s"$base/$CommitMarker")
     if (fs.exists(marker)) fs.delete(marker, false)
-    stale.foreach { s =>
+    family.stale(delta).foreach { s =>
       val p = new Path(s"$base/$s")
       if (fs.exists(p)) fs.delete(p, true)
     }
-    (fs, base)
+    writeAll(tables.map { case (t, df) => () => write(t, df, s"$base/${family.tableDir(t, delta)}") })
+    markers.foreach { case (name, content) =>
+      val out = fs.create(new Path(s"$base/$name"), true)
+      try out.write(content.getBytes("UTF-8")) finally out.close()
+    }
+    fs.create(marker, true).close()
   }
 
-  /** Publish a version ATOMICALLY by creating its marker — the last
-    * step of every save.
+  /** One-time migration for a family written BEFORE the commit-marker
+    * protocol existed: publish each unmarked version whose full-layout
+    * tables ALL carry a parquet `_SUCCESS` (every write completed through
+    * its committer); anything less stays invisible, like a crashed save.
+    * Full layout only, and that is exhaustive: the delta layout
+    * postdates the marker protocol. Returns the versions published.
     */
-  def publish(fs: FileSystem, base: String): Unit =
-    fs.create(new Path(s"$base/$CommitMarker"), true).close()
+  def adoptLegacy(spark: SparkSession, dir: String, family: Family): Seq[Long] = {
+    val r = resolve(spark, dir, family)
+    val adopted = r.versions.filterNot(_.committed).map(_.v).filter(v =>
+      family.tables.forall(t => r.fs.exists(new Path(s"$dir/v=$v/$t/_SUCCESS"))))
+    adopted.foreach(v => r.fs.create(new Path(s"$dir/v=$v/$CommitMarker"), true).close())
+    adopted
+  }
 
   /** Run one version's table writes CONCURRENTLY from a transient
     * driver-side pool (one thread per table, ≤ 6): the tables of a
@@ -130,7 +292,7 @@ private[graft] object StateVersions {
     * write's task tail and commit protocol — the scheduler happily
     * back-fills executors with the next write's tasks (optimization
     * guide §2.6). Threads only reorder the writes BETWEEN
-    * [[beginVersionWrite]] and [[publish]]; the commit marker still
+    * [[writeVersion]]'s un-publish and publish; the commit marker still
     * goes last, after every write returned, so crash atomicity is
     * exactly the sequential protocol's. Any failure propagates after
     * all writes settle — the version stays unpublished, as before.
@@ -272,141 +434,99 @@ private[graft] object StateVersions {
     }
   }
 
-  /** All `v=N` dirs under `dir` with their committed flag. Markers
-    * are fetched in ONE `globStatus` call; a missing dir is an empty
-    * family (first-ever bootstrap), not an error.
+  /** Retention + debris sweep (the module's RETAIN rule): keep the
+    * newest `keepLast` committed versions, sliding the floor DOWN to the
+    * retained chain's full base; refuse loudly when the retained floor
+    * has no committed base at or below it (the chain is already
+    * unreadable — deleting the remaining versions would destroy the
+    * forensic evidence). Uncommitted dirs below the newest committed
+    * version are swept unless modified within `debrisGraceMs` (a live
+    * below-max time-travel rewrite is positionally identical to debris
+    * — a save keeps the dir mtime fresh for the whole rewrite); dirs at
+    * or above it may be another attempt's in-flight write and are left
+    * alone. Returns the versions deleted. `keepLast ≥ 1`: compacting
+    * away every version would turn the next advance into a silent
+    * re-bootstrap.
     */
-  def listVersionDirs(spark: SparkSession, dir: String): Array[(Long, Boolean)] = {
-    val path = new Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) Array.empty
-    else {
-      // globStatus may return null (not empty) on some FS when nothing matches
-      val committed = Option(fs.globStatus(new Path(s"$dir/v=*/$CommitMarker")))
-        .getOrElse(Array.empty)
-        .map(_.getPath.getParent.getName).toSet
-      fs.listStatus(path).flatMap { st =>
-        val name = st.getPath.getName
-        "^v=(\\d+)$".r.findFirstMatchIn(name)
-          .map(m => (m.group(1).toLong, committed(name)))
-      }
-    }
-  }
-
-  /** COMMITTED version numbers under `dir` (unmarked dirs are crashed
-    * saves and are skipped).
-    */
-  def listVersions(spark: SparkSession, dir: String): Array[Long] =
-    listVersionDirs(spark, dir).collect { case (v, true) => v }
-
-  /** Versions carrying the FULL table layout, classified by the
-    * presence of the family's `classifier` table dir (delta versions
-    * carry `<classifier>.d` instead) — one globStatus. Exhaustive
-    * because every delta save removes stale full dirs before
-    * publishing, so a committed version carries exactly one layout.
-    * Marker-blind: callers intersect with the committed set.
-    */
-  def layoutVersions(spark: SparkSession, dir: String, classifier: String): Array[Long] = {
-    val path = new Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) Array.empty
-    else Option(fs.globStatus(new Path(s"$dir/v=*/$classifier")))
-      .getOrElse(Array.empty)
-      .flatMap(st => "^v=(\\d+)$".r.findFirstMatchIn(st.getPath.getParent.getName)
-        .map(_.group(1).toLong))
-  }
-
-  /** Resolve the read chain over an already-`≤ upTo`-filtered
-    * committed version set: (head, newest full base ≤ head, committed
-    * delta versions between base and head, ascending). None when no
-    * full base exists under the head — the caller raises its
-    * family-specific error.
-    */
-  def chain(versions: Array[Long], fulls: Long => Boolean): Option[(Long, Long, Seq[Long])] =
-    if (versions.isEmpty) None
-    else {
-      val head = versions.max
-      versions.filter(fulls).maxOption.map { base =>
-        (head, base, versions.filter(_ > base).sorted.toSeq)
-      }
-    }
-
-  /** Retention + debris sweep (the policy both families delegate to):
-    * keep the newest `keepLast` committed versions, sliding the floor
-    * DOWN to the retained chain's full base (classified by
-    * `fullClassifier`) so compaction can never strand a version a load
-    * still serves; refuse loudly when the retained floor has no
-    * committed base at or below it (the chain is already unreadable —
-    * deleting the remaining versions would destroy the forensic
-    * evidence). Uncommitted dirs strictly below the newest committed
-    * version are superseded crash debris and are swept, unless
-    * modified within `debrisGraceMs` (a live below-max time-travel
-    * rewrite is positionally identical to debris — saveStates keeps
-    * the dir mtime fresh for the whole rewrite); uncommitted dirs AT
-    * or ABOVE the newest committed version may be another attempt's
-    * in-flight write and are left alone. Returns the versions
-    * deleted. `keepLast ≥ 1`: compacting away every version would
-    * turn the next advance into a silent re-bootstrap.
-    */
-  def compact(spark: SparkSession, dir: String, keepLast: Int,
-      fullClassifier: String, debrisGraceMs: Long): Seq[Long] = {
+  def compact(spark: SparkSession, dir: String, keepLast: Int, family: Family,
+      debrisGraceMs: Long): Seq[Long] = {
     require(keepLast >= 1,
       s"keepLast must be ≥ 1 (was $keepLast): an empty state dir re-bootstraps silently")
-    val all = listVersionDirs(spark, dir)
-    val committed = all.collect { case (v, true) => v }.sorted
-    val drop = committed.takeRight(keepLast).headOption match {
-      case None => Array.empty[Long]
+    val r = resolve(spark, dir, family)
+    val drop = r.committed.takeRight(keepLast).headOption match {
+      case None => Nil
       case Some(floor) =>
-        val fulls = layoutVersions(spark, dir, fullClassifier).toSet
-        val chainFloor = committed.filter(v => v <= floor && fulls(v)).lastOption
+        val chainFloor = r.chainAt(floor).map(_.base)
         require(chainFloor.nonEmpty,
           s"retained floor v=$floor under $dir is a delta with no committed full base ≤ it — " +
             "the chain is unreadable (base removed externally?); refusing to compact; " +
             "rebuild a base with a full save first")
-        committed.filter(_ < chainFloor.get)
+        r.committed.filter(_ < chainFloor.get)
     }
-    val fs = fsOf(spark, dir)
     val cutoff = System.currentTimeMillis() - debrisGraceMs
-    val debris = if (committed.isEmpty) Array.empty[Long]
-      else all.collect { case (v, false) if v < committed.max => v }
-        .filter { v =>
-          val p = new Path(s"$dir/v=$v")
-          try fs.getFileStatus(p).getModificationTime <= cutoff
-          catch { case _: java.io.FileNotFoundException => false }
-        }
-    (drop ++ debris).foreach(v => fs.delete(new Path(s"$dir/v=$v"), true))
-    (drop ++ debris).toSeq.sorted
+    val gone = (drop ++ r.debris.filter(_.mtime <= cutoff).map(_.v)).sorted
+    gone.foreach(v => r.fs.delete(new Path(s"$dir/v=$v"), true))
+    gone
   }
 
-  /** Guard for the streaming sinks' idempotent-rewrite contract
-    * (ADVICE r14): a batch N loads `≤ N` and writes v=N+1, so in any
-    * legitimate run the dir's MAX committed version is at most
-    * batchId + 1 (equal only when replaying a batch whose save
+  /** The stream sinks' argument checks. `keepLast ≥ 2` is stricter than
+    * [[compact]]'s own ≥ 1: a replayed batch N reads version ≤ N, and
+    * after batch N's own compaction the two newest versions are
+    * {N, N+1} — keepLast = 1 would turn the next crash-replay into a
+    * loud failure. Each named rebase cadence must be ≥ 1.
+    */
+  def requireSinkArgs(keepLast: Option[Int], cadences: (String, Option[Int])*): Unit = {
+    keepLast.foreach(n => require(n >= 2,
+      s"keepLast must be ≥ 2 for the stream sink (was $n): a crash-replay of batch N loads " +
+        "version ≤ N, which keepLast = 1 compacts away right after N commits"))
+    cadences.foreach { case (name, c) => c.foreach(r => require(r >= 1,
+      s"$name must be ≥ 1 (was $r); 1 = rebase every batch (full saves)")) }
+  }
+
+  /** Whether a sink writes `version` as a full rebase: every version
+    * when the cadence is None, else every `every`-th.
+    */
+  def rebaseAt(version: Long, every: Option[Int]): Boolean = every.forall(version % _ == 0)
+
+  /** The stream sinks' per-batch guard over the dirs they write: resolve
+    * each dir ONCE (the resolution then serves the batch's load), run
+    * EVERY dir's [[requireCheckpointMatch]] and only then pin each dir
+    * to the stream ([[requireStreamTag]], when a `streamTag` is given):
+    * an arithmetic rejection on any dir must not adopt a tag on its way
+    * out and pin a dir to the wrong stream (ADVICE r16). Returns the
+    * resolutions, in order.
+    */
+  def guardBatch(spark: SparkSession, batchId: Long, streamTag: Option[String],
+      dirs: (Family, String)*): Seq[Resolved] = {
+    val rs = dirs.map { case (f, d) => f -> resolve(spark, d, f) }
+    rs.foreach { case (f, r) => requireCheckpointMatch(r, batchId, f.name) }
+    streamTag.foreach { t =>
+      val tag = tagFromCheckpoint(spark, t)
+      rs.foreach { case (f, r) => requireStreamTag(spark, r.dir, tag, f.name) }
+    }
+    rs.map(_._2)
+  }
+
+  /** The checkpoint guard (ADVICE r14): a batch N loads `≤ N` and writes
+    * v=N+1, so in any legitimate run the dir's MAX committed version is
+    * at most batchId + 1 (equal only when replaying a batch whose save
     * committed before the checkpoint did). A FRESH checkpoint (batch
     * ids restarting at 0) against an already-advanced chain violates
-    * this — without the guard it would silently overwrite low
-    * versions while higher committed versions remain, and a later
-    * default load would read a head mixing two histories. Empty dirs
-    * pass through: the family's own load raises the bootstrap error.
+    * this — without the guard it would silently overwrite low versions
+    * while higher committed versions remain, and a later default load
+    * would read a head mixing two histories. Empty dirs pass through:
+    * the family's own load raises the bootstrap error.
     *
     * RESIDUAL ONE-ADVANCE HOLE (ADVICE r15): version arithmetic alone
     * cannot reject a fresh checkpoint's batch 0 against a chain
     * advanced exactly ONCE — max committed = 1 ≤ batchId + 1 is
-    * indistinguishable from a legitimate replay of batch 0, so that
-    * first rewrite of v=1 passes and silently replaces its data. The
-    * guard only hard-fails from the second advance on. To close the
-    * hole, give the sink a `streamTag` (its checkpoint location):
-    * [[requireStreamTag]] pins the dir to the FIRST tag that advanced
-    * it and rejects any other tag on its first batch — no version
-    * arithmetic involved. The sinks run THIS guard first, then the
-    * tag guard (ADVICE r16): an arithmetic rejection must not adopt a
-    * tag on its way out and pin the dir to the wrong stream.
+    * indistinguishable from a legitimate replay of batch 0. The
+    * `streamTag` pin ([[requireStreamTag]]) closes it.
     */
-  def requireCheckpointMatch(spark: SparkSession, dir: String, batchId: Long,
-      family: String): Unit =
-    listVersions(spark, dir).maxOption.foreach { m =>
+  private def requireCheckpointMatch(r: Resolved, batchId: Long, family: String): Unit =
+    r.committed.lastOption.foreach { m =>
       require(m <= batchId + 1,
-        s"$family state dir $dir has committed version v=$m but this stream is at batch " +
+        s"$family state dir ${r.dir} has committed version v=$m but this stream is at batch " +
           s"$batchId (writes v=${batchId + 1}) — the streaming checkpoint does not match the " +
           "state dir's history (fresh checkpoint against an advanced chain?). Writing would " +
           "overwrite low versions while higher committed versions remain, leaving a head that " +
@@ -416,6 +536,14 @@ private[graft] object StateVersions {
 
   /** Name of the optional per-dir stream-identity marker. */
   val StreamTagMarker = "_STREAM_TAG"
+
+  /** The raw content of `dir`'s stream-tag marker, if present (empty
+    * when an adoption crashed before the rename-based publish existed).
+    */
+  def readStreamTag(fs: FileSystem, dir: String): Option[String] = {
+    val p = new Path(s"$dir/$StreamTagMarker")
+    if (!fs.exists(p)) None else Some(readString(fs, p))
+  }
 
   /** Resolve a sink's `streamTag` (documented: the checkpoint
     * location) to the identity actually pinned: the checkpoint's own
@@ -441,13 +569,8 @@ private[graft] object StateVersions {
     try {
       val fs = fsOf(spark, tag)
       if (!fs.exists(p)) tag
-      else {
-        val in = fs.open(p)
-        val txt =
-          try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-          finally in.close()
-        idPattern.findFirstMatchIn(txt).map(m => s"$tag#${m.group(1)}").getOrElse(tag)
-      }
+      else idPattern.findFirstMatchIn(readString(fs, p)).map(m => s"$tag#${m.group(1)}")
+        .getOrElse(tag)
     } catch { case _: java.io.IOException => tag }
   }
 
@@ -472,12 +595,7 @@ private[graft] object StateVersions {
       family: String): Unit = {
     val fs = fsOf(spark, dir)
     val p = new Path(s"$dir/$StreamTagMarker")
-    val existing = if (!fs.exists(p)) None else {
-      val in = fs.open(p)
-      val bytes = try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in) finally in.close()
-      if (bytes.isEmpty) None else Some(new String(bytes, "UTF-8"))
-    }
-    existing match {
+    readStreamTag(fs, dir).filter(_.nonEmpty) match {
       case None =>
         val tmp = new Path(s"$dir/.${StreamTagMarker}.tmp")
         val out = fs.create(tmp, true)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
+import graft.operators.{Dedup, DupState, Ingest, StateVersions}
 
 /** Structured Streaming surface — the Spark-native replacement for the
   * reference daemon's hourly fetch→transform→store loop
@@ -55,7 +56,6 @@ object EventStream {
     */
   def kmvDistinctStream(events: DataFrame, k: Int = 64,
       window_ : String = "10 minutes", watermark: String = "30 minutes"): DataFrame = {
-    import graft.operators.Dedup
     val h = Dedup.polyHash(events,
       concat(col("user_id").cast("string"), lit("/kmv")), Dedup.PolyB1, Dedup.PolyP1)
     events
@@ -78,7 +78,7 @@ object EventStream {
     */
   def hllDistinctStream(events: DataFrame, window_ : String = "10 minutes",
       watermark: String = "30 minutes"): DataFrame = {
-    import graft.operators.{Dedup, Stats}
+    import graft.operators.Stats
     def ph(b: Int, p: Long) = Dedup.polyHash(events,
       concat(col("user_id").cast("string"), lit("/hll")), b, p)
     val wide = ph(Dedup.PolyB1, Dedup.PolyP1) * lit(Dedup.PolyP2) +
@@ -103,7 +103,6 @@ object EventStream {
     */
   def sampleQuantilesStream(events: DataFrame, k: Int = 256,
       window_ : String = "10 minutes", watermark: String = "30 minutes"): DataFrame = {
-    import graft.operators.Dedup
     def ph(b: Int, p: Long) = Dedup.polyHash(events,
       concat(col("event_id").cast("string"), lit("/qs")), b, p)
     val w = pmod(ph(Dedup.PolyB1, Dedup.PolyP1) * lit(Dedup.PolyP2) +
@@ -138,7 +137,6 @@ object EventStream {
     */
   def cmsHeavyStream(events: DataFrame, depth: Int = 4, width: Int = 256,
       window_ : String = "10 minutes", watermark: String = "30 minutes"): DataFrame = {
-    import graft.operators.Dedup
     val h = Dedup.polyHash(events,
       concat(col("user_id").cast("string"), lit("/cms")), Dedup.PolyB1, Dedup.PolyP1)
     events
@@ -404,28 +402,18 @@ object EventStream {
     * under id-order arrival each step equals the batch advance on the
     * same rows (IngestStreamSpec). Bootstrap: write
     * `Ingest.initStates` as version ≤ the first batch id (e.g. v=0).
-    * The checkpoint must MATCH the dir's version history: a fresh
-    * checkpoint (batch ids reset to 0) against an already-advanced
-    * chain is rejected per batch
-    * ([[graft.operators.StateVersions.requireCheckpointMatch]]) —
-    * writing would overwrite low versions under higher committed ones
-    * and leave a head mixing two histories (see [[dupClusterStream]]'s
-    * contract paragraph; both sinks share the guard).
+    * Every batch first passes [[graft.operators.StateVersions.guardBatch]]:
+    * a checkpoint that does not match the dir's version history (a
+    * fresh one against an advanced chain) is rejected before anything
+    * is written.
     *
     * `keepLast` wires [[graft.operators.Ingest.compactStates]]
     * retention into the sink (VERDICT r12): without it a 24/7 stream
-    * grows one full six-table state copy per micro-batch until an
-    * operator compacts out-of-band. Compaction runs AFTER the batch's
-    * save + report both succeed, so a crashed batch leaves retention
-    * untouched and its replay still resolves `≤ batchId` within the
-    * `keepLast` newest versions. `keepLast ≥ 2` is REQUIRED here
-    * (stricter than compactStates' own ≥ 1): a replayed batch N reads
-    * version ≤ N, and after batch N's own compaction the two newest
-    * versions are {N, N+1} — keepLast = 1 would retain only N+1 and
-    * turn the next crash-replay into a loud failure. The in-flight
-    * v=batchId+1 rewrite is positionally protected (it sits above max
-    * committed until its own marker publishes), and the default grace
-    * window additionally shields any concurrent below-max rewrite.
+    * grows one state version per micro-batch until an operator
+    * compacts out-of-band. Compaction runs AFTER the batch's save +
+    * report both succeed, so a crashed batch leaves retention untouched
+    * and its replay still resolves `≤ batchId`; `keepLast ≥ 2`
+    * ([[graft.operators.StateVersions.requireSinkArgs]]).
     *
     * `deltaRebaseEvery` switches advance persistence to DELTA versions
     * ([[graft.operators.Ingest.saveStatesDelta]]): each micro-batch
@@ -454,17 +442,11 @@ object EventStream {
     * cost.
     *
     * `streamTag` (RECOMMENDED: pass the checkpoint location) pins the
-    * state dir to this stream via
-    * [[graft.operators.StateVersions.requireStreamTag]], closing the
-    * version-arithmetic guard's one-advance hole — the sink resolves
-    * the location to `<location>#<queryId>` through
-    * [[graft.operators.StateVersions.tagFromCheckpoint]], so a fresh
-    * checkpoint at another location AND a deleted-and-recreated
-    * checkpoint at the same path (Spark regenerates the query id in
-    * `<ckpt>/metadata`) are both rejected on their first batch, even
-    * when the chain has advanced only once. The arithmetic guard runs
-    * BEFORE the tag guard, so a rejected checkpoint never leaves a
-    * wrong-stream pin behind (ADVICE r16).
+    * state dir to this stream
+    * ([[graft.operators.StateVersions.requireStreamTag]]), closing the
+    * arithmetic guard's one-advance hole: a fresh checkpoint at another
+    * location and a deleted-and-recreated one at the same path are
+    * both rejected on their first batch.
     *
     * `stateBuckets` makes every FULL save this sink performs (plain
     * mode and delta-mode rebases) bucket-co-locate the key-joined
@@ -478,42 +460,15 @@ object EventStream {
       chunkWords: Int = 12, k: Int = 64, depth: Int = 4, width: Int = 256,
       keepLast: Option[Int] = None, deltaRebaseEvery: Option[Int] = None,
       stateBuckets: Option[Int] = None, streamTag: Option[String] = None) = {
-    keepLast.foreach(n => require(n >= 2,
-      s"keepLast must be ≥ 2 for the stream sink (was $n): a crash-replay of batch N loads " +
-        "version ≤ N, which keepLast = 1 compacts away right after N commits"))
-    deltaRebaseEvery.foreach(r => require(r >= 1,
-      s"deltaRebaseEvery must be ≥ 1 (was $r); 1 = rebase every batch (full saves)"))
+    StateVersions.requireSinkArgs(keepLast, "deltaRebaseEvery" -> deltaRebaseEvery)
     docs.writeStream.foreachBatch { (b: DataFrame, batchId: Long) =>
       if (!b.isEmpty) {
-        // arithmetic guard FIRST (ADVICE r16): a fresh checkpoint the
-        // arithmetic rejects must not adopt the tag on its way out —
-        // that would pin the dir to the WRONG stream and block the
-        // legitimate checkpoint's resume until the marker is deleted
-        graft.operators.StateVersions.requireCheckpointMatch(
-          b.sparkSession, stateDir, batchId, "ingest")
-        streamTag.foreach(t => graft.operators.StateVersions.requireStreamTag(
-          b.sparkSession, stateDir,
-          graft.operators.StateVersions.tagFromCheckpoint(b.sparkSession, t), "ingest"))
-        val (_, st) = graft.operators.Ingest.loadStates(b.sparkSession, stateDir, upTo = batchId)
-        val version = batchId + 1
-        val report = deltaRebaseEvery match {
-          case None =>
-            val (r, next) = graft.operators.Ingest.advanceOnce(
-              b, st, col("doc_id"), col("text"), chunkWords, k, depth, width)
-            graft.operators.Ingest.saveStates(next, stateDir, version, stateBuckets)
-            r
-          case Some(every) =>
-            val (r, next, d) = graft.operators.Ingest.advanceOnceDelta(
-              b, st, col("doc_id"), col("text"), chunkWords, k, depth, width)
-            if (version % every == 0)
-              graft.operators.Ingest.saveStates(next, stateDir, version, stateBuckets)
-            else graft.operators.Ingest.saveStatesDelta(d, stateDir, version)
-            r
-        }
-        report.withColumn("batch_id", lit(batchId))
+        val r = StateVersions.guardBatch(b.sparkSession, batchId, streamTag,
+          Ingest.family -> stateDir).head
+        Ingest.sinkStep(b, r, batchId, deltaRebaseEvery, stateBuckets, chunkWords, k, depth, width)
+          .withColumn("batch_id", lit(batchId))
           .write.mode("overwrite").parquet(s"$reportDir/batch=$batchId")
-        keepLast.foreach(n =>
-          graft.operators.Ingest.compactStates(b.sparkSession, stateDir, n))
+        keepLast.foreach(n => Ingest.compactStates(b.sparkSession, stateDir, n))
       }
     }
   }
@@ -549,53 +504,25 @@ object EventStream {
     * measured by tools/DupCompactProbe: 17 versions / 172 MB reclaimed
     * in 0.2 s with the head still serving.
     *
-    * `streamTag` (RECOMMENDED: the checkpoint location) pins the state
-    * dir to this stream and closes the checkpoint guard's one-advance
-    * hole — see [[ingestAdvanceStream]]'s paragraph; the two sinks
-    * share both guards.
-    *
-    * BOOTSTRAP/CHECKPOINT CONTRACT (ADVICE r14): the state dir must be
-    * bootstrapped at v=0 ([[graft.operators.DupState.save]] of
-    * [[graft.operators.DupState.init]]) BEFORE the stream starts, and
-    * the streaming checkpoint must match the dir's version history —
-    * the sink writes v=batchId+1, so checkpoint batch ids and dir
-    * versions advance in lockstep. Restarting with a FRESH checkpoint
-    * (batch ids reset to 0) against an already-advanced chain is
-    * rejected on the first batch
-    * ([[graft.operators.StateVersions.requireCheckpointMatch]]): it
-    * would silently overwrite low versions while higher committed
-    * versions remain, leaving a default load() reading a head that
-    * mixes two histories. To rerun from scratch, bootstrap a NEW state
-    * dir; to resume, keep the original checkpoint.
+    * `streamTag` and the checkpoint guard are [[ingestAdvanceStream]]'s.
+    * The state dir must be bootstrapped at v=0
+    * ([[graft.operators.DupState.save]] of
+    * [[graft.operators.DupState.init]]) BEFORE the stream starts
+    * (ADVICE r14). To rerun from scratch, bootstrap a NEW state dir; to
+    * resume, keep the original checkpoint.
     */
   def dupClusterStream(docs: DataFrame, stateDir: String,
       rebaseEvery: Option[Int] = None, keepLast: Option[Int] = None,
       streamTag: Option[String] = None) = {
-    keepLast.foreach(n => require(n >= 2,
-      s"keepLast must be ≥ 2 for the stream sink (was $n): a crash-replay of batch N loads " +
-        "version ≤ N, which keepLast = 1 compacts away right after N commits"))
-    rebaseEvery.foreach(r => require(r >= 1,
-      s"rebaseEvery must be ≥ 1 (was $r); 1 = rebase every batch (full saves)"))
+    StateVersions.requireSinkArgs(keepLast, "rebaseEvery" -> rebaseEvery)
     docs.writeStream.foreachBatch { (b: DataFrame, batchId: Long) =>
       if (!b.isEmpty) {
-        // arithmetic before tag — same rationale as ingestAdvanceStream
-        graft.operators.StateVersions.requireCheckpointMatch(
-          b.sparkSession, stateDir, batchId, "dup-cluster")
-        streamTag.foreach(t => graft.operators.StateVersions.requireStreamTag(
-          b.sparkSession, stateDir,
-          graft.operators.StateVersions.tagFromCheckpoint(b.sparkSession, t), "dup-cluster"))
-        val st = graft.operators.DupState.load(b.sparkSession, stateDir, upTo = batchId)._2
-        val d = graft.operators.DupState.advance(st, b, col("doc_id"), col("text"))
-        val version = batchId + 1
-        rebaseEvery match {
-          case Some(every) if version % every != 0 =>
-            graft.operators.DupState.saveDelta(d, stateDir, version)
-          case _ =>
-            graft.operators.DupState.save(
-              graft.operators.DupState.merged(st, d), stateDir, version)
-        }
-        keepLast.foreach(n =>
-          graft.operators.DupState.compact(b.sparkSession, stateDir, n))
+        val r = StateVersions.guardBatch(b.sparkSession, batchId, streamTag,
+          DupState.family -> stateDir).head
+        val st = DupState.loadResolved(r, upTo = batchId)._2
+        val d = DupState.advance(st, b, col("doc_id"), col("text"))
+        DupState.sinkSave(d, DupState.merged(st, d), stateDir, batchId + 1, rebaseEvery)
+        keepLast.foreach(n => DupState.compact(b.sparkSession, stateDir, n))
       }
     }
   }
@@ -626,9 +553,10 @@ object EventStream {
     * cancels the other's, and neither family publishes past the
     * failure (ingest's version stays unpublished if its own save
     * failed, dup's is never started or stays unpublished, and no
-    * report is written). Both guards run on BOTH dirs per batch —
-    * version arithmetic plus the `streamTag` pin, so a fresh checkpoint
-    * is rejected before either family writes anything.
+    * report is written). [[graft.operators.StateVersions.guardBatch]]
+    * guards BOTH dirs, so a fresh checkpoint is rejected before either
+    * family writes anything; its resolution of each dir serves that
+    * family's load.
     *
     * The per-batch report row is the ingest advance report plus the
     * dup head's assignment size (`n_dup_assign` — bounded by the
@@ -637,7 +565,9 @@ object EventStream {
     * layers plus this batch's comp delta, latest wins
     * ([[graft.operators.DupState.merged]], the frame a rebase writes),
     * which is exactly what the head just published serves; the head
-    * is never reloaded. Retention (`keepLast`) compacts
+    * is never reloaded. On a rebase version that merged assignment is
+    * materialized once, in dup's leg, and both the save and the count
+    * read it. Retention (`keepLast`) compacts
     * both dirs after the batch's saves + report all succeed.
     *
     * Rebase cadences are per-family ([[IngestRebaseRecommended]] /
@@ -651,67 +581,41 @@ object EventStream {
       width: Int = 256, keepLast: Option[Int] = None,
       ingestRebaseEvery: Option[Int] = None, dupRebaseEvery: Option[Int] = None,
       stateBuckets: Option[Int] = None, streamTag: Option[String] = None) = {
-    keepLast.foreach(n => require(n >= 2,
-      s"keepLast must be ≥ 2 for the stream sink (was $n): a crash-replay of batch N loads " +
-        "version ≤ N, which keepLast = 1 compacts away right after N commits"))
-    (ingestRebaseEvery.toSeq ++ dupRebaseEvery).foreach(r => require(r >= 1,
-      s"rebase cadence must be ≥ 1 (was $r); 1 = rebase every batch (full saves)"))
-    import graft.operators.{Dedup, DupState, Ingest, StateVersions}
+    StateVersions.requireSinkArgs(keepLast,
+      "ingestRebaseEvery" -> ingestRebaseEvery, "dupRebaseEvery" -> dupRebaseEvery)
     docs.writeStream.foreachBatch { (b: DataFrame, batchId: Long) =>
       if (!b.isEmpty) {
         val sp = b.sparkSession
-        // both guards on BOTH dirs before either family writes —
-        // BOTH arithmetic checks before EITHER tag adoption (ADVICE
-        // r16): an arithmetic rejection on either dir must not leave
-        // a wrong-stream pin behind on the other
-        StateVersions.requireCheckpointMatch(sp, ingestStateDir, batchId, "ingest")
-        StateVersions.requireCheckpointMatch(sp, dupStateDir, batchId, "dup-cluster")
-        streamTag.foreach { t =>
-          val tag = StateVersions.tagFromCheckpoint(sp, t)
-          StateVersions.requireStreamTag(sp, ingestStateDir, tag, "ingest")
-          StateVersions.requireStreamTag(sp, dupStateDir, tag, "dup-cluster")
-        }
+        // both guards on BOTH dirs before either family writes
+        val Seq(ir, dr) = StateVersions.guardBatch(sp, batchId, streamTag,
+          Ingest.family -> ingestStateDir, DupState.family -> dupStateDir)
         val version = batchId + 1
+        val dupRebase = StateVersions.rebaseAt(version, dupRebaseEvery)
         // the two families' load + advance run as the two legs of one
         // par2: neither advance reads the other's state. Ingest's leg
         // also saves, then computes its report's one row; dup's leg
-        // computes the comp delta once, for the save and the count below
-        val (reportRow, (dst, dd)) = StateVersions.par2({
-          val (_, ist) = Ingest.loadStates(sp, ingestStateDir, upTo = batchId)
-          val report = ingestRebaseEvery match {
-            case None =>
-              val (r, next) = Ingest.advanceOnce(b, ist, col("doc_id"), col("text"),
-                chunkWords, k, depth, width)
-              Ingest.saveStates(next, ingestStateDir, version, stateBuckets)
-              r
-            case Some(every) =>
-              val (r, next, d) = Ingest.advanceOnceDelta(b, ist, col("doc_id"), col("text"),
-                chunkWords, k, depth, width)
-              if (version % every == 0)
-                Ingest.saveStates(next, ingestStateDir, version, stateBuckets)
-              else Ingest.saveStatesDelta(d, ingestStateDir, version)
-              r
-          }
+        // materializes the comp delta once and, on a rebase version, the
+        // merged assignment once — the save and the count below read them
+        val (reportRow, (dd, full)) = StateVersions.par2({
+          val report = Ingest.sinkStep(b, ir, batchId, ingestRebaseEvery, stateBuckets,
+            chunkWords, k, depth, width)
           // materialized here, while dup's leg still runs
           sp.createDataFrame(java.util.Arrays.asList(report.collect(): _*), report.schema)
         }, {
-          val dst = DupState.load(sp, dupStateDir, upTo = batchId)._2
-          val dd = DupState.advance(dst, b, col("doc_id"), col("text"))
-          (dst, dd.copy(comp = Dedup.stageEager(dd.comp)))
+          val dst = DupState.loadResolved(dr, upTo = batchId)._2
+          val d = DupState.advance(dst, b, col("doc_id"), col("text"))
+          val dd = d.copy(comp = Dedup.stageEager(d.comp))
+          // the head dup publishes below: the loaded comp layers plus the
+          // delta, latest wins (the frame a rebase writes)
+          val full = DupState.merged(dst, dd)
+          (dd, if (dupRebase) full.copy(comp = Dedup.stageEager(full.comp)) else full)
         })
-        // the head dup publishes below: the loaded comp layers plus the
-        // delta, latest wins (the frame a rebase writes)
-        val full = DupState.merged(dst, dd)
         // dup's save starts only after ingest's v=version committed
         // (the documented save order) — a crash or a failed leg above
         // leaves this dir at version - 1 and the replay converges both
         // (DailyCycleSpec). The head's size is counted alongside
         val (_, nDup) = StateVersions.par2(
-          dupRebaseEvery match {
-            case Some(every) if version % every != 0 =>
-              DupState.saveDelta(dd, dupStateDir, version)
-            case _ => DupState.save(full, dupStateDir, version)
-          },
+          DupState.sinkSave(dd, full, dupStateDir, version, dupRebaseEvery),
           full.comp.count())
         reportRow.withColumn("batch_id", lit(batchId))
           .withColumn("n_dup_assign", lit(nDup))

@@ -21,45 +21,42 @@
 package graft.tools
 
 import org.apache.hadoop.fs.Path
-import graft.operators.StateVersions
+import graft.operators.{DupState, Ingest, StateVersions}
 
 object StateAdmin {
+
+  private val families = Seq(Ingest.family, DupState.family)
+
+  /** `dir` resolved against both families, or why it is not a state dir. */
+  private def resolveDir(spark: org.apache.spark.sql.SparkSession,
+      dir: String): Either[String, StateVersions.Resolved] = {
+    val r = StateVersions.resolve(spark, dir, families: _*)
+    if (r.versions.isEmpty) Left(s"no v=N dirs under $dir — not a state dir or never bootstrapped")
+    else if (r.family.isEmpty) Left(s"$dir matches neither state family " +
+      s"(no ${families.map(_.classifier).mkString("/")} dirs)")
+    else Right(r)
+  }
 
   /** The `--check` rules, separated from main so a spec can drive
     * both outcomes without trapping `sys.exit`. Returns one message
     * per failed check; empty = healthy (exit 0).
     */
   def check(spark: org.apache.spark.sql.SparkSession, dir: String,
-      debrisGraceMs: Long): Seq[String] = {
-    val fs = StateVersions.fsOf(spark, dir)
-    val all = StateVersions.listVersionDirs(spark, dir).sortBy(_._1)
-    if (all.isEmpty) return Seq(s"no v=N dirs under $dir — not a state dir or never bootstrapped")
-    val classifier = Seq("keepers", "comp").find { t =>
-      all.exists { case (v, _) =>
-        fs.exists(new Path(s"$dir/v=$v/$t")) || fs.exists(new Path(s"$dir/v=$v/$t.d"))
-      }
-    }.getOrElse(return Seq(s"$dir matches neither state family (no keepers/comp dirs)"))
-    val fulls = StateVersions.layoutVersions(spark, dir, classifier).toSet
-    val committed = all.collect { case (v, true) => v }
-    val chainFail = StateVersions.chain(committed, fulls) match {
-      case None => Seq(s"chain UNREADABLE under $dir: no committed full base ≤ the head " +
-        "(base removed externally?) — rebuild with a full save")
-      case Some(_) => Seq.empty
-    }
-    val cutoff = System.currentTimeMillis() - debrisGraceMs
-    val staleDebris = if (committed.isEmpty) Seq.empty[String] else all.toSeq.collect {
-      case (v, false) if v < committed.max &&
-          fs.getFileStatus(new Path(s"$dir/v=$v")).getModificationTime <= cutoff =>
-        s"stale crash debris v=$v under $dir (uncommitted, below max committed " +
-          s"v=${committed.max}, untouched past the grace window) — compact() reclaims it"
-    }
-    val tagP = new Path(s"$dir/${StateVersions.StreamTagMarker}")
-    val tagFail =
-      if (fs.exists(tagP) && fs.getFileStatus(tagP).getLen == 0)
-        Seq(s"empty ${StateVersions.StreamTagMarker} under $dir: a tag adoption crashed " +
-          "mid-publish; the next guarded batch rewrites it, but until then the dir is unpinned")
-      else Seq.empty
-    chainFail ++ staleDebris ++ tagFail
+      debrisGraceMs: Long): Seq[String] = resolveDir(spark, dir) match {
+    case Left(notState) => Seq(notState)
+    case Right(r) =>
+      val chainFail = if (r.chainAt().nonEmpty) Nil else Seq(s"chain UNREADABLE under $dir: " +
+        "no committed full base ≤ the head (base removed externally?) — rebuild with a full save")
+      val cutoff = System.currentTimeMillis() - debrisGraceMs
+      val staleDebris = r.debris.filter(_.mtime <= cutoff).map(x =>
+        s"stale crash debris v=${x.v} under $dir (uncommitted, below max committed " +
+          s"v=${r.committed.last}, untouched past the grace window) — compact() reclaims it")
+      val tagFail =
+        if (StateVersions.readStreamTag(r.fs, dir).contains(""))
+          Seq(s"empty ${StateVersions.StreamTagMarker} under $dir: a tag adoption crashed " +
+            "mid-publish; the next guarded batch rewrites it, but until then the dir is unpinned")
+        else Nil
+      chainFail ++ staleDebris ++ tagFail
   }
 
   def main(args: Array[String]): Unit = {
@@ -77,52 +74,30 @@ object StateAdmin {
       spark.stop()
       sys.exit(if (failures.isEmpty) 0 else 1)
     }
-    val fs = StateVersions.fsOf(spark, dir)
-
-    val all = StateVersions.listVersionDirs(spark, dir).sortBy(_._1)
-    require(all.nonEmpty, s"no v=N dirs under $dir")
-    // family auto-detect by full-layout classifier table presence
-    val classifier = Seq("keepers", "comp").find { t =>
-      all.exists { case (v, _) =>
-        fs.exists(new Path(s"$dir/v=$v/$t")) || fs.exists(new Path(s"$dir/v=$v/$t.d"))
-      }
-    }.getOrElse(sys.error(s"$dir matches neither state family (no keepers/comp dirs)"))
-    val family = if (classifier == "keepers") "ingest" else "dup-cluster"
-    val fulls = StateVersions.layoutVersions(spark, dir, classifier).toSet
-
-    def duMb(p: Path): Double =
-      if (!fs.exists(p)) 0.0
-      else fs.getContentSummary(p).getLength / 1e6
-    val committed = all.collect { case (v, true) => v }
-    val rows = all.map { case (v, ok) =>
-      val p = new Path(s"$dir/v=$v")
-      val layout = if (fulls(v)) "full" else "delta"
-      val debris = !ok && committed.nonEmpty && v < committed.max
-      (v, ok, layout, duMb(p), fs.getFileStatus(p).getModificationTime, debris)
-    }
-    val chain = StateVersions.chain(committed, fulls)
-    val tagP = new Path(s"$dir/${StateVersions.StreamTagMarker}")
-    val tag = if (!fs.exists(tagP)) None else {
-      val in = fs.open(tagP)
-      try Some(new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8"))
-      finally in.close()
-    }
+    val r = resolveDir(spark, dir) match { case Right(r) => r; case Left(e) => sys.error(e) }
+    val mb = r.versions.map { x =>
+      val p = new Path(s"$dir/v=${x.v}")
+      x.v -> (if (!r.fs.exists(p)) 0.0 else r.fs.getContentSummary(p).getLength / 1e6)
+    }.toMap
+    val debris = r.debris.map(_.v).toSet
 
     def fmt(v: Double) = String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
-    println(f"family=$family%s dir=$dir%s stream_tag=${tag.getOrElse("-")}%s")
+    val tag = StateVersions.readStreamTag(r.fs, dir).getOrElse("-")
+    println(f"family=${r.family.get.name}%s dir=$dir%s stream_tag=$tag%s")
     println(f"${"v"}%6s ${"state"}%-11s ${"layout"}%-6s ${"MB"}%8s  mtime")
-    rows.foreach { case (v, ok, layout, mb, mt, debris) =>
-      val state = if (ok) "committed" else if (debris) "DEBRIS?" else "in-flight"
-      println(f"$v%6d $state%-11s $layout%-6s ${fmt(mb)}%8s  ${new java.sql.Timestamp(mt)}")
+    r.versions.foreach { x =>
+      val state = if (x.committed) "committed" else if (debris(x.v)) "DEBRIS?" else "in-flight"
+      val layout = if (x.full) "full" else "delta"
+      println(f"${x.v}%6d $state%-11s $layout%-6s ${fmt(mb(x.v))}%8s  ${new java.sql.Timestamp(x.mtime)}")
     }
-    chain match {
-      case Some((head, base, deltas)) =>
-        println(s"default load: head v=$head = base v=$base" +
-          (if (deltas.isEmpty) "" else deltas.mkString(" + deltas [", ",", "]")))
+    r.chainAt() match {
+      case Some(c) =>
+        println(s"default load: head v=${c.head} = base v=${c.base}" +
+          (if (c.deltas.isEmpty) "" else c.deltas.mkString(" + deltas [", ",", "]")))
       case None =>
         println("default load: UNREADABLE — no committed full base (rebuild with a full save)")
     }
-    val reclaimable = rows.collect { case (v, _, _, mb, _, true) => mb }.sum
+    val reclaimable = debris.toSeq.map(mb).sum
     if (reclaimable > 0)
       println(s"debris candidates: ${fmt(reclaimable)} MB (compact() sweeps them after the grace window)")
     spark.stop()

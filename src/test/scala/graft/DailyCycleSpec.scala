@@ -396,12 +396,13 @@ class DailyCycleSpec extends SparkSpecBase {
     }
     assert(jobs == 0, s"the loads at v=$upTo ran $jobs Spark job(s)")
     def plain(paths: String*) = spark.read.parquet(paths: _*).schema
-    def chainOf(dir: String, classifier: String) = StateVersions.chain(
-      StateVersions.listVersions(spark, dir).filter(_ <= upTo),
-      StateVersions.layoutVersions(spark, dir, classifier).toSet).get
+    def chainOf(dir: String, family: StateVersions.Family) = {
+      val c = StateVersions.resolve(spark, dir, family).chainAt(upTo).get
+      (c.head, c.base, c.deltas)
+    }
     def same(got: DataFrame, exp: StructType, what: String) =
       assert(got.schema == exp, s"$what at v=$upTo: ${got.schema.toDDL} != ${exp.toDDL}")
-    val (ih, ib, ids) = chainOf(ingDir, "keepers")
+    val (ih, ib, ids) = chainOf(ingDir, Ingest.family)
     def ingPaths(t: String) = s"$ingDir/v=$ib/$t" +: ids.map(v => s"$ingDir/v=$v/$t.d")
     Seq("keepers" -> ing.keepers, "sigs" -> ing.sigs, "ng3" -> ing.ng3, "ng8" -> ing.ng8)
       .foreach { case (t, df) => same(df, plain(ingPaths(t): _*), s"ingest $t") }
@@ -412,7 +413,7 @@ class DailyCycleSpec extends SparkSpecBase {
         layers.zip(ingPaths(t)).foreach { case (df, p) => same(df, plain(p), s"ingest $t layer $p") }
       }
     }
-    val (_, db, dds) = chainOf(dupDir, "comp")
+    val (_, db, dds) = chainOf(dupDir, DupState.family)
     def dupPaths(t: String) = s"$dupDir/v=$db/$t" +: dds.map(v => s"$dupDir/v=$v/$t.d")
     Seq("bands" -> dup.bands, "ngr" -> dup.ngr, "sizes" -> dup.sizes)
       .foreach { case (t, df) => same(df, plain(dupPaths(t): _*), s"dup $t") }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.operators.{Dedup, DupState}
+import graft.operators.{Dedup, DupState, StateVersions}
 import graft.streaming.EventStream
 
 /** Persisted dup-cluster subsystem lifecycle: a chain of DupState delta
@@ -99,14 +99,20 @@ class DupStateSpec extends SparkSpecBase {
 
   test("layout crossover removes the stale opposite layout") {
     val dir = tmp("cross")
+    // the pinned on-disk layouts of the two version shapes
+    val fullTree = committedTree(Seq("bands", "ngr", "sizes", "comp"))
+    val deltaTree = committedTree(Seq("bands.d", "ngr.d", "sizes.d", "comp.d"))
     DupState.save(DupState.init(corpus, col("doc_id"), col("text")), dir, 0L)
+    assert(versionTree(dir, 0L) == fullTree)
     val b1 = docs((100L, baseText(4)))
     val st0 = DupState.load(spark, dir, upTo = 0L)._2
     val d1 = DupState.advance(st0, b1, col("doc_id"), col("text"))
     // delta at v=1, then a FULL rewrite at the same version (the
     // crashed-save-replayed-as-rebase shape): the delta dirs must go
     DupState.saveDelta(d1, dir, 1L)
+    assert(versionTree(dir, 1L) == deltaTree)
     DupState.save(DupState.merged(st0, d1), dir, 1L)
+    assert(versionTree(dir, 1L) == fullTree)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/v=1/comp.d")))
@@ -114,6 +120,7 @@ class DupStateSpec extends SparkSpecBase {
     // and back: a delta rewrite over the full layout removes full dirs
     DupState.saveDelta(d1, dir, 1L)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/v=1/comp")))
+    assert(versionTree(dir, 1L) == deltaTree)
     assert(labels(DupState.load(spark, dir, upTo = 1L)._2.comp) == full)
   }
 
@@ -130,7 +137,7 @@ class DupStateSpec extends SparkSpecBase {
     // keepLast=2 would cut at v=2, but v=2 is a delta whose base is
     // v=0: the floor slides to v=0 and nothing is deleted
     DupState.compact(spark, dir, keepLast = 2)
-    assert(DupState.listVersions(spark, dir).sorted.toSeq == Seq(0L, 1L, 2L, 3L))
+    assert(StateVersions.resolve(spark, dir, DupState.family).committed == Seq(0L, 1L, 2L, 3L))
     // rebase at v=4 and one delta above it: the floor (v=4) is now a
     // full base, so everything below reclaims
     val d4 = DupState.advance(st, docs((300L, baseText(20))), col("doc_id"), col("text"))
@@ -139,7 +146,7 @@ class DupStateSpec extends SparkSpecBase {
     DupState.saveDelta(DupState.advance(st4, docs((301L, baseText(21))),
       col("doc_id"), col("text")), dir, 5L)
     DupState.compact(spark, dir, keepLast = 2)
-    assert(DupState.listVersions(spark, dir).sorted.toSeq == Seq(4L, 5L))
+    assert(StateVersions.resolve(spark, dir, DupState.family).committed == Seq(4L, 5L))
     assert(labels(DupState.load(spark, dir)._2.comp).nonEmpty)
     // external damage: remove the base, leave its deltas — compaction
     // must refuse loudly rather than delete the remaining evidence
@@ -151,7 +158,7 @@ class DupStateSpec extends SparkSpecBase {
     fs.delete(new org.apache.hadoop.fs.Path(s"$dir/v=4"), true)
     val e = intercept[IllegalArgumentException](DupState.compact(spark, dir, keepLast = 1))
     assert(e.getMessage.contains("refusing to compact"))
-    assert(DupState.listVersions(spark, dir).sorted.toSeq == Seq(5L, 6L))
+    assert(StateVersions.resolve(spark, dir, DupState.family).committed == Seq(5L, 6L))
   }
 
   test("streaming sink: three micro-batches with a rebase equal the from-scratch run") {
@@ -173,7 +180,7 @@ class DupStateSpec extends SparkSpecBase {
       labels(Dedup.dedupClusters(all, col("doc_id"), col("text"))))
     assert(DupState.load(spark, dir)._1 == 3L)
     // v=2 was the rebase (full layout), v=3 a delta above it
-    assert(DupState.listFullVersions(spark, dir).max == 2L)
+    assert(StateVersions.resolve(spark, dir, DupState.family).chainAt().get.base == 2L)
   }
 
   test("a zero-divisor shingle-hash collision drops the pair instead of killing the job") {

@@ -41,6 +41,11 @@ class IngestDeltaSpec extends SparkSpecBase {
     rows.toDF("doc_id", "text")
   }
 
+  // the pinned on-disk layouts of the two version shapes
+  private val fullTree = committedTree(Seq("keepers", "sigs", "ng3", "ng8", "kmv", "cms"))
+  private val deltaTree =
+    committedTree(Seq("keepers.d", "sigs.d", "ng3.d", "ng8.d", "kmv", "cms"))
+
   private def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame,
       tag: String): Unit =
     assert(a.except(b).isEmpty && b.except(a).isEmpty, s"$tag diverged")
@@ -147,6 +152,7 @@ class IngestDeltaSpec extends SparkSpecBase {
     val fs = new org.apache.hadoop.fs.Path(bucketDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$bucketDir/v=0/${Ingest.BucketsMarker}")))
+    assert(versionTree(bucketDir, 0L) == fullTree + "_BUCKETS")
     assert(fs.globStatus(new org.apache.hadoop.fs.Path(s"$bucketDir/v=0/ng8/*_00003*")).nonEmpty,
       "bucketed ng8 base missing bucket-suffixed files")
     (1L to 2L).foreach { v =>
@@ -161,12 +167,14 @@ class IngestDeltaSpec extends SparkSpecBase {
         s"advance $v report diverged between plain and bucketed-layered state")
       Ingest.saveStatesDelta(dP, plainDir, v)
       Ingest.saveStatesDelta(dB, bucketDir, v)
+      assert(versionTree(bucketDir, v) == deltaTree)
     }
     sameStates(Ingest.loadStates(spark, plainDir)._2, Ingest.loadStates(spark, bucketDir)._2)
     // a plain rewrite of the bucketed base drops the layout marker —
     // a later load must not trust stale bucket metadata
     Ingest.saveStates(st0, bucketDir, 0L)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$bucketDir/v=0/${Ingest.BucketsMarker}")))
+    assert(versionTree(bucketDir, 0L) == fullTree)
     assert(Ingest.loadStates(spark, bucketDir)._2.layers.isEmpty)
   }
 
@@ -175,6 +183,7 @@ class IngestDeltaSpec extends SparkSpecBase {
       java.nio.file.Files.createTempDirectory("graft_delta_xover").toString
     val st0 = Ingest.initStates(corpusDf, col("doc_id"), col("text"), kw, k, depth, width)
     Ingest.saveStates(st0, dirUri, 0L)
+    assert(versionTree(dirUri, 0L) == fullTree)
     val (_, next1, d1) = Ingest.advanceOnceDelta(batchDf(1), st0, col("doc_id"), col("text"),
       kw, k, depth, width)
     // crashed FULL save at v=1: full tables land (with _SUCCESS), no marker —
@@ -189,6 +198,7 @@ class IngestDeltaSpec extends SparkSpecBase {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dirUri/v=1/keepers")),
       "stale full-layout keepers dir survived a delta rewrite")
+    assert(versionTree(dirUri, 1L) == deltaTree)
     val (v1, loaded) = Ingest.loadStates(spark, dirUri)
     assert(v1 == 1L)
     sameStates(loaded, next1)
@@ -200,6 +210,7 @@ class IngestDeltaSpec extends SparkSpecBase {
     Ingest.saveStates(next2, dirUri, 2L)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dirUri/v=2/ng3.d")),
       "stale delta-layout ng3.d dir survived a full rewrite")
+    assert(versionTree(dirUri, 2L) == fullTree)
     sameStates(Ingest.loadStates(spark, dirUri)._2, next2)
   }
 

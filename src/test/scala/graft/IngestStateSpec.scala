@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Ingest
+import graft.operators.{Ingest, StateVersions}
 
 /** The state family's persistence contract on its own filesystem API:
   * version discovery goes through the Hadoop FileSystem of the dir's
@@ -91,7 +91,7 @@ class IngestStateSpec extends SparkSpecBase {
     st.kmv.write.parquet(s"$dirUri/v=2/extra_junk") // inside a committed dir: untouched
     val fs = new org.apache.hadoop.fs.Path(dirUri)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dirUri/v=1/${Ingest.CommitMarker}"), false)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$dirUri/v=1/${StateVersions.CommitMarker}"), false)
     // v=1 is now an unmarked (crashed-looking) dir below max committed (3)
     // debris ABOVE the newest committed version: possibly in-flight, kept
     st.kmv.write.parquet(s"$dirUri/v=9/kmv")
@@ -115,7 +115,7 @@ class IngestStateSpec extends SparkSpecBase {
     // simulate a time-travel rewrite of in-retention v=2 caught mid-write:
     // saveStates un-publishes first, so the dir is unmarked below max —
     // positionally identical to crashed debris, but freshly modified
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dirUri/v=2/${Ingest.CommitMarker}"), false)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$dirUri/v=2/${StateVersions.CommitMarker}"), false)
     val deleted = Ingest.compactStates(spark, dirUri, keepLast = 4)
     assert(deleted.isEmpty, s"fresh below-max rewrite swept: $deleted")
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dirUri/v=2")))
@@ -151,7 +151,7 @@ class IngestStateSpec extends SparkSpecBase {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // strip every marker: the family now looks pre-upgrade
     (0L to 3L).foreach(v =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dirUri/v=$v/${Ingest.CommitMarker}"), false))
+      fs.delete(new org.apache.hadoop.fs.Path(s"$dirUri/v=$v/${StateVersions.CommitMarker}"), false))
     // and make v=3 INCOMPLETE (one table's _SUCCESS gone = crashed save)
     fs.delete(new org.apache.hadoop.fs.Path(s"$dirUri/v=3/sigs/_SUCCESS"), false)
     val e = intercept[IllegalArgumentException] { Ingest.loadStates(spark, dirUri) }
@@ -225,5 +225,25 @@ class IngestStateSpec extends SparkSpecBase {
     // v=1 alone, uncommitted → no committed version at all
     val f3 = StateAdmin.check(spark, dirUri, grace)
     assert(f3.nonEmpty, "a chain with no committed base must fail the check")
+    // the dup-cluster family goes through the same check: a bootstrapped
+    // base plus two delta advances is healthy, aged debris is flagged
+    val sp = spark
+    import sp.implicits._
+    import graft.operators.DupState
+    val dupUri = "file://" +
+      java.nio.file.Files.createTempDirectory("graft_state_check_dup").toString
+    val docs = (0 until 4).map(i => (i.toLong, novelText(i))).toDF("doc_id", "text")
+    DupState.save(DupState.init(docs, col("doc_id"), col("text")), dupUri, 0L)
+    (1L to 2L).foreach { v =>
+      val st = DupState.load(spark, dupUri, upTo = v - 1)._2
+      val batch = Seq((100L + v, novelText(0))).toDF("doc_id", "text")
+      DupState.saveDelta(DupState.advance(st, batch, col("doc_id"), col("text")), dupUri, v)
+    }
+    assert(StateAdmin.check(spark, dupUri, grace).isEmpty)
+    val dupDebris = new java.io.File(dupUri.stripPrefix("file://"), "v=1")
+    assert(new java.io.File(dupDebris, "_COMMITTED").delete())
+    assert(dupDebris.setLastModified(System.currentTimeMillis() - 2 * grace))
+    val f4 = StateAdmin.check(spark, dupUri, grace)
+    assert(f4.exists(_.contains("stale crash debris v=1")), s"got: $f4")
   }
 }

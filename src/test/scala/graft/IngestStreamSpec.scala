@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.operators.Ingest
+import graft.operators.{Ingest, StateVersions}
 import graft.streaming.EventStream
 import java.sql.Timestamp
 
@@ -128,7 +128,7 @@ class IngestStreamSpec extends SparkSpecBase {
     } finally q.stop()
 
     // batches 0..2 saved v=1..3; retention kept the newest two: {2, 3}
-    assert(Ingest.listVersions(sp, stateDir).sorted.toSeq == Seq(2L, 3L))
+    assert(StateVersions.resolve(sp, stateDir, Ingest.family).committed == Seq(2L, 3L))
     // a crash-replay of the LAST batch (id 2, the only one foreachBatch
     // can replay) loads version ≤ 2 — still within retention
     assert(Ingest.loadStates(sp, stateDir, upTo = 2L)._1 == 2L)
