@@ -221,47 +221,6 @@ object Dedup {
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager = true)
     else df.localCheckpoint(eager = true)
 
-  /** Forked session for the CC loops, with the AQE posture pinned
-    * SESSION-LOCALLY per variant (measured A/B at sf0.1):
-    *
-    *  - `aqeOn = false` — min-label PROPAGATION. Its round join keys a
-    *    PERSISTED edge table (InMemoryRelation, accurate stats) against
-    *    the label table, so the static planner already broadcasts the
-    *    edges; AQE adds only per-stage materialization latency —
-    *    measured ~2× the whole round at sf0.1 (q53 1.53 s off vs
-    *    2.88 s on).
-    *  - `aqeOn = true` — STAR CONTRACTION. Every round's grouped-min
-    *    joins run over localCheckpoint leaves (LogicalRDD, UNKNOWN
-    *    stats → defaultSizeInBytes), so without AQE they plan as
-    *    sort-merge joins every round; AQE's runtime stats convert them
-    *    to broadcast/coalesced shapes (q74 7.45 s on vs 10.94 s off —
-    *    1.47×), and at 100 TB the same mechanism is the right one: AQE
-    *    decides from ACTUAL round sizes, where a static broadcast hint
-    *    on a corpus-sized min-table would OOM.
-    *
-    * The old implementation toggled the CALLER session's conf and
-    * restored it after the loop, which leaked AQE-off into any job
-    * overlapped on the same session (r17 verdict #2: every par2
-    * measurement was unstable for that reason) — and carried an
-    * unmeasured `GRAFT_CC_AQE_ON` env escape hatch, now deleted in
-    * favor of the measured per-variant defaults above. `newSession()`
-    * gives the loop an isolated SQLConf while sharing the
-    * SparkContext, the block-manager cache and the CacheManager, so
-    * persisted edge tables still substitute. Plans cross the session
-    * boundary zero-copy via [[org.apache.spark.sql.GraftPlanBridge]];
-    * results transplant BACK to the caller's session so downstream
-    * consumers never inherit the loop conf.
-    */
-  private def ccLoopSession(spark: org.apache.spark.sql.SparkSession,
-      aqeOn: Boolean): org.apache.spark.sql.SparkSession = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.adaptive.enabled", aqeOn.toString)
-    s
-  }
-
-  private def transplant(target: org.apache.spark.sql.SparkSession, df: DataFrame): DataFrame =
-    org.apache.spark.sql.GraftPlanBridge.transplant(target, df)
-
   /** Exact duplicate groups by md5 content hash. Returns one row per
     * duplicated content: (keep_id = min doc id, n_copies).
     */
@@ -1157,53 +1116,86 @@ object Dedup {
     * smaller one (both leaves of a star survive), so how much survives
     * depends on which edges LSH happened to emit; clustering gives the
     * production contract — exactly ONE representative per connected
-    * component, edge-set-stable.
+    * component, edge-set-stable. Every endpoint gets a row (a node seen
+    * only in self-loops is its own cluster); both columns are longs.
     *
-    * Pregel-style min-label propagation: each round is ONE shuffle
-    * (edges ⋈ labels on the 8-byte id, groupBy min) and converges in
-    * O(cluster diameter) rounds. Near-dup clusters are shallow — copies
-    * radiate from a common source — so 3-5 rounds in practice; the
-    * alternating small-star/large-star formulation (Kiveris et al.,
-    * "Connected Components in MapReduce") — implemented below as
-    * connectedComponentsStar — drops that to O(log d) if a
-    * pathological chain corpus ever shows up. The per-round convergence
-    * check aggregates to a SCALAR on the driver (no data collect);
-    * every round's label table is localCheckpoint'ed — persist alone
-    * keeps the LOGICAL plan growing (each round references the
-    * previous labels twice, so analysis cost doubles per round and
-    * OOMs the driver near round ~20; found by CcProbe on a deep
-    * chain), while the checkpoint pins each round to a constant-size
-    * block-backed plan. The convergence scan materializes it anyway.
+    * One entry point whose plan is chosen from the size observed once
+    * the pairs are materialized (Shark's partial-DAG rule). The pairs
+    * are persisted and counted; if the worst-case label table — 2 ×
+    * edges × 16 B — fits under the session's
+    * `spark.sql.autoBroadcastJoinThreshold`, the edges stream to the
+    * driver and a min-root union-find labels them there
+    * ([[unionFindLabels]]), returned as a local relation in the
+    * caller's session. The driver then holds at most the budget Spark
+    * already grants one broadcast relation: 16 B per edge of endpoints,
+    * a sorted copy of them and a 4-byte parent per node (≤ 1.25 × the
+    * threshold), plus the label table itself. Near-dup graphs are
+    * batch- or pair-set-sized, so this is the common path. Larger
+    * graphs run [[connectedComponentsStar]]'s O(log d) rounds in the
+    * caller's session, whose AQE (pinned on by every graft profile)
+    * plans the per-round joins from runtime sizes.
     */
-  def connectedComponents(pairs: DataFrame, maxRounds: Int = 25): DataFrame = {
-    val (labels, converged) = ccPropagateWithStatus(pairs, maxRounds)
-    // Partial labels are a silent-wrong-answer at scale: a
-    // templated-drift chain deeper than maxRounds would ship wrong
-    // cluster representatives with no error (CcProbe: 25 rounds label
-    // 26 of 200k nodes on a chain graph). No caller wants partial
-    // labels — raise, and point at the self-escalating variant.
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponents did not converge within $maxRounds rounds: the pair graph's " +
-        "diameter exceeds the round budget and the labels would be silently partial. " +
-        "Use connectedComponentsAuto (escalates to O(log d) star contraction) or raise maxRounds.")
-    labels
+  def connectedComponents(pairs: DataFrame): DataFrame = ccWithPath(pairs)._1
+
+  /** [[connectedComponents]] plus whether it finished on the driver
+    * (false: star rounds) — for specs.
+    */
+  private[graft] def ccWithPath(pairs: DataFrame): (DataFrame, Boolean) =
+    withCountedPairs(pairs) { (pr, nEdges) =>
+      // the array bound keeps 2 × edges inside one JVM array index
+      if (2L * nEdges * 16L <= pr.sparkSession.sessionState.conf.autoBroadcastJoinThreshold &&
+          nEdges < (1L << 30)) (unionFindLabels(pr, nEdges.toInt), true)
+      else (starRounds(pr, nEdges, StarMaxRounds)._1, false)
+    }
+
+  private val StarMaxRounds = 20
+
+  /** Persist `pairs` as long (id_a, id_b), count it and run `body` on
+    * both; unpersists after — neither CC finish reads the pairs once
+    * it returns (a local relation, or star's checkpointed labels).
+    */
+  private def withCountedPairs[A](pairs: DataFrame)(body: (DataFrame, Long) => A): A = {
+    val pr = pairs
+      .select(col("id_a").cast("long").as("id_a"), col("id_b").cast("long").as("id_b"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try body(pr, pr.count()) finally pr.unpersist()
   }
 
-  /** Diameter-adaptive connected components: run min-label propagation
-    * (the measured winner on shallow near-dup graphs — CcProbe: 1.96 s
-    * vs 5.87 s star at sf1) for up to `probeRounds` rounds; if the
-    * label sum has not reached its fixed point by then, the graph has
-    * real diameter (templated-drift chains) and the O(log d) star
-    * contraction takes over FROM SCRATCH on the same edges. Propagation
-    * alone silently returns partially-propagated labels when diameter >
-    * maxRounds (the 200k-node chain probe labeled 26 of 200k nodes in
-    * 25 rounds) — this wrapper makes the escalation automatic instead
-    * of a caller judgment, at the bounded cost of the probe rounds.
-    * `pairs` is persisted here because both phases may consume it.
+  /** Min-root union-find over the counted pairs, on the driver. The
+    * edges stream in one partition at a time (`toLocalIterator`) into
+    * one primitive array of endpoints; a sorted, deduplicated copy is
+    * the node table, so node index order is id order, and every union
+    * hangs the larger root under the smaller — each root is its
+    * component's minimum id. Path halving keeps `find` near-constant.
     */
-  def connectedComponentsAuto(pairs: DataFrame, probeRounds: Int = 8,
-      starMaxRounds: Int = 20): DataFrame =
-    ccAutoWithPath(pairs, probeRounds, starMaxRounds)._1
+  private def unionFindLabels(pr: DataFrame, nEdges: Int): DataFrame = {
+    val ends = new Array[Long](2 * nEdges)
+    val it = pr.toLocalIterator()
+    var e = 0
+    while (it.hasNext) {
+      val r = it.next()
+      ends(e) = r.getLong(0); ends(e + 1) = r.getLong(1); e += 2
+    }
+    val nodes = ends.clone()
+    java.util.Arrays.sort(nodes)
+    var m = 0
+    for (i <- nodes.indices) if (i == 0 || nodes(i) != nodes(i - 1)) { nodes(m) = nodes(i); m += 1 }
+    val parent = Array.tabulate(m)(identity)
+    def find(x: Int): Int = {
+      var y = x
+      while (parent(y) != y) { parent(y) = parent(parent(y)); y = parent(y) }
+      y
+    }
+    def root(id: Long): Int = find(java.util.Arrays.binarySearch(nodes, 0, m, id))
+    for (k <- 0 until e by 2) {
+      val (ra, rb) = (root(ends(k)), root(ends(k + 1)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    val rows = new java.util.ArrayList[org.apache.spark.sql.Row](m)
+    for (i <- 0 until m) rows.add(org.apache.spark.sql.Row(nodes(i), nodes(find(i))))
+    pr.sparkSession.createDataFrame(rows, new org.apache.spark.sql.types.StructType()
+      .add("doc_id", "long").add("cluster_id", "long"))
+  }
 
   /** The production dedup-clustering front door: documents in, cluster
     * labels out — (doc_id, cluster_id = min doc id reachable through
@@ -1211,17 +1203,14 @@ object Dedup {
     * cluster_id` and everything else is a drop.
     *
     * One entry point with the measured defaults, so a caller never has
-    * to choose among propagation/star/auto CC variants or hand-tune
-    * skew knobs:
+    * to choose a CC finish or hand-tune skew knobs:
     *  - candidate pairs via MinHash-LSH with `salts = 4` — a hot band
     *    bucket (boilerplate cluster flooding one (band, key) cell at
     *    100 TB) spreads over 4 tasks; output identical to unsalted,
     *    only the shuffle layout changes;
-    *  - clustering via [[connectedComponentsAuto]] — min-label
-    *    propagation (CcProbe: 1.96 s vs 5.87 s star at sf1 on shallow
-    *    dedup graphs) with automatic escalation to O(log d) star
-    *    contraction when the probe budget doesn't converge, so a
-    *    deep-chain corpus can never ship partial labels.
+    *  - clustering via [[connectedComponents]] — a driver union-find
+    *    when the label table fits the broadcast budget, O(log d) star
+    *    rounds otherwise.
     *
     * Docs with no near-dup edge don't appear in the output (they are
     * trivially their own cluster) — anti-join semantics: drop where
@@ -1229,10 +1218,8 @@ object Dedup {
     */
   def dedupClusters(df: DataFrame, id: Column, text: Column, n: Int = 3,
       bands: Int = 4, rowsPerBand: Int = 4, minJaccard: Double = 0.5,
-      salts: Int = graft.GraftSession.Local32.salts,
-      probeRounds: Int = 8, starMaxRounds: Int = 20): DataFrame = {
-    val pairs = minHashLshPairs(df, id, text, n, bands, rowsPerBand, minJaccard, salts)
-    connectedComponentsAuto(pairs.select(col("id_a"), col("id_b")), probeRounds, starMaxRounds)
+      salts: Int = graft.GraftSession.Local32.salts): DataFrame = {
+    connectedComponents(minHashLshPairs(df, id, text, n, bands, rowsPerBand, minJaccard, salts))
   }
 
   /** Incremental duplicate-cluster maintenance — advance a persisted
@@ -1240,7 +1227,7 @@ object Dedup {
     * WITHOUT re-running connected components over the whole corpus.
     *
     * `comp` is the existing assignment (doc_id, cluster_id) with the
-    * min-label convention every CC variant here produces (cluster_id =
+    * min-label convention [[connectedComponents]] produces (cluster_id =
     * min doc id reachable; every node incident to an edge has a row,
     * including the representative labeling itself). `newEdges`
     * (id_a, id_b, undirected) are the batch's verified pairs —
@@ -1267,17 +1254,14 @@ object Dedup {
     * scanned once and joined ONLY through broadcasts. The touched-row
     * lookup broadcasts the batch-bounded endpoint set into the state
     * scan; the contracted CC runs on ≤ 2·|newEdges| nodes (batch-
-    * sized, the only iterative work); the relabel broadcasts the
+    * sized, so it finishes on the driver); the relabel broadcasts the
     * contracted label map (bounded by affected components ≤ batch
     * endpoints) back over the state scan. Nothing O(state) ever
-    * exchanges, and the per-advance iterative cost is independent of
-    * corpus size — against a from-scratch CC whose every round
-    * shuffles the full edge set.
+    * exchanges, and the per-advance CC cost is independent of corpus
+    * size.
     */
-  def clusterStateAdvance(comp: DataFrame, newEdges: DataFrame,
-      probeRounds: Int = 8, starMaxRounds: Int = 20): DataFrame = {
-    val (relabeled, _, newRows) =
-      clusterAdvanceParts(comp, newEdges, probeRounds, starMaxRounds)
+  def clusterStateAdvance(comp: DataFrame, newEdges: DataFrame): DataFrame = {
+    val (relabeled, _, newRows) = clusterAdvanceParts(comp, newEdges)
     relabeled.unionByName(newRows)
   }
 
@@ -1288,15 +1272,13 @@ object Dedup {
     * doc_id reconstructs exactly the full advance output, since every
     * unchanged row's old layer still holds). Same exactness argument.
     */
-  def clusterStateAdvanceDelta(comp: DataFrame, newEdges: DataFrame,
-      probeRounds: Int = 8, starMaxRounds: Int = 20): DataFrame = {
-    val (_, changed, newRows) =
-      clusterAdvanceParts(comp, newEdges, probeRounds, starMaxRounds)
+  def clusterStateAdvanceDelta(comp: DataFrame, newEdges: DataFrame): DataFrame = {
+    val (_, changed, newRows) = clusterAdvanceParts(comp, newEdges)
     changed.unionByName(newRows)
   }
 
-  private def clusterAdvanceParts(comp: DataFrame, newEdges: DataFrame,
-      probeRounds: Int, starMaxRounds: Int): (DataFrame, DataFrame, DataFrame) = {
+  private def clusterAdvanceParts(comp: DataFrame,
+      newEdges: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     // materialized once (batch-bounded by contract): the edge set is
     // consumed by three independent actions (endpoint broadcast,
     // contraction, fresh-row anti-join), and when it arrives as a lazy
@@ -1321,10 +1303,10 @@ object Dedup {
       .select(coalesce(col("__ra"), col("id_a")).as("id_a"),
         coalesce(col("__rb"), col("id_b")).as("id_b"))
       .filter(col("id_a") =!= col("id_b"))
-    // the only iterative work: CC over the batch-sized contracted graph.
+    // CC over the batch-sized contracted graph.
     // Node ids here are old representatives or fresh endpoints; the
     // resulting label is the merged component's global minimum.
-    val labelMap = connectedComponentsAuto(contracted, probeRounds, starMaxRounds)
+    val labelMap = connectedComponents(contracted)
       .select(col("doc_id").as("node"), col("cluster_id").as("new_lbl"))
     // relabel O(state) rows through a broadcast map keyed on cluster_id
     // (a merge renames the whole old cluster in one pass)
@@ -1372,7 +1354,7 @@ object Dedup {
     * Scale shape: stages 1–2 are partial-agg groupBys on 8/16-byte
     * keys joined back onto the id spine; stage 3's exchanges carry
     * signatures (~128 B/row) and never re-touch the n-gram table;
-    * stage 4 is [[dedupClusters]] (salted LSH + self-escalating CC)
+    * stage 4 is [[dedupClusters]] (salted LSH + connected components)
     * over the screened remainder — at 100 TB the expensive
     * candidate×ngram verify joins run on the post-screen corpus
     * only. The counts are five 1-row aggregates cross-joined
@@ -1450,7 +1432,7 @@ object Dedup {
     * replayable by the oracle.
     *
     * Scale shape: the pair + CC stages are [[dedupClusters]] (salted
-    * LSH, self-escalating CC); the label table is near-dup-sized
+    * LSH, connected components); the label table is near-dup-sized
     * (pairs only), LEFT-joined back onto the doc-id spine; split
     * hashing is scan-local. Returns (doc_id, rep, split).
     */
@@ -1470,110 +1452,13 @@ object Dedup {
         .otherwise(lit("train")))
   }
 
-  /** connectedComponentsAuto plus whether it escalated (for specs). */
-  private[graft] def ccAutoWithPath(pairs: DataFrame, probeRounds: Int,
-      starMaxRounds: Int): (DataFrame, Boolean) = {
-    import org.apache.spark.storage.StorageLevel
-    val pr = pairs.select(col("id_a"), col("id_b")).persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val (labels, converged) = ccPropagateWithStatus(pr, probeRounds)
-      if (converged) (labels, false)
-      else (connectedComponentsStar(pr, starMaxRounds), true)
-    } finally pr.unpersist()
-  }
-
-  private[graft] def ccPropagateWithStatus(pairs: DataFrame, maxRounds: Int): (DataFrame, Boolean) = {
-    import org.apache.spark.storage.StorageLevel
-    val spark = pairs.sparkSession
-    // Every round is a FRESH plan over persisted micro-tables, so
-    // AQE's per-stage materialization (several sequentially-scheduled
-    // stage jobs per round) buys nothing the loop doesn't already do —
-    // and its latency dominated wall time on shallow dedup graphs
-    // (measured ~2× the whole round at sf0.1). The rounds therefore
-    // run in a forked AQE-off session (below); the caller's session,
-    // where the big upstream pair job runs, keeps its own AQE setting.
-    // pairs feeds BOTH direction branches of the edge union — persist
-    // first or the (expensive) upstream pair job runs twice. The count
-    // also materializes it in the CALLER's session, BEFORE the plan
-    // moves to the loop session, so the big pair job still gets
-    // adaptive planning; only the micro-rounds run without it.
-    val pr = pairs.select(col("id_a"), col("id_b")).persist(StorageLevel.MEMORY_AND_DISK)
-    val nEdges = 2L * pr.count()
-    if (nEdges == 0) {
-      // no edges → no components; the label-sum convergence below
-      // would read a NULL aggregate
-      pr.unpersist()
-      return (pr.select(col("id_a").as("doc_id"), col("id_a").as("cluster_id")).limit(0), true)
-    }
-    // The micro-rounds run under a FORKED session whose AQE-off is
-    // session-local (ccLoopSession — r17 verdict #2: the old
-    // session-global toggle leaked AQE-off into jobs overlapped on the
-    // caller's session for the whole loop window). pr's cache is
-    // shared (CacheManager lives in SharedState), so the transplanted
-    // plan scans the same blocks; the result transplants BACK so
-    // downstream consumers keep the caller's conf.
-    val prL = transplant(ccLoopSession(spark, aqeOn = false), pr)
-    locally {
-      // size the iterative shuffles to the GRAPH, not the session
-      // default: the label table is tiny next to the corpus that
-      // produced the pairs (and without AQE nothing else coalesces)
-      val p = math.max(1, math.min(spark.sparkContext.defaultParallelism,
-        (nEdges / 500000L).toInt))
-      val edges = prL.select(col("id_a").as("id"), col("id_b").as("nbr"))
-        .unionByName(prL.select(col("id_b").as("id"), col("id_a").as("nbr")))
-        .repartition(p, col("nbr"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      var labels = edges.select(col("id")).distinct().withColumn("lbl", col("id"))
-        .repartition(p, col("id"))
-        .transform(iterEager)
-      // Convergence = the exact SUM of labels stops decreasing:
-      // min-label propagation only ever lowers a label, so Σlbl
-      // strictly decreases on any change. One scalar aggregate over
-      // the persisted label table per round — the prev⋈next comparison
-      // join this replaces cost two more exchanges per round.
-      // DECIMAL(38,0) keeps the sum exact for arbitrary 64-bit ids at
-      // any corpus size.
-      def lblSum(df: DataFrame): java.math.BigDecimal =
-        df.agg(sum(col("lbl").cast("decimal(38,0)"))).head().getDecimal(0)
-      var prevSum = lblSum(labels)
-      var round = 0
-      var converged = false
-      while (!converged && round < maxRounds) {
-        // next label = min(own label, neighbors' labels)
-        val next = edges.join(labels.select(col("id").as("nbr"), col("lbl")), Seq("nbr"))
-          .select(col("id"), col("lbl"))
-          .unionByName(labels)
-          .groupBy(col("id")).agg(min(col("lbl")).as("lbl"))
-          .repartition(p, col("id"))
-          .transform(iterEager)
-        val s = lblSum(next)
-        converged = s.compareTo(prevSum) == 0
-        prevSum = s
-        labels = next
-        round += 1
-      }
-      pr.unpersist()
-      edges.unpersist()
-      // the returned plan reads the final round's checkpoint blocks —
-      // nothing stays registered in the session cache manager (the
-      // blocks release when the DataFrame is GC'd), so repeated calls
-      // do not accumulate persisted label tables. Transplanted back to
-      // the CALLER's session: execution of a derived Dataset follows
-      // its root's session, and the loop session's AQE-off must not
-      // ride into downstream joins.
-      (transplant(spark,
-        labels.select(col("id").as("doc_id"), col("lbl").as("cluster_id"))), converged)
-    }
-  }
-
   /** Connected components by alternating large-star/small-star
     * contraction (Kiveris et al., "Connected Components in MapReduce
-    * and Beyond", SoCC'14) — the O(log d)-round ESCALATION of
-    * connectedComponents for graphs whose diameter is not small. A
-    * templated-drift corpus (each copy one edit from the previous —
-    * real at 100 TB) emits a pair CHAIN, and min-label propagation
-    * pays one shuffle round per hop; star contraction halves the
-    * effective diameter every round instead.
+    * and Beyond", SoCC'14) — [[connectedComponents]]' finish for
+    * graphs whose label table exceeds the broadcast budget, in
+    * O(log d) rounds for diameter d. A templated-drift corpus (each
+    * copy one edit from the previous — real at 100 TB) emits a pair
+    * CHAIN; star contraction halves its effective diameter every round.
     *
     * Each round is two grouped-min passes over the edge set:
     *  - large-star: every node's strictly-larger neighbors re-point to
@@ -1584,103 +1469,96 @@ object Dedup {
     * Edges only ever re-point to smaller ids, and the fixed point is a
     * disjoint union of min-rooted stars — detected by the scalar "no
     * node is both a star child and a star root" aggregate, one
-    * exchange per round (no data collect). Same persist/AQE discipline
-    * as connectedComponents; output contract identical:
+    * exchange per round (no data collect). A graph that has not
+    * converged within `maxRounds` raises instead of returning partial
+    * labels. Output contract identical to connectedComponents:
     * (doc_id, cluster_id = min id reachable through near-dup edges).
     */
-  def connectedComponentsStar(pairs: DataFrame, maxRounds: Int = 20): DataFrame =
+  def connectedComponentsStar(pairs: DataFrame, maxRounds: Int = StarMaxRounds): DataFrame =
     ccStarWithRounds(pairs, maxRounds)._1
 
   /** connectedComponentsStar plus the number of contraction rounds it
     * took to converge (exposed for the O(log d) property spec).
     */
-  private[graft] def ccStarWithRounds(pairs: DataFrame, maxRounds: Int): (DataFrame, Int) = {
-    import org.apache.spark.storage.StorageLevel
-    val spark = pairs.sparkSession
-    val pr = pairs.select(col("id_a"), col("id_b")).persist(StorageLevel.MEMORY_AND_DISK)
-    val nEdges = pr.count()
-    if (nEdges == 0) {
-      pr.unpersist()
+  private[graft] def ccStarWithRounds(pairs: DataFrame, maxRounds: Int): (DataFrame, Int) =
+    withCountedPairs(pairs)((pr, nEdges) => starRounds(pr, nEdges, maxRounds))
+
+  private def starRounds(pr: DataFrame, nEdges: Long, maxRounds: Int): (DataFrame, Int) = {
+    if (nEdges == 0)
       return (pr.select(col("id_a").as("doc_id"), col("id_a").as("cluster_id")).limit(0), 0)
-    }
-    // forked loop session with AQE ON (ccLoopSession: star's grouped-
-    // min joins over stat-less localCheckpoint leaves need AQE's
-    // runtime broadcast conversion — measured 1.47× on q74; same
-    // transplant choreography as ccPropagateWithStatus)
-    val prL = transplant(ccLoopSession(spark, aqeOn = true), pr)
-    locally {
-      val p = math.max(1, math.min(spark.sparkContext.defaultParallelism,
-        (nEdges / 250000L).toInt))
-      // canonical orientation larger→smaller (hi, lo); self-loops drop.
-      // Each round's edge set is localCheckpoint'ed: a round references
-      // the previous edges ~5× (symmetric view + two grouped-min
-      // joins), so an un-truncated lineage would grow the LOGICAL PLAN
-      // exponentially in the round count — O(log d) execution rounds
-      // with O(c^rounds) analysis cost. Checkpointing pins each round
-      // to a constant-size block-backed plan (the materialization is
-      // free — the convergence check scans the round anyway).
-      var edges = prL
-        .select(greatest(col("id_a"), col("id_b")).as("hi"),
-          least(col("id_a"), col("id_b")).as("lo"))
-        .filter(col("hi") =!= col("lo")).distinct()
+    val p = math.max(1, math.min(pr.sparkSession.sparkContext.defaultParallelism,
+      (nEdges / 250000L).toInt))
+    // canonical orientation larger→smaller (hi, lo); self-loops drop.
+    // Each round's edge set is localCheckpoint'ed: a round references
+    // the previous edges ~5× (symmetric view + two grouped-min
+    // joins), so an un-truncated lineage would grow the LOGICAL PLAN
+    // exponentially in the round count — O(log d) execution rounds
+    // with O(c^rounds) analysis cost. Checkpointing pins each round
+    // to a constant-size block-backed plan (the materialization is
+    // free — the convergence check scans the round anyway). The
+    // checkpoint leaves carry no statistics, so it is AQE's runtime
+    // sizes that turn the per-round joins into broadcasts.
+    var edges = pr
+      .select(greatest(col("id_a"), col("id_b")).as("hi"),
+        least(col("id_a"), col("id_b")).as("lo"))
+      .filter(col("hi") =!= col("lo")).distinct()
+      .repartition(p, col("hi"))
+      .transform(iterEager)
+    var round = 0
+    // a set of edges is a fixed point iff it is a disjoint union of
+    // stars: no node appears both as a child (hi) and a root (lo),
+    // AND every child has exactly one parent edge (two "stars"
+    // sharing a child are one unmerged component, not stars). Roots
+    // are then the component minima (root < every child, and a
+    // shared node would merge two stars). One aggregate, no collect.
+    def isStars(e: DataFrame): Boolean =
+      e.select(col("hi").as("n"), lit(1).as("c"), lit(0).as("r"))
+        .unionByName(e.select(col("lo").as("n"), lit(0).as("c"), lit(1).as("r")))
+        .groupBy(col("n")).agg(sum(col("c")).as("cs"), max(col("c")).as("c"), max(col("r")).as("r"))
+        .filter((col("c") === 1 && col("r") === 1) || col("cs") > 1)
+        .isEmpty
+    var converged = isStars(edges)
+    while (!converged && round < maxRounds) {
+      // large-star: closed-neighborhood min per node over the
+      // symmetric edge view; larger neighbors re-point to it
+      val sym = edges.select(col("hi").as("u"), col("lo").as("v"))
+        .unionByName(edges.select(col("lo").as("u"), col("hi").as("v")))
+      val lmin = sym.groupBy(col("u"))
+        .agg(least(min(col("v")), first(col("u"))).as("m"))
+      val large = sym.join(lmin, Seq("u"))
+        .filter(col("v") > col("u"))
+        .select(col("v").as("hi"), col("m").as("lo"))
+        .distinct()
+      // small-star: per hi-node min over its smaller neighbors; those
+      // neighbors and the node itself re-point to it
+      val smin = large.groupBy(col("hi")).agg(min(col("lo")).as("m"))
+      val next = large.join(smin, Seq("hi"))
+        .select(col("lo").as("hi"), col("m").as("lo"))
+        .unionByName(smin.select(col("hi"), col("m").as("lo")))
+        .filter(col("hi") =!= col("lo"))
+        .distinct()
         .repartition(p, col("hi"))
         .transform(iterEager)
-      var round = 0
-      var converged = false
-      // a set of edges is a fixed point iff it is a disjoint union of
-      // stars: no node appears both as a child (hi) and a root (lo),
-      // AND every child has exactly one parent edge (two "stars"
-      // sharing a child are one unmerged component, not stars). Roots
-      // are then the component minima (root < every child, and a
-      // shared node would merge two stars). One aggregate, no collect.
-      def isStars(e: DataFrame): Boolean =
-        e.select(col("hi").as("n"), lit(1).as("c"), lit(0).as("r"))
-          .unionByName(e.select(col("lo").as("n"), lit(0).as("c"), lit(1).as("r")))
-          .groupBy(col("n")).agg(sum(col("c")).as("cs"), max(col("c")).as("c"), max(col("r")).as("r"))
-          .filter((col("c") === 1 && col("r") === 1) || col("cs") > 1)
-          .isEmpty
-      converged = isStars(edges)
-      while (!converged && round < maxRounds) {
-        // large-star: closed-neighborhood min per node over the
-        // symmetric edge view; larger neighbors re-point to it
-        val sym = edges.select(col("hi").as("u"), col("lo").as("v"))
-          .unionByName(edges.select(col("lo").as("u"), col("hi").as("v")))
-        val lmin = sym.groupBy(col("u"))
-          .agg(least(min(col("v")), first(col("u"))).as("m"))
-        val large = sym.join(lmin, Seq("u"))
-          .filter(col("v") > col("u"))
-          .select(col("v").as("hi"), col("m").as("lo"))
-          .distinct()
-        // small-star: per hi-node min over its smaller neighbors; those
-        // neighbors and the node itself re-point to it
-        val smin = large.groupBy(col("hi")).agg(min(col("lo")).as("m"))
-        val next = large.join(smin, Seq("hi"))
-          .select(col("lo").as("hi"), col("m").as("lo"))
-          .unionByName(smin.select(col("hi"), col("m").as("lo")))
-          .filter(col("hi") =!= col("lo"))
-          .distinct()
-          .repartition(p, col("hi"))
-          .transform(iterEager)
-        converged = isStars(next)
-        edges = next
-        round += 1
-      }
-      // label the full node universe of the input pair set: contraction
-      // dropped self-loop edges, but a node seen only in self-loops is
-      // still a (singleton) component under the connectedComponents
-      // contract — coalesce it to its own id
-      val starLabels = edges.select(col("hi").as("doc_id"), col("lo").as("cluster_id"))
-        .unionByName(edges.select(col("lo").as("doc_id"), col("lo").as("cluster_id")).distinct())
-      val nodes = prL.select(col("id_a").as("doc_id"))
-        .unionByName(prL.select(col("id_b").as("doc_id"))).distinct()
-      val out = nodes.join(starLabels, Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
-        .transform(iterEager)
-      pr.unpersist()
-      // transplant back: downstream consumers must not inherit the
-      // loop session's AQE-off (see ccPropagateWithStatus)
-      (transplant(spark, out), round)
+      converged = isStars(next)
+      edges = next
+      round += 1
     }
+    if (!converged) throw new IllegalStateException(
+      s"connectedComponentsStar did not converge within $maxRounds rounds: the pair graph's " +
+        "diameter exceeds the round budget and the labels would be silently partial. " +
+        "Raise maxRounds (star needs O(log diameter) rounds).")
+    // label the full node universe of the input pair set: contraction
+    // dropped self-loop edges, but a node seen only in self-loops is
+    // still a (singleton) component under the connectedComponents
+    // contract — coalesce it to its own id
+    val starLabels = edges.select(col("hi").as("doc_id"), col("lo").as("cluster_id"))
+      .unionByName(edges.select(col("lo").as("doc_id"), col("lo").as("cluster_id")).distinct())
+    val nodes = pr.select(col("id_a").as("doc_id"))
+      .unionByName(pr.select(col("id_b").as("doc_id"))).distinct()
+    val out = nodes.join(starLabels, Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
+      .transform(iterEager)
+    (out, round)
   }
 
   /** SimHash signature width: 31 bits from each of two independent

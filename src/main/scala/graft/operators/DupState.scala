@@ -159,7 +159,7 @@ object DupState {
       val banded = Dedup.stageEager(banded0)
       val cand = selfCandidates(banded, resolveSalts(salts, docs))
       val pairs = verify(cand, ngr, ngr, sizes, sizes, minJaccard)
-      val comp = Dedup.connectedComponentsAuto(pairs)
+      val comp = Dedup.connectedComponents(pairs)
       DupDeltas(banded, ngr, sizes, comp)
     }
 

@@ -416,48 +416,6 @@ object Similarity {
       .write.mode("append").partitionBy("cent_id").parquet(s"$path/cells")
   }
 
-  /** Per-cell compaction of an appended IVF index (VERDICT r16 #5):
-    * [[appendIvfIndex]] adds one parquet file set per batch per
-    * touched cell, so a year of daily drops is ~365 small files per
-    * hot cell — the same small-files debt
-    * [[graft.sources.Lake.compactPartition]] pays for the lake, here
-    * paid per cell directory. Every cell with more than
-    * `filesPerCell` data files is rewritten to `filesPerCell` files
-    * through a DOT-PREFIXED sibling temp dir (invisible to Spark's
-    * file listing, so a concurrent probe never sees a half-written
-    * cell) and renamed into place. Row content is untouched —
-    * probe results are identical before and after (IvfIndexSpec; the
-    * probe tool prints the file-count evidence). Single-maintainer
-    * op like the lake's: the delete→rename swap is not atomic against
-    * a concurrent WRITER to the same cell, and a crash between the
-    * two leaves the cell's temp copy to adopt manually — run it from
-    * the same maintenance slot that owns [[appendIvfIndex]].
-    * Returns (cell id, files before) per compacted cell.
-    */
-  def compactIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      filesPerCell: Int = 1): Seq[(Long, Int)] = {
-    import org.apache.hadoop.fs.Path
-    require(filesPerCell >= 1, s"filesPerCell must be ≥ 1 (was $filesPerCell)")
-    val cellsRoot = new Path(s"$path/cells")
-    val fs = cellsRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def dataFiles(p: Path): Int =
-      fs.listStatus(p).count(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-    val toCompact = fs.listStatus(cellsRoot).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("cent_id="))
-      .map(st => (st.getPath, dataFiles(st.getPath)))
-      .filter(_._2 > filesPerCell)
-    toCompact.foreach { case (cell, _) =>
-      val tmp = new Path(cellsRoot, s".${cell.getName}.__compact_tmp")
-      spark.read.parquet(cell.toString).repartition(filesPerCell)
-        .write.mode("overwrite").parquet(tmp.toString)
-      fs.delete(cell, true)
-      require(fs.rename(tmp, cell), s"could not swap compacted cell into $cell")
-    }
-    toCompact.map { case (cell, n) =>
-      (cell.getName.stripPrefix("cent_id=").toLong, n)
-    }
-  }
-
   /** Probe a written IVF index: score queries against the (small)
     * stored centroids, keep nProbe cells per query, and join the
     * broadcast probes against the cell-partitioned index on cent_id —

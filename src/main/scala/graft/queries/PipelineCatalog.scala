@@ -218,9 +218,8 @@ object PipelineCatalog {
   private val dupClusters = Q(
     "q53_dup_clusters",
     (s, dir) =>
-      // the production front door: salted LSH pairs + self-escalating
-      // CC (auto star contraction on deep graphs — partial labels are
-      // impossible by construction)
+      // the production front door: salted LSH pairs + connected
+      // components (a driver union-find at this size)
       Dedup.dedupClusters(corpus(s, dir), col("doc_id"), col("text"), 3, 4, 4, 0.5,
           salts = graft.GraftSession.profileOf(s).salts)
         .orderBy(col("doc_id")),
@@ -228,13 +227,13 @@ object PipelineCatalog {
             |$minhashPairsSql,
             |${minLabelClosureSql("pairs")}""".stripMargin))
 
-  // q74_cc_star — the O(log d) connected-components escalation, gated:
+  // q74_cc_star — the O(log d) star-contraction CC finish, gated:
   // same LSH pair set as q53 UNIONED with a planted 100-hop id chain
   // (doc_id → doc_id+1 within aligned 100-blocks) — the templated-
-  // drift shape where min-label propagation pays one shuffle round per
-  // hop and star contraction pays log. Labels must equal the closure
-  // over the combined edge set; the oracle replays it with the same
-  // recursive min-label CTE as q53.
+  // drift shape where star contraction pays log(hops) rounds, called
+  // directly so the distributed rounds stay oracle-checked. Labels must
+  // equal the closure over the combined edge set; the oracle replays it
+  // with the same recursive min-label CTE as q53.
 
   private val ccStar = Q(
     "q74_cc_star",
@@ -313,9 +312,7 @@ object PipelineCatalog {
     (s, dir) => {
       val c = corpus(s, dir)
       // members that are NOT their cluster's canonical id get dropped.
-      // dedupClusters = salted LSH pairs + self-escalating CC: the
-      // 100 TB chain can't silently ship partial labels (a deep pair
-      // graph escalates to star contraction instead of truncating).
+      // dedupClusters = salted LSH pairs + connected components.
       val dropIds = Dedup.dedupClusters(c, col("doc_id"), col("text"), 3, 4, 4, 0.5,
           salts = graft.GraftSession.profileOf(s).salts)
         .filter(col("doc_id") =!= col("cluster_id"))

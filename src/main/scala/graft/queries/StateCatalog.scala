@@ -72,9 +72,9 @@ object StateCatalog {
         .unionByName(d.filter(pmod(col("doc_id"), lit(7)) === 0)
           .select((col("doc_id") + 20000).as("doc_id"),
             concat(col("text"), lit(" graft extra marker")).as("text")))
-      // the corpus-side CC (eager label iterations) and the batch-side
-      // pair DERIVATION are independent until the quotient advance
-      // consumes both — overlapped (StateVersions.par2, §2.6). The
+      // the corpus-side CC (its pair job and driver finish) and the
+      // batch-side pair DERIVATION are independent until the quotient
+      // advance consumes both — overlapped (StateVersions.par2, §2.6). The
       // batch leg is staged EAGERLY inside the overlap: minHashLshPairs/
       // minHashLshPairsIncremental build lazy plans, so without the
       // stage the leg overlapped nothing and par2 measured exactly
@@ -82,7 +82,7 @@ object StateCatalog {
       // batch-bounded; clusterStateAdvance's own iterEager then merely
       // re-pins the already-materialized rows.
       val (comp, edges) = par2(
-        Dedup.connectedComponentsAuto(
+        Dedup.connectedComponents(
           Dedup.minHashLshPairs(d, col("doc_id"), col("text"), 3, 4, 4, 0.5,
               salts = graft.GraftSession.profileOf(s).salts)
             .select(col("id_a"), col("id_b"))), {
@@ -765,7 +765,7 @@ object StateCatalog {
       val batch = cycleBatch(d)
       // the ingest advance and the dup-cluster quotient advance are
       // independent until the final report join — their eager phases
-      // (staging chain / CC iterations) overlap (StateVersions.par2,
+      // (staging chain / CC) overlap (StateVersions.par2,
       // §2.6 — the same two legs EventStream.dailyCycleStream's sink
       // runs per batch)
       val (report, adv) = par2({
@@ -775,7 +775,7 @@ object StateCatalog {
         Ingest.advanceOnce(batch, st, col("doc_id"), col("text"))._1
       }, {
         // dup-cluster family: q129's quotient advance on the same batch
-        val comp = Dedup.connectedComponentsAuto(
+        val comp = Dedup.connectedComponents(
           Dedup.minHashLshPairs(d, col("doc_id"), col("text"), 3, 4, 4, 0.5,
               salts = graft.GraftSession.profileOf(s).salts)
             .select(col("id_a"), col("id_b")))

@@ -542,7 +542,7 @@ object EventStream {
     * advance run CONCURRENTLY as the two legs of one
     * [[graft.operators.StateVersions.par2]] — leg a is ingest's load,
     * advance and save, then its report's one row; leg b dup's load and
-    * advance (its eager staging and CC rounds), then the comp delta,
+    * advance (its eager staging and CC), then the comp delta,
     * materialized once. A second par2 follows once both legs settle:
     * dup's save on one leg, the `n_dup_assign` count on the other. So
     * dup's v=batchId+1 write starts only after ingest's has committed,

@@ -18,7 +18,7 @@ class ClusterIncrSpec extends SparkSpecBase {
     ps.toSeq.toDF("id_a", "id_b")
 
   private def cc(e: DataFrame): DataFrame =
-    Dedup.connectedComponentsAuto(e.select(col("id_a"), col("id_b")))
+    Dedup.connectedComponents(e.select(col("id_a"), col("id_b")))
 
   private def labels(df: DataFrame): Map[Long, Long] =
     df.select(col("doc_id"), col("cluster_id")).collect()

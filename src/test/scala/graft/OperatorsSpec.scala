@@ -228,23 +228,27 @@ class ConnectedComponentsSpec extends SparkSpecBase {
       10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L))
   }
 
-  test("auto CC escalates on a deep chain, stays on propagation for shallow graphs") {
-    // 300-hop chain: propagation needs 300 rounds; a 6-round probe
-    // must escalate to star contraction and still label everything 0
-    val chain = (0L until 300L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val (deep, escalated) = Dedup.ccAutoWithPath(chain, 6, 20)
-    assert(escalated, "deep chain did not escalate")
-    val labels = deep.select("cluster_id").distinct().as[Long].collect().toSeq
-    assert(labels == Seq(0L), s"chain not fully contracted: $labels")
-    assert(deep.count() == 301)
-    // shallow stars converge inside the probe — no escalation, output
-    // identical to plain propagation
-    val shallow = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L)).toDF("id_a", "id_b")
-    val (out, esc2) = Dedup.ccAutoWithPath(shallow, 8, 20)
-    assert(!esc2, "shallow graph escalated needlessly")
-    val expected = Dedup.connectedComponents(shallow)
-      .orderBy("doc_id").as[(Long, Long)].collect().toSeq
-    assert(out.orderBy("doc_id").as[(Long, Long)].collect().toSeq == expected)
+  test("CC path: driver under the budget, star above") {
+    // the same graphs in the default session (64 MB budget: driver
+    // union-find) and in a session whose 1-byte budget forces star
+    val starSess = spark.newSession()
+    starSess.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
+    val chainEdges = (0L until 300L).map(i => (i, i + 1))
+    val shallowEdges = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L))
+    def run(s: org.apache.spark.sql.SparkSession, es: Seq[(Long, Long)]) =
+      Dedup.ccWithPath(s.createDataFrame(es).toDF("id_a", "id_b"))
+    for ((s, wantDriver) <- Seq(spark -> true, starSess -> false)) {
+      // 300-hop chain: every one of the 301 nodes labels to 0 either way
+      val (deep, onDriver) = run(s, chainEdges)
+      assert(onDriver == wantDriver, s"chain took the wrong path (driver = $onDriver)")
+      val labels = deep.select("cluster_id").distinct().as[Long].collect().toSeq
+      assert(labels == Seq(0L), s"chain not fully contracted: $labels")
+      assert(deep.count() == 301)
+      val (out, onDriver2) = run(s, shallowEdges)
+      assert(onDriver2 == wantDriver)
+      assert(out.orderBy("doc_id").as[(Long, Long)].collect().toSeq == Seq(1L -> 1L, 2L -> 1L,
+        3L -> 1L, 10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L))
+    }
   }
 
   test("canonical member is its own cluster id") {
@@ -256,14 +260,13 @@ class ConnectedComponentsSpec extends SparkSpecBase {
   }
 
   test("plain CC RAISES on a chain deeper than its round budget (no silent partial labels)") {
-    // 40-hop chain with maxRounds=5: propagation cannot converge; the
-    // old contract returned partially-propagated labels as if correct
+    // 40-hop chain with maxRounds=2: star contraction cannot converge;
+    // returning its partially-contracted labels would look correct
     val chain = (0L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val e = intercept[IllegalStateException] {
-      Dedup.connectedComponents(chain, maxRounds = 5).count()
+      Dedup.ccStarWithRounds(chain, maxRounds = 2)
     }
     assert(e.getMessage.contains("did not converge"))
-    assert(e.getMessage.contains("connectedComponentsAuto"))
   }
 
   test("dedupClusters front door: salted pairs + auto CC, one canonical per cluster") {
@@ -1355,40 +1358,6 @@ class IvfIndexSpec extends SparkSpecBase {
     val inMemory = Similarity.cosineTopKIvf(q, e, 3, 32, 4, 2)
       .orderBy("qid", "rank").collect().map(_.toString).toSeq
     assert(fromIndex.nonEmpty && fromIndex == inMemory)
-  }
-
-  test("compactIvfIndex collapses per-append small files and leaves probe results identical") {
-    // base index from 2/3 of the vectors, then THREE appends (each
-    // adds a file set to every touched cell) — the q125 daily-drop
-    // shape whose year-long file growth compaction exists to reclaim
-    val e = graft.sources.Tables.embeddings(spark, sfDir)
-    val path = java.nio.file.Files.createTempDirectory("ivfcmp").toString
-    Similarity.writeIvfIndex(e.filter(pmod(col("vec_id"), lit(3)) =!= 0), path, 32, 2)
-    Seq(0L, 3L, 6L).foreach { r =>
-      Similarity.appendIvfIndex(
-        e.filter(pmod(col("vec_id"), lit(9)) === r), path)
-    }
-    def cellFiles(): Map[String, Int] =
-      new java.io.File(s"$path/cells").listFiles.filter(_.getName.startsWith("cent_id="))
-        .map(d => d.getName -> d.listFiles.count(_.getName.endsWith(".parquet"))).toMap
-    val before = cellFiles()
-    assert(before.values.max >= 4, s"appends should stack files per hot cell: $before")
-    val q = e.filter(col("vec_id") < 5)
-    val r1 = Similarity.probeIvfIndex(spark, path, q, 3, 4)
-      .orderBy("qid", "rank").collect().map(_.toString).toSeq
-    val compacted = Similarity.compactIvfIndex(spark, path, filesPerCell = 1)
-    assert(compacted.nonEmpty, "hot cells above the target must be rewritten")
-    val after = cellFiles()
-    assert(after.values.max == 1, s"every cell must land at one data file: $after")
-    assert(after.keySet == before.keySet, "compaction must not add or drop cells")
-    // no hidden temp debris left inside the cells root
-    assert(!new java.io.File(s"$path/cells").listFiles
-      .exists(_.getName.contains("__compact_tmp")))
-    val r2 = Similarity.probeIvfIndex(spark, path, q, 3, 4)
-      .orderBy("qid", "rank").collect().map(_.toString).toSeq
-    assert(r1 == r2, "compaction changed probe results")
-    // idempotent: a second pass finds nothing above the target
-    assert(Similarity.compactIvfIndex(spark, path, filesPerCell = 1).isEmpty)
   }
 }
 
