@@ -302,9 +302,8 @@ object Dedup {
 
   /** The persisted chunk-dedup STATE: first global occurrence per
     * 62-bit chunk hash — (h, keep = struct(doc_id, idx)). At 100 TB
-    * this is the table an ingest pipeline writes (bucketed by h) so
-    * that each day's batch dedups against state instead of re-scanning
-    * the corpus.
+    * this is the table an ingest pipeline writes so that each day's
+    * batch dedups against state instead of re-scanning the corpus.
     */
   def chunkKeepers(df: DataFrame, id: Column, text: Column, chunkWords: Int): DataFrame =
     chunkTable(df, id, text, chunkWords).groupBy(col("h"))
@@ -324,38 +323,11 @@ object Dedup {
     * (parity-spec'd). Cost shape: every stage — explode, hash, batch
     * first-occurrence groupBy — scales with the BATCH; the only
     * corpus-sized touch is the anti-join against the keeper table,
-    * which at 100 TB is bucket-co-located on h (no corpus shuffle).
+    * planned by AQE from its observed size.
     */
   def chunkDedupIncremental(newBatch: DataFrame, keepers: DataFrame,
       id: Column, text: Column, chunkWords: Int): DataFrame =
-    reconstructDocs(newKeeperChunkRows(newBatch, Seq(keepers), id, text, chunkWords))
-
-  /** `left` minus rows whose `key` appears in ANY state layer — ≡ one
-    * left_anti against the layers' union (anti-join distributes over
-    * union, no contract needed), but evaluated as a JOIN CHAIN with
-    * the base layer FIRST: a bucket-co-located base then joins with NO
-    * state-side exchange (the union form erases the base scan's
-    * hash-partitioning), and the batch-sized delta layers join the
-    * already-partitioned remainder. StateBucketProbe measured the
-    * orderings at sf10: base-first ≥ union ≥ deltas-first.
-    *
-    * Delta legs are PINNED to shuffle-hash: left alone (or under AQE)
-    * a 10-100 MB delta goes broadcast, and since the advance fans out
-    * into seven independent actions the driver then re-collects and
-    * re-builds that HashedRelation PER ACTION PER LAYER —
-    * IngestDeltaProbe measured the bucketed chain growing 28 → 41 →
-    * 62 s/advance with layer count from exactly this. As SHJ the delta
-    * shuffles once per action (executor-side, partition-local) and the
-    * batch side reuses the partitioning it already has from the base
-    * join.
-    */
-  private[graft] def antiJoinLayers(left: DataFrame, key: String,
-      layers: Seq[DataFrame]): DataFrame = layers match {
-    case base +: deltas =>
-      deltas.foldLeft(left.join(base.select(col(key)), Seq(key), "left_anti"))(
-        (l, st) => l.join(st.select(col(key)).hint("shuffle_hash"), Seq(key), "left_anti"))
-    case _ => left
-  }
+    reconstructDocs(newKeeperChunkRows(newBatch, keepers, id, text, chunkWords))
 
   /** The SHARED intermediate of the chunk gate and the keeper-state
     * delta: batch-first chunk rows (h, keep, doc_id, n_chunks, idx,
@@ -365,19 +337,16 @@ object Dedup {
     * the batch minus state — batchFirst's min-struct agg is exactly
     * chunkKeepers' keep). The ingest advance stages this frame once
     * instead of running the chunk-table derivation + state anti-join
-    * twice. The keeper state comes as LAYERS (base first, then
-    * deltas — [[graft.operators.Ingest.loadStates]]' chain shape): the
-    * state anti-join runs per layer so a bucketed base never shuffles.
+    * twice.
     */
-  private[graft] def newKeeperChunkRows(newBatch: DataFrame, keepers: Seq[DataFrame],
+  private[graft] def newKeeperChunkRows(newBatch: DataFrame, keepers: DataFrame,
       id: Column, text: Column, chunkWords: Int): DataFrame = {
     val hashed = chunkTable(newBatch, id, text, chunkWords)
     val batchFirst = hashed.groupBy(col("h"))
       .agg(min(struct(col("doc_id"), col("idx"))).as("keep"))
-    antiJoinLayers(
-      hashed.join(batchFirst, Seq("h"))
-        .filter(col("doc_id") === col("keep.doc_id") && col("idx") === col("keep.idx")),
-      "h", keepers)
+    hashed.join(batchFirst, Seq("h"))
+      .filter(col("doc_id") === col("keep.doc_id") && col("idx") === col("keep.idx"))
+      .join(keepers.select(col("h")), Seq("h"), "left_anti")
   }
 
   /** Advance the keeper state past a batch: old keepers win every
@@ -519,24 +488,15 @@ object Dedup {
     * [[selfRepSpans]] restricted to batch docs whenever batch ids
     * sort after the corpus (parity-spec'd). Every stage scales with
     * the BATCH — the corpus is touched only through the hash-keyed
-    * state join (bucket-co-located at a real lake); state advance is
-    * unionByName + min-groupBy at compaction, exactly the novelty
-    * state's.
+    * state join; state advance is unionByName + min-groupBy at
+    * compaction, exactly the novelty state's.
     */
   def selfRepSpansIncremental(batch: DataFrame, state: DataFrame,
       id: Column, text: Column, n: Int): DataFrame =
-    selfRepSpansIncrementalWithOwn(batch, None, Seq(state), id, text, n)
+    selfRepSpansIncrementalWithOwn(batch, None, state, id, text, n)
 
-  /** [[selfRepSpansIncremental]] with the first-doc state as layers
-    * and an optional PRECOMPUTED batch-owner table.
-    *
-    * The owner resolution left-joins each layer separately (the
-    * bucketed base exchange-free, deltas broadcast) and coalesces the
-    * per-layer first_doc columns — exact ≡ the union form whenever a
-    * key lives in at most ONE layer, which is the
-    * [[graft.operators.Ingest.StateDeltas]] append contract; with
-    * overlapping layers the union form's min would be needed, so the
-    * layered form is for the chain shape only.
+  /** [[selfRepSpansIncremental]] with an optional PRECOMPUTED
+    * batch-owner table.
     *
     * The batch-owner table is (ng, first_doc) — the ingest advance
     * passes its staged [[ngramFirstDocs]] batch table, which is the
@@ -545,7 +505,7 @@ object Dedup {
     * doc set), saving the second O(batch-ngrams) aggregation.
     */
   private[graft] def selfRepSpansIncrementalWithOwn(batch: DataFrame,
-      precomputedOwn: Option[DataFrame], state: Seq[DataFrame],
+      precomputedOwn: Option[DataFrame], state: DataFrame,
       id: Column, text: Column, n: Int): DataFrame = {
     val tng = batch.select(id.as("doc_id"), posexplode(hashedNgramSeq(batch, text, n)))
       .select(col("doc_id"), (col("pos") + 1).cast("long").as("st"),
@@ -553,15 +513,8 @@ object Dedup {
     val batchOwn = precomputedOwn
       .map(_.select(col("ng"), col("first_doc").as("bown")))
       .getOrElse(tng.groupBy(col("ng")).agg(min(col("doc_id")).as("bown")))
-    // delta legs pinned to shuffle-hash for the same per-action
-    // broadcast-rebuild reason as antiJoinLayers
-    val withLayers = state.zipWithIndex.foldLeft(batchOwn) { case (acc, (st, i)) =>
-      val leg = st.select(col("ng"), col("first_doc").as(s"__fd_$i"))
-      acc.join(if (i == 0) leg else leg.hint("shuffle_hash"), Seq("ng"), "left")
-    }
-    val stateFirst = coalesce(state.indices.map(i => col(s"__fd_$i")) :+ col("bown"): _*)
-    val owners = withLayers
-      .select(col("ng"), least(col("bown"), stateFirst).as("owner"))
+    val owners = batchOwn.join(state.select(col("ng"), col("first_doc")), Seq("ng"), "left")
+      .select(col("ng"), least(col("bown"), coalesce(col("first_doc"), col("bown"))).as("owner"))
     val hits = tng.join(owners, Seq("ng"))
       .filter(col("doc_id") > col("owner"))
       .select(col("doc_id"), col("st"), col("en"))
@@ -826,8 +779,7 @@ object Dedup {
   /** The persisted state behind incremental novelty: one row per
     * distinct n-gram hash with its first introducer (min doc id) —
     * q90's intermediate as a table a lake materializes and advances
-    * per ingest batch (bucketed by the hash at 100 TB, like the q80
-    * chunk-keeper state).
+    * per ingest batch, like the q80 chunk-keeper state.
     */
   def ngramFirstDocs(df: DataFrame, id: Column, text: Column, n: Int): DataFrame =
     df.select(id.as("doc_id"), explode(hashedNgrams(df, text, n)).as("ng"))
@@ -841,16 +793,16 @@ object Dedup {
     * batch docs whenever batch ids sort after the corpus (parity-
     * spec'd), with no id-ordering assumption in the computation
     * itself. Every stage scales with the BATCH; the corpus is touched
-    * only through the hash-keyed state anti-join (bucket-co-located
-    * at a real lake). State advance = unionByName + min-groupBy, or
-    * just ngramFirstDocs over corpus ∪ batch at compaction.
+    * only through the hash-keyed state anti-join. State advance =
+    * unionByName + min-groupBy, or just ngramFirstDocs over corpus ∪
+    * batch at compaction.
     */
   def ngramNoveltyIncremental(batch: DataFrame, state: DataFrame,
       id: Column, text: Column, n: Int): DataFrame = {
     val ngr = batch.select(id.as("doc_id"), explode(hashedNgrams(batch, text, n)).as("ng"))
     val sizes = ngr.groupBy(col("doc_id")).agg(count(lit(1)).as("nn"))
-    val novels = antiJoinLayers(
-        ngr.groupBy(col("ng")).agg(min(col("doc_id")).as("first_doc")), "ng", Seq(state))
+    val novels = ngr.groupBy(col("ng")).agg(min(col("doc_id")).as("first_doc"))
+      .join(state.select(col("ng")), Seq("ng"), "left_anti")
       .groupBy(col("first_doc")).agg(count(lit(1)).as("novel"))
       .select(col("first_doc").as("doc_id"), col("novel"))
     sizes.join(novels, Seq("doc_id"), "left")
@@ -1162,20 +1114,26 @@ object Dedup {
   }
 
   /** Min-root union-find over the counted pairs, on the driver. The
-    * edges stream in one partition at a time (`toLocalIterator`) into
-    * one primitive array of endpoints; a sorted, deduplicated copy is
-    * the node table, so node index order is id order, and every union
-    * hangs the larger root under the smaller — each root is its
-    * component's minimum id. Path halving keeps `find` near-constant.
+    * edges arrive in ONE Spark job: each task packs its partition's
+    * endpoints into a primitive array, and the result handler copies
+    * each array into `ends` as it lands, so the driver holds `ends`
+    * plus the partition arrays in flight. A sorted, deduplicated copy
+    * of `ends` is the node table, so node index order is id order, and
+    * every union hangs the larger root under the smaller — each root
+    * is its component's minimum id. Path halving keeps `find`
+    * near-constant.
     */
   private def unionFindLabels(pr: DataFrame, nEdges: Int): DataFrame = {
     val ends = new Array[Long](2 * nEdges)
-    val it = pr.toLocalIterator()
     var e = 0
-    while (it.hasNext) {
-      val r = it.next()
-      ends(e) = r.getLong(0); ends(e + 1) = r.getLong(1); e += 2
+    val packed = pr.queryExecution.toRdd.mapPartitions { it =>
+      val b = new scala.collection.mutable.ArrayBuilder.ofLong
+      it.foreach { r => b += r.getLong(0); b += r.getLong(1) }
+      Iterator.single(b.result())
     }
+    // the handler runs on the driver, one partition at a time
+    pr.sparkSession.sparkContext.runJob(packed, (it: Iterator[Array[Long]]) => it.next(),
+      (_: Int, a: Array[Long]) => { System.arraycopy(a, 0, ends, e, a.length); e += a.length })
     val nodes = ends.clone()
     java.util.Arrays.sort(nodes)
     var m = 0

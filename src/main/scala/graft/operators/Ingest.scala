@@ -33,28 +33,8 @@ import org.apache.spark.sql.functions._
   */
 object Ingest {
 
-  /** The per-layer view of the three KEY-JOINED append tables when the
-    * family was loaded from a delta chain: base first, then one entry
-    * per committed delta. The advance's batch×state joins run per
-    * layer ([[graft.operators.Dedup.antiJoinLayers]]) so a
-    * bucket-co-located base joins with no state-side exchange — the
-    * single-frame unions in [[States]] would erase that partitioning.
-    */
-  final case class StateLayers(keepers: Seq[DataFrame], ng3: Seq[DataFrame],
-      ng8: Seq[DataFrame])
-
   final case class States(keepers: DataFrame, sigs: DataFrame,
-      ng3: DataFrame, ng8: DataFrame, kmv: DataFrame, cms: DataFrame,
-      layers: Option[StateLayers] = None) {
-    // the advance consumes these; a States built in memory (no layers)
-    // degrades to the single-frame form, which is the same join
-    private[graft] def keeperLayers: Seq[DataFrame] =
-      layers.map(_.keepers).getOrElse(Seq(keepers))
-    private[graft] def ng3Layers: Seq[DataFrame] =
-      layers.map(_.ng3).getOrElse(Seq(ng3))
-    private[graft] def ng8Layers: Seq[DataFrame] =
-      layers.map(_.ng8).getOrElse(Seq(ng8))
-  }
+      ng3: DataFrame, ng8: DataFrame, kmv: DataFrame, cms: DataFrame)
 
   /** One advance's batch-sized increments of the four APPEND-SHAPED
     * state tables, plus the two sketches in full (they are bounded —
@@ -191,7 +171,7 @@ object Ingest {
     // key — r14: previously the keeper delta re-ran the whole chunk
     // derivation + state anti-join a second time
     val newKeeperRows = Dedup.stageEager(Dedup.newKeeperChunkRows(
-      b, st.keeperLayers, col("doc_id"), col("text"), chunkWords))
+      b, st.keepers, col("doc_id"), col("text"), chunkWords))
     val s1 = Dedup.stageEager(b.join(
       Dedup.reconstructDocs(newKeeperRows).select(col("doc_id")), Seq("doc_id")))
     // composite-band signature join (r13): the 4×16-bit single-chunk
@@ -218,7 +198,7 @@ object Ingest {
     // join per advance instead of ngramNoveltyIncremental's second.
     // Staged in delta mode only (there the report AND saveStatesDelta
     // consume it; in full mode the report alone does)
-    val ng3d0 = Dedup.antiJoinLayers(ng3b, "ng", st.ng3Layers)
+    val ng3d0 = ng3b.join(st.ng3.select(col("ng")), Seq("ng"), "left_anti")
     val ng3d = if (fullMode) ng3d0 else Dedup.stageEager(ng3d0)
     val nn3 = s2.select(explode(Dedup.hashedNgrams(s2, col("text"), 3)).as("ng"))
     // the report's seven row counts in ONE aggregate over one union of
@@ -226,7 +206,7 @@ object Ingest {
     // one-row aggregates costs a shuffle and a broadcast per count
     val counted = Seq("n_batch" -> b, "n_chunk_surv" -> s1, "n_simhash_dup" -> shDup,
       "n_surv" -> s2, "__novel" -> ng3d, "__nn" -> nn3,
-      "n_selfrep_spans" -> Dedup.selfRepSpansIncrementalWithOwn(s2, Some(ng8b), st.ng8Layers,
+      "n_selfrep_spans" -> Dedup.selfRepSpansIncrementalWithOwn(s2, Some(ng8b), st.ng8,
         col("doc_id"), col("text"), 8))
     val perSource = counted.zipWithIndex.map { case ((name, _), i) =>
       count(when(col("__src") === i, 1)).as(name) }
@@ -244,7 +224,7 @@ object Ingest {
       keepers = newKeeperRows.select(col("h"), col("keep")),
       sigs = Dedup.simHashDf(s2, col("doc_id"), col("text")),
       ng3 = ng3d,
-      ng8 = Dedup.antiJoinLayers(ng8b, "ng", st.ng8Layers),
+      ng8 = ng8b.join(st.ng8.select(col("ng")), Seq("ng"), "left_anti"),
       ng3ByMin = ng3b,
       ng8ByMin = ng8b,
       kmv = kmv1,
@@ -252,87 +232,22 @@ object Ingest {
     (report, deltas)
   }
 
-  /** Name of the per-version bucket-layout marker: present (holding
-    * the bucket count) iff the version's keepers/ng3/ng8 were written
-    * hash-bucketed by their join key.
-    */
-  private[graft] val BucketsMarker = "_BUCKETS"
-
   /** The family's declaration to [[StateVersions]], which owns the
-    * on-disk layout: six tables; a delta version writes the four
-    * append-shaped ones as `<t>.d` and the bounded kmv/cms sketches in
-    * full; `keepers` marks a full version; every rewrite clears the
-    * bucket-layout marker (rewritten by a bucketed full save).
+    * on-disk layout: six plain parquet tables; a delta version writes
+    * the four append-shaped ones as `<t>.d` and the bounded kmv/cms
+    * sketches in full; `keepers` marks a full version.
     */
   private[graft] val family = StateVersions.Family("ingest",
     tables = Seq("keepers", "sigs", "ng3", "ng8", "kmv", "cms"),
     deltaTables = Seq("keepers", "sigs", "ng3", "ng8"),
-    classifier = "keepers", markers = Seq(BucketsMarker))
-
-  /** Bucketed-by-join-key parquet write of one state table (the
-    * bucket-co-location the advance's batch×state joins exploit —
-    * the loaded base then reports HashPartitioning and never
-    * shuffles). Spark's bucket layout rides the catalog, so the write
-    * goes through a transient external table entry that is dropped
-    * right after (files stay — external). Pre-repartitioning on the
-    * key gives each task exactly one bucket → ONE file per bucket, the
-    * shape under which the reader also trusts SORTED BY and skips its
-    * own sort.
-    */
-  private def writeBucketedTable(df: DataFrame, path: String, key: String,
-      buckets: Int): Unit = {
-    val spark = df.sparkSession
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the version is un-published here (marker removed by the caller):
-    // saveAsTable refuses to Overwrite an existing un-cataloged path
-    if (fs.exists(p)) fs.delete(p, true)
-    val name = s"graft_state_w_${java.lang.Integer.toUnsignedString(path.hashCode)}"
-    spark.sql(s"DROP TABLE IF EXISTS $name")
-    df.repartition(buckets, col(key))
-      .write.mode("overwrite")
-      .bucketBy(buckets, key).sortBy(key)
-      .option("path", path).format("parquet").saveAsTable(name)
-    spark.sql(s"DROP TABLE $name")
-  }
-
-  /** Re-register a bucketed state table over its existing files (a
-    * fresh session's catalog does not know it) and return the catalog
-    * scan — the only read path that carries the bucket spec into
-    * planning; a plain parquet read of the same files returns the same
-    * rows but a shuffling plan.
-    */
-  private def readBucketedTable(spark: SparkSession, path: String, key: String,
-      buckets: Int): DataFrame = {
-    val name = s"graft_state_r_${java.lang.Integer.toUnsignedString(path.hashCode)}"
-    // always re-register: a version rewritten in-session at the same
-    // path may have changed bucket count or file listing, and a stale
-    // catalog entry (or its cached FileIndex) would silently serve it
-    spark.sql(s"DROP TABLE IF EXISTS $name")
-    val ddl = StateVersions.parquetSchema(spark, Seq(path)).toDDL
-    spark.sql(s"CREATE TABLE $name ($ddl) USING PARQUET " +
-      s"CLUSTERED BY ($key) SORTED BY ($key) INTO $buckets BUCKETS LOCATION '$path'")
-    spark.table(name)
-  }
-
-  /** Join keys of the bucket-co-located tables. sigs is gated through
-    * band keys derived from the signatures (never key-joined) and
-    * kmv/cms are sketch-bounded — none of the three benefits from
-    * bucketing, so they stay plain in every layout.
-    */
-  private val bucketKeys = Map("keepers" -> "h", "ng3" -> "ng", "ng8" -> "ng")
+    classifier = "keepers")
 
   /** Write the six state tables as the FULL version `dir/v=version`
     * ([[StateVersions.writeVersion]]: published by its commit marker,
     * created last, so a crashed save is invisible and its replay
-    * rewrites the same version).
-    *
-    * `buckets = Some(B)` bucket-co-locates the three KEY-JOINED tables
-    * (keepers by h, ng3/ng8 by ng — [[bucketKeys]]) so every
-    * batch×state join of later advances runs with NO state-side
-    * exchange ([[loadStates]] exposes the layered view); costs one
-    * extra shuffle+sort per table at write (StateBucketProbe: ~3× a
-    * plain base write — pay it at bootstrap/rebase, never per delta).
+    * rewrites the same version). Every table is plain parquet; the
+    * advance's batch×state joins are planned from the sizes the engine
+    * observes (AQE), not from a write-time layout.
     *
     * ONE writer per state dir. The intended writer is a single
     * streaming query whose checkpoint serializes versions
@@ -341,15 +256,19 @@ object Ingest {
     * batches into the other's chain as sequential [[advanceOnce]] +
     * [[saveStates]] steps.
     */
-  def saveStates(st: States, dir: String, version: Long,
-      buckets: Option[Int] = None): Unit =
+  def saveStates(st: States, dir: String, version: Long): Unit =
     StateVersions.writeVersion(family, dir, version, delta = false,
-      family.tables.zip(Seq(st.keepers, st.sigs, st.ng3, st.ng8, st.kmv, st.cms)),
-      markers = buckets.map(b => BucketsMarker -> b.toString).toSeq,
-      write = (t, df, path) => (buckets, bucketKeys.get(t)) match {
-        case (Some(b), Some(key)) => writeBucketedTable(df, path, key, b)
-        case _ => df.write.mode("overwrite").parquet(path)
-      })
+      family.tables.zip(Seq(st.keepers, st.sigs, st.ng3, st.ng8, st.kmv, st.cms)))
+
+  /** [[saveStates]], with `buckets` IGNORED: the hash-bucketed base
+    * layout it once selected is retired (PLANS.md, "Measured and
+    * rejected"). Kept only so existing callers that still pass
+    * `buckets` compile; a base written bucketed by an older build is
+    * plain parquet files and loads like any other.
+    */
+  @deprecated("the bucketed layout is retired; `buckets` is ignored", "0.1.0")
+  def saveStates(st: States, dir: String, version: Long, buckets: Option[Int]): Unit =
+    saveStates(st, dir, version)
 
   /** Write one advance's [[StateDeltas]] as the DELTA version
     * `dir/v=version`: O(batch) parquet per advance, where
@@ -378,6 +297,9 @@ object Ingest {
     * and overwritten): the append tables as their base ∪ delta layers,
     * kmv/cms from the head alone. A chain whose base was compacted away
     * fails loudly — [[compactStates]] never strands a retained delta.
+    * Every table is read as plain parquet, so a base an older build
+    * wrote hash-bucketed loads the same way; its `_BUCKETS` file is
+    * inert.
     */
   def loadStates(spark: SparkSession, dir: String,
       upTo: Long = Long.MaxValue): (Long, States) =
@@ -397,21 +319,8 @@ object Ingest {
           "publish it with Ingest.adoptLegacyVersions(spark, dir) (adopts versions whose six " +
           "tables all carry parquet _SUCCESS); do NOT re-bootstrap"
       else s"no state version ≤ $upTo under ${r.dir} — run initStates + saveStates first")
-    // When the base was written bucketed, ALSO expose the key-joined
-    // tables as layers whose base leg is the registered bucketed scan:
-    // the advance's batch×state joins then run per layer and the
-    // O(state) side never shuffles. The single-frame unions below stay
-    // plain reads — same rows, and resilient to any catalog state.
-    val layers = c.baseMarker(BucketsMarker).map(_.trim.toInt).map { b =>
-      def layered(t: String): Seq[DataFrame] = {
-        val paths = c.layers(t).map(_._2)
-        readBucketedTable(r.spark, paths.head, bucketKeys(t), b) +:
-          paths.tail.map(StateVersions.readParquet(r.spark, _))
-      }
-      StateLayers(layered("keepers"), layered("ng3"), layered("ng8"))
-    }
     (c.head, States(c.read("keepers"), c.read("sigs"), c.read("ng3"), c.read("ng8"),
-      c.readHead("kmv"), c.readHead("cms"), layers))
+      c.readHead("kmv"), c.readHead("cms")))
   }
 
   /** The stream sinks' ingest step for batch `batchId`: load ≤ batchId
@@ -421,7 +330,7 @@ object Ingest {
     * delta save by [[StateVersions.rebaseAt]]. Returns the report.
     */
   private[graft] def sinkStep(b: DataFrame, r: StateVersions.Resolved, batchId: Long,
-      rebaseEvery: Option[Int], buckets: Option[Int], chunkWords: Int, k: Int, depth: Int,
+      rebaseEvery: Option[Int], chunkWords: Int, k: Int, depth: Int,
       width: Int): DataFrame = {
     val (_, st) = loadResolved(r, upTo = batchId)
     val version = batchId + 1
@@ -429,12 +338,12 @@ object Ingest {
       case None =>
         val (report, next) = advanceOnce(b, st, col("doc_id"), col("text"),
           chunkWords, k, depth, width)
-        saveStates(next, r.dir, version, buckets)
+        saveStates(next, r.dir, version)
         report
       case Some(_) =>
         val (report, next, d) = advanceOnceDelta(b, st, col("doc_id"), col("text"),
           chunkWords, k, depth, width)
-        if (StateVersions.rebaseAt(version, rebaseEvery)) saveStates(next, r.dir, version, buckets)
+        if (StateVersions.rebaseAt(version, rebaseEvery)) saveStates(next, r.dir, version)
         else saveStatesDelta(d, r.dir, version)
         report
     }

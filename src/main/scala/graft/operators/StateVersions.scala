@@ -21,23 +21,22 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    plain `<t>` dir. A DELTA version holds the family's append
   *    tables as `<t>.d` (one advance's new rows) and its other tables
   *    plain. The family's classifier table is a plain dir only in full
-  *    versions, so its presence marks a version full;
-  *  - version-level markers the family declares (ingest's `_BUCKETS`,
-  *    the bucket count of a hash-bucketed base) are written after the
-  *    tables and before the commit marker;
+  *    versions, so its presence marks a version full. Every table dir
+  *    is plain parquet, read by path; any other file in a version dir
+  *    is ignored;
   *  - `dir/_STREAM_TAG` ([[StreamTagMarker]]) pins the dir to the one
   *    stream driving it; it lives outside every version.
   *
   * Rules:
   *  - WRITE ([[writeVersion]]): un-publish (delete the commit marker),
-  *    delete the opposite layout's dirs and the family's markers, write
-  *    the tables ([[writeAll]]), write the markers, publish. A crashed
-  *    full save replayed as a delta (or the reverse) thus leaves no dir
-  *    the other read path would adopt: a stale classifier dir would
-  *    make a delta a chain base, a stale `.d` dir would double rows. A
-  *    crash anywhere leaves the version unpublished, and its replay
-  *    rewrites it. ONE writer per dir: the markers fence a crashed and
-  *    replayed save of a version, not two live writers;
+  *    delete the opposite layout's dirs, write the tables
+  *    ([[writeAll]]), publish. A crashed full save replayed as a delta
+  *    (or the reverse) thus leaves no dir the other read path would
+  *    adopt: a stale classifier dir would make a delta a chain base, a
+  *    stale `.d` dir would double rows. A crash anywhere leaves the
+  *    version unpublished, and its replay rewrites it. ONE writer per
+  *    dir: the commit marker fences a crashed and replayed save of a
+  *    version, not two live writers;
   *  - READ ([[resolve]], then [[Resolved.chainAt]]): the newest
   *    committed full base ≤ upTo plus the committed deltas above it
   *    ([[chain]]). An append table reads `base/<t>` ∪ every delta's
@@ -72,26 +71,23 @@ private[graft] object StateVersions {
 
   /** A state family's declaration: its `name` (in messages), the
     * `tables` of a full version, the `deltaTables` a delta version
-    * writes as `<t>.d` (the others are plain in both layouts), the
-    * `classifier` table whose plain dir marks a full version, and the
-    * version-level `markers` a rewrite clears.
+    * writes as `<t>.d` (the others are plain in both layouts) and the
+    * `classifier` table whose plain dir marks a full version.
     */
   final case class Family(name: String, tables: Seq[String], deltaTables: Seq[String],
-      classifier: String, markers: Seq[String] = Nil) {
+      classifier: String) {
     /** The dir table `t` is written to in a delta or a full version. */
     def tableDir(t: String, delta: Boolean): String =
       if (delta && deltaTables.contains(t)) s"$t.d" else t
     /** What a rewrite into the given layout deletes before writing. */
     private[StateVersions] def stale(delta: Boolean): Seq[String] =
-      deltaTables.map(tableDir(_, !delta)) ++ markers
+      deltaTables.map(tableDir(_, !delta))
   }
 
   /** One `v=N` dir as [[resolve]] saw it: committed, full (the
-    * classifier's plain dir present), the family markers it holds, and
-    * its modification time.
+    * classifier's plain dir present), and its modification time.
     */
-  final case class Version(v: Long, committed: Boolean, full: Boolean,
-      markers: Set[String], mtime: Long)
+  final case class Version(v: Long, committed: Boolean, full: Boolean, mtime: Long)
 
   /** A state dir's versions, ascending, and the family detected from
     * its tables (None when no version holds a candidate family's
@@ -141,10 +137,6 @@ private[graft] object StateVersions {
     def read(t: String): DataFrame = readParquet(r.spark, layers(t).map(_._2): _*)
     /** Plain table `t`, read from the head alone. */
     def readHead(t: String): DataFrame = readParquet(r.spark, s"${r.dir}/v=$head/$t")
-    /** The content of the base version's marker `name`, if it has one. */
-    def baseMarker(name: String): Option[String] =
-      if (!r.versions.exists(x => x.v == base && x.markers(name))) None
-      else Some(readString(r.fs, new Path(s"${r.dir}/v=$base/$name")))
   }
 
   private val VersionDir = "^v=(\\d+)$".r
@@ -157,8 +149,8 @@ private[graft] object StateVersions {
 
   /** Resolve `dir` against the candidate `families` in ONE listing of
     * the dir (every `v=N`, with its mtime) plus ONE glob of the names
-    * the protocol reads inside them: the commit marker, each family's
-    * classifier (plain and `.d`) and its markers. A missing dir is an
+    * the protocol reads inside them: the commit marker and each
+    * family's classifier (plain and `.d`). A missing dir is an
     * empty family (first-ever bootstrap), not an error.
     */
   def resolve(spark: SparkSession, dir: String, families: Family*): Resolved = {
@@ -170,7 +162,7 @@ private[graft] object StateVersions {
         VersionDir.findFirstMatchIn(name).map(m => (m.group(1).toLong, name, st.getModificationTime))
       }.sortBy(_._1)
     val names = (CommitMarker +: families.flatMap(f =>
-      Seq(f.classifier, s"${f.classifier}.d") ++ f.markers)).distinct
+      Seq(f.classifier, s"${f.classifier}.d"))).distinct
     // globStatus may return null (not empty) on some FS when nothing matches
     val found = if (dirs.isEmpty) Map.empty[String, Set[String]]
       else Option(fs.globStatus(new Path(s"$dir/v=*/{${names.mkString(",")}}")))
@@ -181,8 +173,7 @@ private[graft] object StateVersions {
       found.values.exists(n => n(f.classifier) || n(s"${f.classifier}.d")))
     val versions = dirs.map { case (v, name, mtime) =>
       val n = found.getOrElse(name, Set.empty[String])
-      Version(v, n(CommitMarker), family.exists(f => n(f.classifier)),
-        family.toSeq.flatMap(_.markers).filter(n).toSet, mtime)
+      Version(v, n(CommitMarker), family.exists(f => n(f.classifier)), mtime)
     }
     Resolved(spark, fs, dir, family, versions)
   }
@@ -245,15 +236,12 @@ private[graft] object StateVersions {
 
 
   /** Write `dir/v=version` of `family` in the delta or the full layout
-    * (see the module rules): un-publish, delete [[Family.stale]], run
-    * every `(table, frame)` write concurrently through `write` (given
-    * the table and its dir), write the `(name, content)` markers, and
-    * publish last.
+    * (see the module rules): un-publish, delete [[Family.stale]], write
+    * every `(table, frame)` as plain parquet concurrently, and publish
+    * last.
     */
   def writeVersion(family: Family, dir: String, version: Long, delta: Boolean,
-      tables: Seq[(String, DataFrame)], markers: Seq[(String, String)] = Nil,
-      write: (String, DataFrame, String) => Unit =
-        (_, df, path) => df.write.mode("overwrite").parquet(path)): Unit = {
+      tables: Seq[(String, DataFrame)]): Unit = {
     val base = s"$dir/v=$version"
     val fs = fsOf(tables.head._2.sparkSession, base)
     val marker = new Path(s"$base/$CommitMarker")
@@ -262,11 +250,9 @@ private[graft] object StateVersions {
       val p = new Path(s"$base/$s")
       if (fs.exists(p)) fs.delete(p, true)
     }
-    writeAll(tables.map { case (t, df) => () => write(t, df, s"$base/${family.tableDir(t, delta)}") })
-    markers.foreach { case (name, content) =>
-      val out = fs.create(new Path(s"$base/$name"), true)
-      try out.write(content.getBytes("UTF-8")) finally out.close()
-    }
+    writeAll(tables.map { case (t, df) =>
+      () => df.write.mode("overwrite").parquet(s"$base/${family.tableDir(t, delta)}")
+    })
     fs.create(marker, true).close()
   }
 
@@ -297,8 +283,7 @@ private[graft] object StateVersions {
     * exactly the sequential protocol's. Any failure propagates after
     * all writes settle — the version stays unpublished, as before.
     * Spark actions are thread-safe by contract; each write targets its
-    * own table dir (and, for bucketed writes, its own transient
-    * catalog name), so no two tasks share mutable state.
+    * own table dir, so no two tasks share mutable state.
     */
   def writeAll(writes: Seq[() => Unit]): Unit = {
     if (writes.sizeIs <= 1) writes.foreach(_.apply())

@@ -1629,8 +1629,8 @@ object PipelineCatalog {
   // near copies) chunk-deduped against the PERSISTED keeper state of
   // the existing corpus only. Every stage — explode, hash, batch
   // first-occurrence — scales with the BATCH; the corpus is touched
-  // solely through the keeper table (bucket-co-located anti-join on h
-  // at 100 TB). The oracle replays the incremental semantics directly
+  // solely through the keeper table's anti-join on h. The oracle
+  // replays the incremental semantics directly
   // — first occurrence WITHIN the batch, anti-joined against the
   // corpus chunk-hash state — with no id-ordering assumption, so it
   // stays correct at SFs where planted batch ids interleave corpus

@@ -713,11 +713,7 @@ object StateCatalog {
       val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       val batch = cycleBatch(d)
       val stateDir = s"$ingestDeltaScratch/${new java.io.File(dir).getName}"
-      // the base is saved BUCKETED (profile lakeBuckets), so the gate/
-      // score joins below run the layered bucket-co-located read path —
-      // the oracle therefore gates that layout end-to-end as well
-      Ingest.saveStates(Ingest.initStates(d, col("doc_id"), col("text")), stateDir, 0L,
-        buckets = Some(graft.GraftSession.profileOf(s).lakeBuckets))
+      Ingest.saveStates(Ingest.initStates(d, col("doc_id"), col("text")), stateDir, 0L)
       // upTo pinned on both loads (the idempotent-replay contract): a
       // REPEATED invocation in one session otherwise loads the previous
       // invocation's v=1 as state and then overwrites the very files its
@@ -957,8 +953,7 @@ object StateCatalog {
       // delta above them to orphan. DailyCycleSpec drives exactly this
       // dup-ahead-at-bootstrap replay.
       par2(
-        Ingest.saveStates(Ingest.initStates(d, col("doc_id"), col("text")), ingDir, 0L,
-          buckets = Some(graft.GraftSession.profileOf(s).lakeBuckets)),
+        Ingest.saveStates(Ingest.initStates(d, col("doc_id"), col("text")), ingDir, 0L),
         DupState.save(DupState.init(d, col("doc_id"), col("text")), dupDir, 0L))
       // batch 0: each family loads ≤ 0 and writes v=1 — ingest first,
       // then dup (the documented save order; a crash between the two
@@ -1040,15 +1035,13 @@ object StateCatalog {
       val base = new java.io.File(dir).getName
       val ingDir = s"$ingestDeltaScratch/cyc2_ing_$base"
       val dupDir = s"$ingestDeltaScratch/cyc2_dup_$base"
-      val buckets = Some(graft.GraftSession.profileOf(s).lakeBuckets)
       // both bootstraps overlapped (independent dirs —
       // StateVersions.par2, §2.6); barrier before day 1, so
       // lockstep-at-v=0 holds as before. Dup-ahead-at-bootstrap crash
       // window: benign — see q134 (replay rewrites both v=0
       // idempotently; DailyCycleSpec drives it)
       par2(
-        Ingest.saveStates(Ingest.initStates(d, col("doc_id"), col("text")), ingDir, 0L,
-          buckets = buckets),
+        Ingest.saveStates(Ingest.initStates(d, col("doc_id"), col("text")), ingDir, 0L),
         DupState.save(DupState.init(d, col("doc_id"), col("text")), dupDir, 0L))
       // day 1 → v=1: cadence 2 ⇒ 1 % 2 ≠ 0 ⇒ DELTA on both chains.
       // Per day, the two families' ADVANCE computations overlap; the
@@ -1070,7 +1063,7 @@ object StateCatalog {
       val (r2, dup2) = par2({
         val (_, i1) = Ingest.loadStates(s, ingDir, upTo = 1L)
         val (rep, next2, _) = Ingest.advanceOnceDelta(b2, i1, col("doc_id"), col("text"))
-        Ingest.saveStates(next2, ingDir, 2L, buckets = buckets)
+        Ingest.saveStates(next2, ingDir, 2L)
         rep
       }, {
         val (_, du1) = DupState.load(s, dupDir, upTo = 1L)

@@ -366,14 +366,17 @@ object EventStream {
         (col("clean_nn") === col("nn")).as("admitted"))
   }
 
-  /** MEASURED recommended `deltaRebaseEvery` for [[ingestAdvanceStream]]
-    * (tools/DeltaFanInProbe: bucketed bases pay ~0.2 s/advance per
-    * delta layer against a ~1.8 s rebase at sf1; optimum
-    * √(2·rebase/slope) ≈ 4, sf10 lands on the same 3-4). A named
-    * constant, not the signature default (VERDICT r15 nit: the
-    * measured cadence lived only in scaladoc prose, free to drift from
-    * the probe numbers; StreamingSpec pins this value to the cited
-    * measurement).
+  /** Recommended `deltaRebaseEvery` for [[ingestAdvanceStream]] and
+    * the ingest leg of [[dailyCycleStream]]. The read side does not
+    * bound it: tools/DeltaFanInProbe measured per-advance walls flat
+    * through 16 delta layers over a plain base at sf1. Version count
+    * and retention do: compaction reclaims nothing between a base and
+    * its newest dependent delta, so a chain holds up to this many
+    * versions beyond `keepLast`. 4 keeps the chain short and amortizes
+    * the sf1 rebase (1.09 s) to ~0.27 s per batch; any value up to 16
+    * is read-neutral. A named constant, not the signature default, so
+    * the number callers are told to wire cannot drift from the one
+    * DailyCycleSpec pins and the daily-cycle benchmark runs.
     */
   val IngestRebaseRecommended: Int = 4
 
@@ -426,20 +429,16 @@ object EventStream {
     * under id-order arrival the persisted family still equals the
     * batch advance chain (IngestDeltaSpec).
     *
-    * MEASURED rebase cadence (tools/DeltaFanInProbe, 16-advance chains
-    * at sf1, optimum L = √(2·rebase/slope)): with BUCKETED bases each
-    * delta layer adds ~0.2 s/advance (two shuffle-hash legs per layer
-    * per consuming action) against a ~1.8 s rebase → the RECOMMENDED
-    * setting is `deltaRebaseEvery = Some(IngestRebaseRecommended)`
-    * (= 4; sf10's slope/rebase pair lands on the same 3-4). It is NOT
-    * the signature default — the shipped default stays `None` (full
-    * save every batch), so a caller opts into delta persistence
-    * explicitly (ADVICE r15: doc and default must agree). With PLAIN
-    * bases the fan-in was flat through 16 layers (the union scan
-    * absorbs batch-sized deltas) → up to `Some(16)`; beyond that the
-    * bound is version listing + retention (compaction can reclaim
-    * nothing between a base and its newest dependent delta), not read
-    * cost.
+    * Rebase cadence (tools/DeltaFanInProbe, 16-advance chains at
+    * sf1): the fan-in is flat through 16 layers (the union scan
+    * absorbs batch-sized deltas), so the bound is version listing +
+    * retention (compaction can reclaim nothing between a base and its
+    * newest dependent delta), not read cost. The RECOMMENDED setting is
+    * `deltaRebaseEvery = Some(IngestRebaseRecommended)` (= 4; up to
+    * `Some(16)` is read-neutral). It is NOT the signature default —
+    * the shipped default stays `None` (full save every batch), so a
+    * caller opts into delta persistence explicitly (ADVICE r15: doc
+    * and default must agree).
     *
     * `streamTag` (RECOMMENDED: pass the checkpoint location) pins the
     * state dir to this stream
@@ -448,24 +447,19 @@ object EventStream {
     * location and a deleted-and-recreated one at the same path are
     * both rejected on their first batch.
     *
-    * `stateBuckets` makes every FULL save this sink performs (plain
-    * mode and delta-mode rebases) bucket-co-locate the key-joined
-    * state tables (keepers/ng3/ng8) by their join key: subsequent
-    * advances then load a layered state whose base never shuffles in
-    * the batch×state joins — the write pays one extra shuffle+sort per
-    * rebase (StateBucketProbe: ~3× a plain base write, vs ~2× off
-    * every gate/score/delta join of every advance until the next one).
+    * Every version is plain parquet ([[graft.operators.Ingest.saveStates]]);
+    * the batch×state joins are planned by AQE from observed sizes.
     */
   def ingestAdvanceStream(docs: DataFrame, stateDir: String, reportDir: String,
       chunkWords: Int = 12, k: Int = 64, depth: Int = 4, width: Int = 256,
       keepLast: Option[Int] = None, deltaRebaseEvery: Option[Int] = None,
-      stateBuckets: Option[Int] = None, streamTag: Option[String] = None) = {
+      streamTag: Option[String] = None) = {
     StateVersions.requireSinkArgs(keepLast, "deltaRebaseEvery" -> deltaRebaseEvery)
     docs.writeStream.foreachBatch { (b: DataFrame, batchId: Long) =>
       if (!b.isEmpty) {
         val r = StateVersions.guardBatch(b.sparkSession, batchId, streamTag,
           Ingest.family -> stateDir).head
-        Ingest.sinkStep(b, r, batchId, deltaRebaseEvery, stateBuckets, chunkWords, k, depth, width)
+        Ingest.sinkStep(b, r, batchId, deltaRebaseEvery, chunkWords, k, depth, width)
           .withColumn("batch_id", lit(batchId))
           .write.mode("overwrite").parquet(s"$reportDir/batch=$batchId")
         keepLast.foreach(n => Ingest.compactStates(b.sparkSession, stateDir, n))
@@ -580,7 +574,7 @@ object EventStream {
       reportDir: String, chunkWords: Int = 12, k: Int = 64, depth: Int = 4,
       width: Int = 256, keepLast: Option[Int] = None,
       ingestRebaseEvery: Option[Int] = None, dupRebaseEvery: Option[Int] = None,
-      stateBuckets: Option[Int] = None, streamTag: Option[String] = None) = {
+      streamTag: Option[String] = None) = {
     StateVersions.requireSinkArgs(keepLast,
       "ingestRebaseEvery" -> ingestRebaseEvery, "dupRebaseEvery" -> dupRebaseEvery)
     docs.writeStream.foreachBatch { (b: DataFrame, batchId: Long) =>
@@ -597,7 +591,7 @@ object EventStream {
         // materializes the comp delta once and, on a rebase version, the
         // merged assignment once — the save and the count below read them
         val (reportRow, (dd, full)) = StateVersions.par2({
-          val report = Ingest.sinkStep(b, ir, batchId, ingestRebaseEvery, stateBuckets,
+          val report = Ingest.sinkStep(b, ir, batchId, ingestRebaseEvery,
             chunkWords, k, depth, width)
           // materialized here, while dup's leg still runs
           sp.createDataFrame(java.util.Arrays.asList(report.collect(): _*), report.schema)

@@ -1,7 +1,7 @@
 // One-command daily-driver example — the stretch-8 two-dir convention
 // end-to-end, as executable documentation (VERDICT r15 stretch #7):
 //
-//   corpus bootstrap (both state dirs at v=0, ingest base bucketed)
+//   corpus bootstrap (both state dirs at v=0, plain parquet)
 //     → parquet drops land in a watched directory (one per "day")
 //     → ONE checkpointed file-source stream advances BOTH families per
 //       drop (EventStream.dailyCycleStream: ingest gates/scores/
@@ -37,8 +37,7 @@ object DailyDriver {
     // day 0: bootstrap BOTH families from the existing corpus — the
     // one-time O(corpus) pass; every later day is an advance
     val d = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
-    Ingest.saveStates(Ingest.initStates(d, col("doc_id"), col("text")), ingDir, 0L,
-      buckets = Some(graft.GraftSession.profileOf(spark).lakeBuckets))
+    Ingest.saveStates(Ingest.initStates(d, col("doc_id"), col("text")), ingDir, 0L)
     DupState.save(DupState.init(d, col("doc_id"), col("text")), dupDir, 0L)
 
     // three daily drops, one ingest class each: exact copies (die at

@@ -310,10 +310,11 @@ class DailyCycleSpec extends SparkSpecBase {
   }
 
   test("recommended rebase cadences are pinned to the measured values") {
-    // the constants exist so the scaladoc's cited measurements
-    // (DeltaFanInProbe: optimum ≈ 4; DupFanInProbe: retention-bound,
-    // conservative 8) can never drift from what callers are told to
-    // wire — a probe re-measurement must update BOTH, here and there
+    // the constants exist so the scaladoc's cited rationale (both
+    // retention-bound: DeltaFanInProbe and DupFanInProbe measured flat
+    // fan-in; ingest 4, dup a conservative 8) can never drift from what
+    // callers are told to wire — a re-measurement must update BOTH,
+    // here and there
     assert(EventStream.IngestRebaseRecommended == 4)
     assert(EventStream.DupRebaseRecommended == 8)
   }
@@ -327,7 +328,7 @@ class DailyCycleSpec extends SparkSpecBase {
     val mem = MemoryStream[(Long, String)](sp)
     val q = EventStream.dailyCycleStream(mem.toDF.toDF("doc_id", "text"),
       ingDir, dupDir, reportDir, kw, k, depth, width,
-      ingestRebaseEvery = Some(2), dupRebaseEvery = Some(2), stateBuckets = Some(2)).start()
+      ingestRebaseEvery = Some(2), dupRebaseEvery = Some(2)).start()
     val b2 = Seq((200L, nearText(0)), (201L, novelText(201L)))
     try {
       mem.addData((100L, baseText(0)), (101L, nearText(1)), (102L, novelText(102L)))
@@ -354,7 +355,7 @@ class DailyCycleSpec extends SparkSpecBase {
       assert(got == DupState.load(spark, dupDir, upTo = batchId + 1)._2.comp.count(),
         s"batch $batchId reported n_dup_assign = $got")
     }
-    // both loads, at the delta head and at the bucketed rebase head
+    // both loads, at the delta head and at the rebase head
     for (upTo <- Seq(1L, 2L)) loadSchemasMatchInference(ingDir, dupDir, upTo)
   }
 
@@ -408,11 +409,6 @@ class DailyCycleSpec extends SparkSpecBase {
       .foreach { case (t, df) => same(df, plain(ingPaths(t): _*), s"ingest $t") }
     same(ing.kmv, plain(s"$ingDir/v=$ih/kmv"), "ingest kmv")
     same(ing.cms, plain(s"$ingDir/v=$ih/cms"), "ingest cms")
-    ing.layers.foreach { l =>
-      Seq("keepers" -> l.keepers, "ng3" -> l.ng3, "ng8" -> l.ng8).foreach { case (t, layers) =>
-        layers.zip(ingPaths(t)).foreach { case (df, p) => same(df, plain(p), s"ingest $t layer $p") }
-      }
-    }
     val (_, db, dds) = chainOf(dupDir, DupState.family)
     def dupPaths(t: String) = s"$dupDir/v=$db/$t" +: dds.map(v => s"$dupDir/v=$v/$t.d")
     Seq("bands" -> dup.bands, "ngr" -> dup.ngr, "sizes" -> dup.sizes)
@@ -424,12 +420,11 @@ class DailyCycleSpec extends SparkSpecBase {
 
   test("state loads take Spark's inferred column types, int-typed ids included") {
     // int doc ids: the comp delta widens them to long, which the comp
-    // layers' unionByName must widen exactly as before; the ingest base
-    // is bucketed, so its key tables load through the catalog
+    // layers' unionByName must widen exactly as before
     val asInt = (df: DataFrame) => df.withColumn("doc_id", col("doc_id").cast("int"))
     val (ingDir, dupDir) = (tmp("int_ing"), tmp("int_dup"))
     Ingest.saveStates(Ingest.initStates(asInt(corpus), col("doc_id"), col("text"),
-      kw, k, depth, width), ingDir, 0L, buckets = Some(2))
+      kw, k, depth, width), ingDir, 0L)
     DupState.save(DupState.init(asInt(corpus), col("doc_id"), col("text")), dupDir, 0L)
     cycle(ingDir, dupDir, 0L, asInt(batch))
     val dup = DupState.load(spark, dupDir)._2

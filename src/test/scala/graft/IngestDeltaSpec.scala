@@ -140,42 +140,67 @@ class IngestDeltaSpec extends SparkSpecBase {
     assert(Ingest.loadStates(spark, dirUri)._2.sigs.count() == sigsAtRebase && sigsAtRebase >= 8L)
   }
 
-  test("bucketed base layout: layered load ≡ plain chain, advance parity, rewrite drops the layout") {
+  /** `st` as the v=0 an older build's bucketed full save wrote:
+    * keepers/ng3/ng8 as Spark bucketed+sorted tables on their join key
+    * (through a transient catalog entry; the files stay), sigs/kmv/cms
+    * plain, a `_BUCKETS` file holding the bucket count, then the
+    * commit marker.
+    */
+  private def writeLegacyBucketedBase(st: Ingest.States, dir: String, buckets: Int): Unit = {
+    val keys = Map("keepers" -> "h", "ng3" -> "ng", "ng8" -> "ng")
+    Seq("keepers" -> st.keepers, "sigs" -> st.sigs, "ng3" -> st.ng3, "ng8" -> st.ng8,
+        "kmv" -> st.kmv, "cms" -> st.cms).foreach { case (t, df) =>
+      val path = s"$dir/v=0/$t"
+      keys.get(t) match {
+        case Some(key) =>
+          val name = s"graft_legacy_bucketed_$t"
+          spark.sql(s"DROP TABLE IF EXISTS $name")
+          df.repartition(buckets, col(key)).write.mode("overwrite")
+            .bucketBy(buckets, key).sortBy(key)
+            .option("path", path).format("parquet").saveAsTable(name)
+          spark.sql(s"DROP TABLE $name")
+        case None => df.write.mode("overwrite").parquet(path)
+      }
+    }
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(new org.apache.hadoop.fs.Path(s"$dir/v=0/_BUCKETS"), true)
+    try out.write(buckets.toString.getBytes("UTF-8")) finally out.close()
+    fs.create(new org.apache.hadoop.fs.Path(s"$dir/v=0/_COMMITTED"), true).close()
+  }
+
+  test("legacy bucketed base: loads, advances, delta-saves, rewrites ≡ plain chain") {
     val plainDir = "file://" +
       java.nio.file.Files.createTempDirectory("graft_delta_bplain").toString
     val bucketDir = "file://" +
       java.nio.file.Files.createTempDirectory("graft_delta_bbuck").toString
     val st0 = Ingest.initStates(corpusDf, col("doc_id"), col("text"), kw, k, depth, width)
     Ingest.saveStates(st0, plainDir, 0L)
-    Ingest.saveStates(st0, bucketDir, 0L, buckets = Some(4))
-    // the bucketed base carries Spark's bucket-file naming + the layout marker
+    writeLegacyBucketedBase(st0, bucketDir, 4)
+    // the fixture carries Spark's bucket-file naming + the layout file
     val fs = new org.apache.hadoop.fs.Path(bucketDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$bucketDir/v=0/${Ingest.BucketsMarker}")))
+    def bucketFiles(v: Long, t: String) =
+      fs.globStatus(new org.apache.hadoop.fs.Path(s"$bucketDir/v=$v/$t/*_0000[0-3].*")).length
     assert(versionTree(bucketDir, 0L) == fullTree + "_BUCKETS")
-    assert(fs.globStatus(new org.apache.hadoop.fs.Path(s"$bucketDir/v=0/ng8/*_00003*")).nonEmpty,
-      "bucketed ng8 base missing bucket-suffixed files")
+    assert(bucketFiles(0L, "ng8") > 0, "legacy ng8 base missing bucket-suffixed files")
+    sameStates(Ingest.loadStates(spark, plainDir)._2, Ingest.loadStates(spark, bucketDir)._2)
     (1L to 2L).foreach { v =>
       val (rP, _, dP) = Ingest.advanceOnceDelta(batchDf(v), Ingest.loadStates(spark, plainDir)._2,
         col("doc_id"), col("text"), kw, k, depth, width)
-      val stB = Ingest.loadStates(spark, bucketDir)._2
-      assert(stB.layers.nonEmpty, "bucketed chain load must expose layers")
-      assert(stB.layers.get.ng8.size == v.toInt, s"expected ${v.toInt} ng8 layers before advance $v")
-      val (rB, _, dB) = Ingest.advanceOnceDelta(batchDf(v), stB,
+      val (rB, _, dB) = Ingest.advanceOnceDelta(batchDf(v), Ingest.loadStates(spark, bucketDir)._2,
         col("doc_id"), col("text"), kw, k, depth, width)
       assert(rP.collect().map(_.toSeq).toSeq == rB.collect().map(_.toSeq).toSeq,
-        s"advance $v report diverged between plain and bucketed-layered state")
+        s"advance $v report diverged between the plain and the legacy base")
       Ingest.saveStatesDelta(dP, plainDir, v)
       Ingest.saveStatesDelta(dB, bucketDir, v)
       assert(versionTree(bucketDir, v) == deltaTree)
     }
     sameStates(Ingest.loadStates(spark, plainDir)._2, Ingest.loadStates(spark, bucketDir)._2)
-    // a plain rewrite of the bucketed base drops the layout marker —
-    // a later load must not trust stale bucket metadata
+    // a rewrite of the legacy base is plain parquet; the leftover
+    // `_BUCKETS` file is inert
     Ingest.saveStates(st0, bucketDir, 0L)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$bucketDir/v=0/${Ingest.BucketsMarker}")))
-    assert(versionTree(bucketDir, 0L) == fullTree)
-    assert(Ingest.loadStates(spark, bucketDir)._2.layers.isEmpty)
+    assert(bucketFiles(0L, "ng8") == 0, "a rewrite kept bucket-suffixed files")
+    sameStates(Ingest.loadStates(spark, plainDir)._2, Ingest.loadStates(spark, bucketDir)._2)
   }
 
   test("a version rewrite removes the opposite layout's stale dirs (crashed-save crossover)") {

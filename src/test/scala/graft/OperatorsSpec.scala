@@ -217,6 +217,33 @@ class DedupSpec extends SparkSpecBase {
 class ConnectedComponentsSpec extends SparkSpecBase {
   import TestSpark.spark.implicits._
 
+  /** `body`'s result and how many Spark jobs it started from the
+    * driver finish's edge fetch (a stage whose call site names
+    * `unionFindLabels`). A marker job after `body` bounds the
+    * asynchronous listener delivery.
+    */
+  private def withFetchJobs[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val marker = s"cc-fetch-marker-${System.nanoTime()}"
+    val fetches = new java.util.concurrent.atomic.AtomicInteger
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        if (e.stageInfos.exists(_.details.contains("unionFindLabels"))) fetches.incrementAndGet()
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
+          markerSeen.countDown()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setJobDescription(marker)
+      try sc.parallelize(1 to 1, 1).count() finally sc.setJobDescription(null)
+      assert(markerSeen.await(30, java.util.concurrent.TimeUnit.SECONDS), "marker job not seen")
+      (out, fetches.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("min-label propagation resolves transitive chains and isolates") {
     // 1-2-3-4 is a diameter-3 chain (needs >1 round), 10-11 a pair,
     // 20-21 + 21-22 + 20-22 a triangle with a redundant edge.
@@ -239,8 +266,10 @@ class ConnectedComponentsSpec extends SparkSpecBase {
       Dedup.ccWithPath(s.createDataFrame(es).toDF("id_a", "id_b"))
     for ((s, wantDriver) <- Seq(spark -> true, starSess -> false)) {
       // 300-hop chain: every one of the 301 nodes labels to 0 either way
-      val (deep, onDriver) = run(s, chainEdges)
+      val ((deep, onDriver), fetchJobs) = withFetchJobs(run(s, chainEdges))
       assert(onDriver == wantDriver, s"chain took the wrong path (driver = $onDriver)")
+      // the driver finish fetches every pair partition in ONE job
+      assert(fetchJobs == (if (wantDriver) 1 else 0), s"edge fetch ran $fetchJobs job(s)")
       val labels = deep.select("cluster_id").distinct().as[Long].collect().toSeq
       assert(labels == Seq(0L), s"chain not fully contracted: $labels")
       assert(deep.count() == 301)

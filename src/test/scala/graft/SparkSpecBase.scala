@@ -30,9 +30,8 @@ abstract class SparkSpecBase extends AnyFunSuite {
   }
 
   /** The tree [[versionTree]] expects of a committed version whose
-    * table dirs are `tables` (each with Spark's `_SUCCESS`) plus the
-    * version-level `markers` besides `_COMMITTED`.
+    * table dirs are `tables` (each with Spark's `_SUCCESS`).
     */
-  def committedTree(tables: Seq[String], markers: String*): Set[String] =
-    (tables.flatMap(t => Seq(t, s"$t/_SUCCESS")) ++ markers :+ "_COMMITTED").toSet
+  def committedTree(tables: Seq[String]): Set[String] =
+    (tables.flatMap(t => Seq(t, s"$t/_SUCCESS")) :+ "_COMMITTED").toSet
 }
