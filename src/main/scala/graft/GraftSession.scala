@@ -89,6 +89,11 @@ object GraftSession {
     * adjust both tails at runtime); 10^6-row hot-bucket threshold =
     * the point where one cell's verify work (~minutes) dominates a
     * task; 32-way salt caps any cell at ~3% of a straggler.
+    *
+    * The cluster submit sets `spark.checkpoint.dir` (a reliable,
+    * shared store): staging (`Dedup.stageEager`) checkpoints there so
+    * a lost executor is recomputed from the checkpoint, never
+    * job-fatal, and refuses to run under this profile without it.
     */
   val Cluster1000: Profile = Profile(
     name = "cluster1000",
@@ -137,6 +142,12 @@ object GraftSession {
     // deployment replaces this with the store's manifest committer
     // anyway; speculative execution stays off.
     "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version" -> "2",
+    // reliable-checkpoint files (staging when spark.checkpoint.dir is
+    // set) are deleted by the ContextCleaner once their RDD is
+    // unreachable — the lifetime local-checkpoint blocks already have —
+    // instead of piling up in the dir for the application's lifetime.
+    // SparkContext-level conf, like the scheduler mode.
+    "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true",
     "spark.sql.shuffle.partitions" -> p.shufflePartitions.toString,
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.adaptive.enabled" -> "true",

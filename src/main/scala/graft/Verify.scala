@@ -10,19 +10,23 @@ object Verify {
     // spot-checks); the driver's 2-arg call dumps the full catalog
     val only = if (args.length > 2) args.drop(2).toSet else SparkEntry.queries.keySet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // Profile-invariance gate (r10): SPARK_GRAFT_PROFILE overrides the
     // OPERATOR-knob profile (salts, hot thresholds, lake buckets —
-    // consumed via GraftSession.profileOf) while the builder above
+    // consumed via GraftSession.profileOf) while the builder below
     // keeps LOCAL sizing (shuffle partitions = cpus). Running the full
     // battery with cluster1000 knobs proves "knobs change sizing,
-    // never answers" as a gate instead of prose.
-    sys.env.get("SPARK_GRAFT_PROFILE").foreach(p =>
-      spark.conf.set("spark.graft.profile", p))
+    // never answers" as a gate instead of prose. The cluster profile
+    // stages through a reliable checkpoint only, so it gets a
+    // checkpoint dir in a JVM-scoped scratch dir (outside outDir).
+    val profile = sys.env.get("SPARK_GRAFT_PROFILE")
+    val b = GraftSession.tune(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus))
+    val spark = (if (profile.contains(GraftSession.Cluster1000.name))
+      b.config("spark.checkpoint.dir", graft.queries.StateCatalog.jvmScratch("graft_verify_ckpt"))
+    else b).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    profile.foreach(p => spark.conf.set("spark.graft.profile", p))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => only(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

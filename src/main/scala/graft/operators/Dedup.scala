@@ -34,192 +34,30 @@ object Dedup {
     }
 
   /** Eagerly materialize a staged intermediate that multiple
-    * consumers re-read — deployment-aware (ADVICE r7): executor-local
-    * checkpoint blocks are NOT fault-tolerant, so at cluster scale a
-    * lost executor would fail the job instead of recomputing.
-    *  - a RELIABLE checkpoint dir is set (`sc.setCheckpointDir`, the
+    * consumers re-read, or an iterative loop's state whose lineage
+    * growth must be truncated (CC edge tables). Both branches are
+    * freed by Spark's ContextCleaner once the returned DataFrame is
+    * unreachable (GraftSession pins
+    * `spark.cleaner.referenceTracking.cleanCheckpoints`):
+    *  - a RELIABLE checkpoint dir is set (`spark.checkpoint.dir`, the
     *    cluster submit's job): fault-tolerant `checkpoint`;
-    *  - cluster profile without one: persist MEMORY_AND_DISK with
-    *    LINEAGE RETAINED — slower re-derivation on executor loss,
-    *    never job-fatal;
-    *  - local harness: `localCheckpoint` — fastest, and executor loss
-    *    there is JVM loss anyway.
+    *  - none: `localCheckpoint` — fastest, and on the local harness
+    *    executor loss is JVM loss anyway.
+    * Executor-local checkpoint blocks are NOT fault-tolerant, so the
+    * cluster profile refuses to stage without a reliable dir rather
+    * than let a lost executor fail the job.
     */
   private[graft] def stageEager(df: DataFrame): DataFrame = {
     val sess = df.sparkSession
     if (sess.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager = true)
-    else if (graft.GraftSession.profileOf(sess).name == graft.GraftSession.Cluster1000.name) {
-      import org.apache.spark.storage.StorageLevel
-      val d = df.persist(StorageLevel.MEMORY_AND_DISK); d.count()
-      // Register under the LIST lock with an identity re-check (ADVICE
-      // r10): releaseCompleted may remove an emptied list from the map
-      // between our computeIfAbsent and add — an entry added to that
-      // orphaned list could never be released. Removal also holds the
-      // list lock, so `map.get eq list` under it is race-free; retry on
-      // a fresh list if we lost.
-      val entry = StagedEntry(currentToken.get, d)
-      var registered = false
-      while (!registered) {
-        val list = stagedBySession.computeIfAbsent(sess, _ =>
-          java.util.Collections.synchronizedList(
-            new java.util.ArrayList[StagedEntry]()))
-        list.synchronized {
-          if (stagedBySession.get(sess) eq list) { list.add(entry); registered = true }
-        }
-      }
-      d
-    } else df.localCheckpoint(eager = true)
-  }
-
-  /** A staged block plus the entry-point invocation that registered
-    * it (`token` is null only if [[stageEager]] ran outside any entry
-    * scope — treated as a completed invocation's block).
-    */
-  private final case class StagedEntry(token: AnyRef, df: DataFrame)
-
-  /** Staging blocks persisted by [[stageEager]]'s Cluster1000
-    * MEMORY_AND_DISK fallback, per session. Disk-backed cache blocks
-    * are only freed on unpersist or app end, so in a long-lived
-    * cluster session each staged intermediate would otherwise leak —
-    * its consumers are lazy (the caller acts on the returned
-    * DataFrame AFTER the operator returns), so the operator itself
-    * cannot know when unpersisting is cache-safe. Contract instead:
-    * every staging entry point ([[dedupFunnel]], [[fuzzyJoin1]],
-    * [[ngramJaccardPairs]], [[ngramContainmentPairs]],
-    * [[ForecastPipeline.run]]) releases the
-    * blocks of previously COMPLETED invocations on entry — residency
-    * is bounded by the in-flight invocations plus the most recent
-    * completed one, instead of growing with call count — and
-    * [[releaseStaged]] is the explicit cleanup handle a session calls
-    * once its last dedup result has been consumed. Entries are tagged
-    * with their invocation's token, so a concurrent entrant on the
-    * same session (concurrent Spark jobs are a normal driver pattern)
-    * never unpersists another invocation's blocks mid-flight — it
-    * releases only tokens no longer live. Releasing before a prior
-    * RESULT was consumed is still possible (results are lazy and
-    * outlive their invocation) and is lineage-safe (the persist
-    * branch retains lineage by design): the consumer recomputes
-    * without the cache — slower, never wrong.
-    *
-    * Lifecycle caveat: the map holds strong references to sessions
-    * (weak keys can't work — the staged DataFrames reference their
-    * session, so the values would pin the keys anyway). A long-lived
-    * driver that mints many short-lived sessions (session-per-user
-    * servers) MUST call [[releaseStaged]] when retiring a session, or
-    * the session, its plans, and its disk-backed cache blocks stay
-    * pinned for the app lifetime — there is no session-end event in
-    * Spark to hook this automatically.
-    */
-  private val stagedBySession =
-    new java.util.concurrent.ConcurrentHashMap[org.apache.spark.sql.SparkSession,
-      java.util.List[StagedEntry]]()
-
-  /** Tokens of entry-point invocations currently executing (on any
-    * thread); entry-release skips their blocks.
-    */
-  private val liveTokens =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[AnyRef]()
-
-  /** The entry-point invocation token for the current thread, set for
-    * the duration of [[withStagingScope]] so [[stageEager]] can tag
-    * the entries it registers.
-    */
-  private val currentToken = new ThreadLocal[AnyRef]
-
-  /** Runs a staging entry point: mints an invocation token, releases
-    * the blocks of every COMPLETED prior invocation on this session
-    * (bounded residency), and retires the token when the body
-    * returns. The body's own staged blocks stay registered — their
-    * consumers are lazy — and are freed by the next entrant or by
-    * [[releaseStaged]].
-    */
-  private[graft] def withStagingScope[A](sess: org.apache.spark.sql.SparkSession)(body: => A): A = {
-    val tok = new Object
-    // Reentrant (ADVICE r10): a composed entry point (e.g. a pipeline
-    // calling fuzzyJoin1 inside its own scope) must get the OUTER token
-    // back when the nested scope exits, or the outer invocation's
-    // subsequent stageEager entries would be tagged null and become
-    // releasable mid-flight by any concurrent entrant.
-    val prev = currentToken.get
-    liveTokens.add(tok)
-    currentToken.set(tok)
-    releaseCompleted(sess)
-    try body
-    finally {
-      if (prev == null) currentToken.remove() else currentToken.set(prev)
-      liveTokens.remove(tok)
+    else {
+      require(graft.GraftSession.profileOf(sess) != graft.GraftSession.Cluster1000,
+        "the cluster1000 profile stages through a reliable checkpoint: set " +
+          "spark.checkpoint.dir when submitting (a local checkpoint would make " +
+          "executor loss job-fatal)")
+      df.localCheckpoint(eager = true)
     }
   }
-
-  /** Unpersist and deregister this session's staged blocks whose
-    * invocation is no longer live (entry-release; never touches an
-    * in-flight concurrent invocation's staging).
-    */
-  private def releaseCompleted(sess: org.apache.spark.sql.SparkSession): Unit = {
-    val staged = stagedBySession.get(sess)
-    if (staged != null) staged.synchronized {
-      val it = staged.iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.token == null || !liveTokens.contains(e.token)) {
-          e.df.unpersist(blocking = false); it.remove()
-        }
-      }
-      if (staged.isEmpty) stagedBySession.remove(sess, staged)
-    }
-  }
-
-  /** Release ALL Cluster1000 staging blocks this session holds,
-    * including any in-flight invocation's (the explicit cleanup
-    * handle — call after the last dedup result is consumed, and when
-    * retiring a session in a multi-session driver). Lineage-safe even
-    * if called early: consumers recompute without the cache.
-    */
-  def releaseStaged(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val staged = stagedBySession.remove(spark)
-    if (staged != null) staged.synchronized {
-      staged.forEach(e => { e.df.unpersist(blocking = false); () })
-    }
-  }
-
-  /** Registered-but-unreleased staging entries for a session (spec
-    * observability — the bounded-residency contract's direct gauge).
-    */
-  private[graft] def stagedBlockCount(spark: org.apache.spark.sql.SparkSession): Int = {
-    val l = stagedBySession.get(spark)
-    if (l == null) 0 else l.size
-  }
-
-  /** The calling thread's staging-scope token (null outside any
-    * scope) — capture it before handing work to a helper thread, then
-    * install it there with [[withStagingToken]]. A pool thread that
-    * stages WITHOUT the caller's token registers null-token entries,
-    * which [[releaseCompleted]] treats as a completed invocation's
-    * blocks — any concurrent entry point could unpersist them
-    * mid-flight (r17 verdict #1: the par2 overlap could cancel itself
-    * exactly that way on the Cluster1000 staging path).
-    */
-  private[graft] def currentStagingToken: AnyRef = currentToken.get
-
-  /** Run `body` with `tok` installed as this thread's staging token
-    * (set/restore) — the helper-thread half of the token-propagation
-    * contract above. Passing null runs body unscoped, as before.
-    */
-  private[graft] def withStagingToken[A](tok: AnyRef)(body: => A): A = {
-    val prev = currentToken.get
-    if (tok == null) currentToken.remove() else currentToken.set(tok)
-    try body
-    finally { if (prev == null) currentToken.remove() else currentToken.set(prev) }
-  }
-
-  /** [[stageEager]] for ITERATIVE loop state (CC label/edge tables):
-    * lineage GROWTH is what the checkpoint truncates, so the
-    * persist-with-lineage branch is not an option — reliable
-    * checkpoint when a dir is set, executor-local otherwise.
-    */
-  private def iterEager(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager = true)
-    else df.localCheckpoint(eager = true)
 
   /** Exact duplicate groups by md5 content hash. Returns one row per
     * duplicated content: (keep_id = min doc id, n_copies).
@@ -604,7 +442,7 @@ object Dedup {
     * phrases). Returns (id_a, id_b, jaccard) for jaccard >= minJaccard.
     */
   def ngramJaccardPairs(df: DataFrame, id: Column, text: Column, n: Int,
-      maxDf: Int, minJaccard: Double): DataFrame = withStagingScope(df.sparkSession) {
+      maxDf: Int, minJaccard: Double): DataFrame = {
     val (inter, sizes) = rarePairCounts(df, id, text, n, maxDf)
     inter
       .join(sizes.select(col("doc_id").as("id_a"), col("nn").as("na")), Seq("id_a"))
@@ -633,7 +471,7 @@ object Dedup {
     * partial-agg'd 8-byte-keyed exchange, no self-join.
     */
   def ngramContainmentPairs(df: DataFrame, id: Column, text: Column, n: Int,
-      maxDf: Int, minPpm: Long): DataFrame = withStagingScope(df.sparkSession) {
+      maxDf: Int, minPpm: Long): DataFrame = {
     val (inter, sizes) = rarePairCounts(df, id, text, n, maxDf)
     val swap = col("na") > col("nb") // contained side = smaller ngram set; na=nb → a (id_a < id_b)
     inter
@@ -915,7 +753,7 @@ object Dedup {
       // makes the intersection join over-count, and na + nb - inter can
       // reach ZERO on verbatim copies sharing the collision — ANSI `/`
       // would kill the job (guaranteed to fire at lake scale; observed
-      // at 200k docs by NgrLayoutProbe). try_divide yields NULL → the
+      // at 200k docs, probe since deleted). try_divide yields NULL → the
       // pair drops, exactly the DuckDB oracle's division-by-zero (NULL)
       .withColumn("jaccard", try_divide(col("inter").cast("double"),
         col("na") + col("nb") - col("inter")))
@@ -1242,7 +1080,7 @@ object Dedup {
     // contraction, fresh-row anti-join), and when it arrives as a lazy
     // LSH pair chain each consumer would otherwise re-run the whole
     // candidate+verify derivation (bench: ~3× the q129 edge cost)
-    val edges = iterEager(newEdges
+    val edges = stageEager(newEdges
       .select(col("id_a").cast("long").as("id_a"), col("id_b").cast("long").as("id_b"))
       .filter(col("id_a") =!= col("id_b")))
     val eps = edges.select(col("id_a").as("id"))
@@ -1320,7 +1158,7 @@ object Dedup {
     * materializes anything the next stage doesn't need.
     */
   def dedupFunnel(df: DataFrame, id: Column, text: Column,
-      estScreenMinRows: Long = 0L): DataFrame = withStagingScope(df.sparkSession) {
+      estScreenMinRows: Long = 0L): DataFrame = {
     val base = df.select(id.as("doc_id"), text.as("text"))
     val k1 = base.groupBy(md5(col("text").cast("binary")).as("h"))
       .agg(min(col("doc_id")).as("doc_id"))
@@ -1447,12 +1285,12 @@ object Dedup {
     val p = math.max(1, math.min(pr.sparkSession.sparkContext.defaultParallelism,
       (nEdges / 250000L).toInt))
     // canonical orientation larger→smaller (hi, lo); self-loops drop.
-    // Each round's edge set is localCheckpoint'ed: a round references
+    // Each round's edge set is staged (stageEager): a round references
     // the previous edges ~5× (symmetric view + two grouped-min
     // joins), so an un-truncated lineage would grow the LOGICAL PLAN
     // exponentially in the round count — O(log d) execution rounds
     // with O(c^rounds) analysis cost. Checkpointing pins each round
-    // to a constant-size block-backed plan (the materialization is
+    // to a constant-size checkpointed plan (the materialization is
     // free — the convergence check scans the round anyway). The
     // checkpoint leaves carry no statistics, so it is AQE's runtime
     // sizes that turn the per-round joins into broadcasts.
@@ -1461,7 +1299,7 @@ object Dedup {
         least(col("id_a"), col("id_b")).as("lo"))
       .filter(col("hi") =!= col("lo")).distinct()
       .repartition(p, col("hi"))
-      .transform(iterEager)
+      .transform(stageEager)
     var round = 0
     // a set of edges is a fixed point iff it is a disjoint union of
     // stars: no node appears both as a child (hi) and a root (lo),
@@ -1496,7 +1334,7 @@ object Dedup {
         .filter(col("hi") =!= col("lo"))
         .distinct()
         .repartition(p, col("hi"))
-        .transform(iterEager)
+        .transform(stageEager)
       converged = isStars(next)
       edges = next
       round += 1
@@ -1515,7 +1353,7 @@ object Dedup {
       .unionByName(pr.select(col("id_b").as("doc_id"))).distinct()
     val out = nodes.join(starLabels, Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
-      .transform(iterEager)
+      .transform(stageEager)
     (out, round)
   }
 
@@ -1650,11 +1488,11 @@ object Dedup {
     * banding's candidate volume explodes on natural text because
     * chunk values are heavily biased: at 500k docs the 4×16-bit
     * scheme produced 764M candidate pairs with 58% in the top ten
-    * (chunk, cv) buckets (SimHashSkewProbe), and the verify volume —
-    * not task placement — owned the gate's wall (salting the hot
+    * (chunk, cv) buckets (skew probe since deleted), and the verify
+    * volume — not task placement — owned the gate's wall (salting the hot
     * buckets was measured a net LOSS: 49 s unsalted vs 58-65 s at
-    * salts 4-32, SigGateProbe). The fix is more specific candidates:
-    * split the signature into m = maxDist + 2 chunks and band on
+    * salts 4-32, gate probe since deleted). The fix is more specific
+    * candidates: split the signature into m = maxDist + 2 chunks and band on
     * every PAIR of chunks — C(m, 2) bands whose keys carry TWO chunk
     * values (~2× the bits of a single-chunk key). Exactness is the
     * same pigeonhole one level up: ≤ maxDist flipped bits touch
@@ -1666,7 +1504,7 @@ object Dedup {
     * order, the [[simHashFirstMatch]] idea generalized), so no
     * distinct exchange. For maxDist = 3: 5 chunks of ≤ 13 bits,
     * 10 bands, 26-bit keys — measured 48.0 → 11.8 s on the 500k-doc
-    * gate with identical gate output (SigGateProbe; wider bands lose
+    * gate with identical gate output (probe since deleted; wider bands lose
     * again — r = 3 needs 11-bit chunks whose values are MORE biased,
     * measured 54.9 s — so bandSize stays 2).
     */
@@ -1774,7 +1612,7 @@ object Dedup {
         // boilerplate-heavy corpora (titles repeat); on near-distinct
         // corpora (the catalog corpus measures 1.01–1.06× duplication)
         // the two distincts + two expansion joins are pure overhead —
-        // measured in tools/FuzzyCollapseProbe, hence opt-in.
+        // measured by a probe since deleted, hence opt-in.
         // distinct (id, string) rows before the expansion joins: the
         // core path's final distinct already collapses repeated input
         // rows, so without this the two modes would disagree on
@@ -1788,7 +1626,7 @@ object Dedup {
           .select(col("l_id").as("l_s"), col("r_id").as("r_s"), col("dist"))
           .join(lBase, Seq("l_s")).join(rBase, Seq("r_s"))
           .select(col("l_id"), col("r_id"), col("dist"))
-      } else withStagingScope(left.sparkSession) {
+      } else {
     val lBase = left.select(lId.as("l_id"), lStr.as("l_s"))
     val rBase = right.select(rId.as("r_id"), rStr.as("r_s"))
     // The TARGET LENGTH rides in the segment key: a left probe built

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   *    exact-Jaccard verification intersects. A per-doc ARRAY layout
   *    (~200× fewer rows, hypothesized r14 as the cure for the
   *    subsystem's last corpus-growth term) was built and MEASURED
-  *    (tools/NgrLayoutProbe, 200k/500k docs, identical outputs): the
+  *    (probe since deleted, 200k/500k docs, identical outputs): the
   *    advance is a wash (13.27 vs 13.22 s at 500k) and the bootstrap
   *    is 1.7× SLOWER (its three consumers re-explode the array the
   *    exploded layout reads materialized) — the broadcast-filtered
@@ -94,8 +94,8 @@ object DupState {
     * so a doc can carry the SAME hash for two different shingles — the
     * intersection join then over-counts and `na + nb - inter` can
     * reach zero on verbatim copies sharing the collision (found by
-    * NgrLayoutProbe at 200k docs; GUARANTEED at lake scale). Under
-    * ANSI that divided to a job-killing error; try_divide yields NULL
+    * a layout probe at 200k docs, since deleted; GUARANTEED at lake
+    * scale). Under ANSI that divided to a job-killing error; try_divide yields NULL
     * → the pair is dropped, exactly what the DuckDB oracle computes
     * (its double division by zero is NULL).
     */
@@ -153,15 +153,14 @@ object DupState {
     */
   def init(docs: DataFrame, id: Column, text: Column, n: Int = 3,
       bands: Int = 4, rowsPerBand: Int = 4, minJaccard: Double = 0.5,
-      salts: Int = 0): DupDeltas =
-    Dedup.withStagingScope(docs.sparkSession) {
-      val (ngr, sizes, banded0) = derive(docs, id, text, n, bands, rowsPerBand)
-      val banded = Dedup.stageEager(banded0)
-      val cand = selfCandidates(banded, resolveSalts(salts, docs))
-      val pairs = verify(cand, ngr, ngr, sizes, sizes, minJaccard)
-      val comp = Dedup.connectedComponents(pairs)
-      DupDeltas(banded, ngr, sizes, comp)
-    }
+      salts: Int = 0): DupDeltas = {
+    val (ngr, sizes, banded0) = derive(docs, id, text, n, bands, rowsPerBand)
+    val banded = Dedup.stageEager(banded0)
+    val cand = selfCandidates(banded, resolveSalts(salts, docs))
+    val pairs = verify(cand, ngr, ngr, sizes, sizes, minJaccard)
+    val comp = Dedup.connectedComponents(pairs)
+    DupDeltas(banded, ngr, sizes, comp)
+  }
 
   /** Advance the persisted state by one batch of NEW docs (ids not in
     * the state — the append arrival contract). Returns the batch's
@@ -175,30 +174,29 @@ object DupState {
     */
   def advance(st: LoadedDupState, docs: DataFrame, id: Column, text: Column,
       n: Int = 3, bands: Int = 4, rowsPerBand: Int = 4,
-      minJaccard: Double = 0.5, salts: Int = 0): DupDeltas =
-    Dedup.withStagingScope(docs.sparkSession) {
-      val (bNgr, bSizes, bBands0) = derive(docs, id, text, n, bands, rowsPerBand)
-      val bBands = Dedup.stageEager(bBands0)
-      // cross candidates: broadcast the batch's band keys into ONE scan
-      // of the persisted bands table — the state side never exchanges
-      val candCross = st.bands
-        .join(broadcast(bBands.select(col("doc_id").as("id_a"), col("band"), col("bh"))),
-          Seq("band", "bh"))
-        .select(col("id_a"), col("doc_id").as("id_b")).distinct()
-      // old-side verify inputs: ONE scan of ngr/sizes, filtered by the
-      // batch-bounded candidate old-id set (broadcast semi-join)
-      val oldIds = candCross.select(col("id_b").as("doc_id")).distinct()
-      val oldNgr = st.ngr.join(broadcast(oldIds), Seq("doc_id"))
-      val oldSizes = st.sizes.join(broadcast(oldIds), Seq("doc_id"))
-      val crossPairs = verify(candCross, bNgr, oldNgr, bSizes, oldSizes, minJaccard)
-      // intra candidates: the batch against itself (id_a < id_b),
-      // salted like init's corpus self-join
-      val candIntra = selfCandidates(bBands, resolveSalts(salts, docs))
-      val intraPairs = verify(candIntra, bNgr, bNgr, bSizes, bSizes, minJaccard)
-      val edges = crossPairs.unionByName(intraPairs)
-      val compDelta = Dedup.clusterStateAdvanceDelta(st.comp, edges)
-      DupDeltas(bBands, bNgr, bSizes, compDelta)
-    }
+      minJaccard: Double = 0.5, salts: Int = 0): DupDeltas = {
+    val (bNgr, bSizes, bBands0) = derive(docs, id, text, n, bands, rowsPerBand)
+    val bBands = Dedup.stageEager(bBands0)
+    // cross candidates: broadcast the batch's band keys into ONE scan
+    // of the persisted bands table — the state side never exchanges
+    val candCross = st.bands
+      .join(broadcast(bBands.select(col("doc_id").as("id_a"), col("band"), col("bh"))),
+        Seq("band", "bh"))
+      .select(col("id_a"), col("doc_id").as("id_b")).distinct()
+    // old-side verify inputs: ONE scan of ngr/sizes, filtered by the
+    // batch-bounded candidate old-id set (broadcast semi-join)
+    val oldIds = candCross.select(col("id_b").as("doc_id")).distinct()
+    val oldNgr = st.ngr.join(broadcast(oldIds), Seq("doc_id"))
+    val oldSizes = st.sizes.join(broadcast(oldIds), Seq("doc_id"))
+    val crossPairs = verify(candCross, bNgr, oldNgr, bSizes, oldSizes, minJaccard)
+    // intra candidates: the batch against itself (id_a < id_b),
+    // salted like init's corpus self-join
+    val candIntra = selfCandidates(bBands, resolveSalts(salts, docs))
+    val intraPairs = verify(candIntra, bNgr, bNgr, bSizes, bSizes, minJaccard)
+    val edges = crossPairs.unionByName(intraPairs)
+    val compDelta = Dedup.clusterStateAdvanceDelta(st.comp, edges)
+    DupDeltas(bBands, bNgr, bSizes, compDelta)
+  }
 
   /** Merge a loaded state with one advance's deltas into FULL tables —
     * the rebase write: append tables union; comp latest-wins with the

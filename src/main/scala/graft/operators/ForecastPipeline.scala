@@ -164,14 +164,13 @@ object ForecastPipeline {
   /** Full pipeline: synth forecast rows → final daily table with the
     * rain derivation and the request-window GREATEST/LEAST clamps.
     */
-  def run(synth: DataFrame, clampLoS: Long, clampHiS: Long): DataFrame =
-      Dedup.withStagingScope(synth.sparkSession) {
-    // Deployment-aware staging (r10, Dedup.stageEager — q27 rides the
-    // same per-session registry and releaseStaged handle as the dedup
-    // entry points): the dedup output feeds both the daily rollup and
-    // the precip stage, so it's materialized ONCE — with the ordering
-    // columns dropped first, since only the dedup needed them and the
-    // staged blocks shouldn't carry them. pr is NOT staged: the
+  def run(synth: DataFrame, clampLoS: Long, clampHiS: Long): DataFrame = {
+    // Staging (Dedup.stageEager — a reliable checkpoint when
+    // spark.checkpoint.dir is set, else a local one; the cluster
+    // profile requires the dir): the dedup output feeds both the daily
+    // rollup and the precip stage, so it's materialized ONCE — with the
+    // ordering columns dropped first, since only the dedup needed them
+    // and the staged data shouldn't carry them. pr is NOT staged: the
     // single-exchange precip stage consumes it exactly once, and it's
     // a narrow filter+project of the staged dedup output.
     // ONE exchange for the whole pipeline (r10): hash-partition by
@@ -180,8 +179,8 @@ object ForecastPipeline {
     // SUPERSET of {station}, so Spark's subset-satisfies rule lets
     // the dedup aggregate, both windows, every groupBy and both joins
     // run complete-mode on this single partitioning (in-partition
-    // sorts remain; no further shuffles — localCheckpoint/LogicalRDD
-    // preserves outputPartitioning, so the staged blocks keep it).
+    // sorts remain; no further shuffles — either checkpoint's LogicalRDD
+    // preserves outputPartitioning, so the staged data keeps it).
     // Scale note: partition count is sized by spark.sql.shuffle
     // .partitions, and station-hash balance holds as long as station
     // cardinality ≫ partitions with no single dominant station — true

@@ -62,17 +62,17 @@ object Ingest {
     * single biggest job this family ever runs and it paid ~6× parse.
     * The NORMALIZED CORPUS is staged once (all six consumers re-read
     * it); the shared unigram token table is deliberately NOT staged —
-    * tools/InitStageProbe measured every toggle combination and at
-    * 500k docs (sf10) token-table staging is a net LOSS (one row per
-    * word occurrence: materializing it costs more than KMV+CMS's two
-    * re-derivations), while corpus staging wins 1.20× and grows with
+    * a staging probe (round 13, since deleted) measured every toggle
+    * combination and at 500k docs (sf10) token-table staging is a net
+    * LOSS (one row per word occurrence: materializing it costs more
+    * than KMV+CMS's two re-derivations), while corpus staging wins 1.20× and grows with
     * scale. See PLANS.md round 13 for the paired rows. Semantics-free
     * — the tables are byte-identical either way
     * (IngestStateSpec/IngestStreamSpec).
     */
   def initStates(corpus: DataFrame, id: Column, text: Column,
       chunkWords: Int = 12, k: Int = 64, depth: Int = 4,
-      width: Int = 256): States = Dedup.withStagingScope(corpus.sparkSession) {
+      width: Int = 256): States = {
     val c = Dedup.stageEager(corpus.select(id.as("doc_id"), text.as("text")))
     val tokC = tok(c)
     States(
@@ -93,14 +93,15 @@ object Ingest {
     * chunk hash — [[Dedup.chunkKeepersMerged]]). An empty survivor set
     * reports novel_ppm = 0.
     *
-    * The survivor sets are STAGED ([[Dedup.stageEager]], profile-aware)
+    * The survivor sets are STAGED ([[Dedup.stageEager]]: a reliable
+    * checkpoint when `spark.checkpoint.dir` is set, else a local one)
     * before fan-out: the report plus the six next-state tables trigger
     * seven independent actions downstream, and without staging each one
     * would re-run the two gate joins — at daily-batch scale the gates
     * are the expensive part, so a 7× recompute dominates the advance.
     * Staging is semantics-free (IngestStreamSpec parity holds
-    * unchanged); block residency follows the [[Dedup.withStagingScope]]
-    * contract (released on the next entrant / [[Dedup.releaseStaged]]).
+    * unchanged); Spark's ContextCleaner frees the staged data once the
+    * returned frames are unreachable.
     */
   def advanceOnce(batch: DataFrame, st: States, id: Column, text: Column,
       chunkWords: Int = 12, k: Int = 64, depth: Int = 4,
@@ -163,7 +164,7 @@ object Ingest {
   private def advanceDeltas(batch: DataFrame, st: States, id: Column, text: Column,
       chunkWords: Int, k: Int, depth: Int,
       width: Int,
-      fullMode: Boolean): (DataFrame, RawDeltas) = Dedup.withStagingScope(batch.sparkSession) {
+      fullMode: Boolean): (DataFrame, RawDeltas) = {
     val b = batch.select(id.as("doc_id"), text.as("text"))
     // ONE chunk-table pass feeds gate 1 AND the keeper delta: the
     // batch-first rows surviving the keeper-state anti-join carry both
@@ -189,7 +190,7 @@ object Ingest {
     val ng8b = Dedup.stageEager(Dedup.ngramFirstDocs(s2, col("doc_id"), col("text"), 8))
     // ng3b is consumed twice in full mode (novelty delta + min-merge)
     // but once in delta mode — staged only where shared (the r13
-    // InitStageProbe lesson: staging single-consumer tables is a loss)
+    // staging-probe lesson: staging single-consumer tables is a loss)
     val ng3b0 = Dedup.ngramFirstDocs(s2, col("doc_id"), col("text"), 3)
     val ng3b = if (fullMode) Dedup.stageEager(ng3b0) else ng3b0
     // the ng3 DELTA doubles as the novelty numerator: its rows are

@@ -580,8 +580,9 @@ object Similarity {
     * hash tables, candidate = collides with the query in ANY table —
     * the rh-LSH analog of MinHash banding. A single-table signature's
     * pair-hit probability is p^nBits (p = per-bit agreement, 1 − θ/π),
-    * which collapses at moderate neighbor cosine — RecallProbe measured
-    * 0.03 recall@10 for 1×8 bits on the real embeddings; OR over L
+    * which collapses at moderate neighbor cosine — a recall probe
+    * (since deleted) measured 0.03 recall@10 for 1×8 bits on the real
+    * embeddings; OR over L
     * tables lifts it to 1 − (1 − p^nBits)^L at L× the candidate cost.
     *
     * The L tables are SLICES of one wide (nBits·L ≤ 62) signature from
@@ -594,11 +595,12 @@ object Similarity {
     * wire only on deduped pair rows; at 100 TB the full signature is
     * an ingest-time column and each table join is bucket-co-located.
     */
-  /** RecallProbe's measured sizing rule, encoded: per-table width
-    * nBits = ⌊log₂(n / targetBucket)⌋ keeps the expected bucket near
-    * targetBucket vectors regardless of corpus size (too narrow →
-    * buckets crowd and the candidate set goes quadratic; too wide →
-    * per-table hit probability p^nBits collapses and recall dies), and
+  /** The measured sizing rule (recall probe since deleted), encoded:
+    * per-table width nBits = ⌊log₂(n / targetBucket)⌋ keeps the
+    * expected bucket near targetBucket vectors regardless of corpus
+    * size (too narrow → buckets crowd and the candidate set goes
+    * quadratic; too wide → per-table hit probability p^nBits collapses
+    * and recall dies), and
     * the table count L — the recall knob — takes the rest of the
     * 62-bit signature budget, capped at 12 (more tables past that buy
     * candidate cost, not recall). targetBucket = 125 is the MEASURED

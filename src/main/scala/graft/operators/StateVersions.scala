@@ -337,16 +337,13 @@ private[graft] object StateVersions {
     * and by q127/q129. Any ORDERED step (the documented ingest-before-
     * dup save order) stays OUTSIDE the legs — see the call sites.
     *
-    * Leg `b` runs under the caller's Spark context: the active session,
-    * the [[CarriedProperties]] and the caller's staging token (a
-    * null-token `stageEager` on the pool thread registers blocks that
-    * `releaseCompleted` treats as a completed invocation's, so the
-    * other leg's scope entries could unpersist them mid-flight). Each
-    * leg runs in its OWN FAIR pool (GraftSession pins
-    * spark.scheduler.mode=FAIR): under FIFO a leg whose jobs fill every
-    * core starves the other until its own task tail. Pool and tag
-    * properties are inherited by threads a leg creates, so a nested
-    * [[writeAll]] stays in its leg's pool and under its leg's tag.
+    * Leg `b` runs under the caller's Spark context: the active session
+    * and the [[CarriedProperties]]. Each leg runs in its OWN FAIR pool
+    * (GraftSession pins spark.scheduler.mode=FAIR): under FIFO a leg
+    * whose jobs fill every core starves the other until its own task
+    * tail. Pool and tag properties are inherited by threads a leg
+    * creates, so a nested [[writeAll]] stays in its leg's pool and
+    * under its leg's tag.
     *
     * Never returns with a leg still running, and never waits forever
     * on a doomed one. Each leg's jobs carry a job tag of their own;
@@ -366,7 +363,6 @@ private[graft] object StateVersions {
     val session = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
     val sc = session.map(_.sparkContext)
     val carried = CarriedProperties.map(k => k -> sc.map(_.getLocalProperty(k)).orNull)
-    val tok = Dedup.currentStagingToken
     val call = par2Calls.incrementAndGet()
     val (tagA, tagB) = (s"graft-par2-$call-a", s"graft-par2-$call-b")
     // the failure that doomed the call: whichever leg (or an interrupt)
@@ -392,7 +388,7 @@ private[graft] object StateVersions {
     val fb = Future {
       val prevSession = SparkSession.getActiveSession
       session.foreach(SparkSession.setActiveSession)
-      try attempt(leg("graft-par2-b", tagB)(Dedup.withStagingToken(tok)(b)))
+      try attempt(leg("graft-par2-b", tagB)(b))
       finally prevSession.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
     }(ExecutionContext.global)
     // b failed while a still runs: cancel a's jobs until a settles

@@ -169,8 +169,8 @@ object ExtrasCatalog {
   // q36 — bucketed-storage dedup-latest: write events bucketed by
   // user_id (Lake.writeBucketed), read the TABLE back, and run the
   // latest-per-key window — the bucketing carries the partitioning, so
-  // the window runs with NO Exchange (BucketProbe measures it; this
-  // query puts the result itself through the oracle gate). This is the
+  // the window runs with NO Exchange (measured by a probe since
+  // deleted; this query puts the result itself through the oracle gate). This is the
   // 100 TB answer to the reference's per-station access pattern: lay
   // the lake out by station/user key once, and every dedup-latest /
   // rollup on that key becomes shuffle-free.
@@ -367,8 +367,8 @@ object ExtrasCatalog {
   // q52 — the single-pass dedup-latest (Rollups.latestPerKeyAgg):
   // max_by aggregation instead of the q9 window — partial aggregation
   // collapses map-side, so the shuffle carries one row per key per
-  // mapper instead of every row (the default at scale; BucketProbe
-  // measures the difference). Same result contract as q9's
+  // mapper instead of every row (the default at scale; a probe, since
+  // deleted, measured the difference). Same result contract as q9's
   // DISTINCT ON, so the oracle is the same row_number replay.
 
   private val q52 = Q(

@@ -29,7 +29,7 @@ object StateCatalog {
     * invocations of an entry still overwrite one path, keeping its
     * round trip deterministic within a session.
     */
-  private def jvmScratch(prefix: String): String = {
+  private[graft] def jvmScratch(prefix: String): String = {
     val p = java.nio.file.Files.createTempDirectory(prefix)
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       def rm(f: java.io.File): Unit = {
@@ -65,7 +65,7 @@ object StateCatalog {
 
   private[queries] val clusterIncr = Q(
     "q129_cluster_incr",
-    (s, dir) => Dedup.withStagingScope(s) {
+    (s, dir) => {
       val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       val batch = d.filter(pmod(col("doc_id"), lit(10)) === 0)
         .select((col("doc_id") + 10000).as("doc_id"), col("text"))
@@ -79,7 +79,7 @@ object StateCatalog {
       // minHashLshPairsIncremental build lazy plans, so without the
       // stage the leg overlapped nothing and par2 measured exactly
       // 0.000 s here (r17 verdict/advice). The staged edge table is
-      // batch-bounded; clusterStateAdvance's own iterEager then merely
+      // batch-bounded; clusterStateAdvance's own stageEager then merely
       // re-pins the already-materialized rows.
       val (comp, edges) = par2(
         Dedup.connectedComponents(
@@ -175,7 +175,7 @@ object StateCatalog {
 
   private[queries] val ingestAdvance = Q(
     "q127_ingest_advance",
-    (s, dir) => Dedup.withStagingScope(s) {
+    (s, dir) => {
       val d = Tables.documents(s, dir).select(col("doc_id"), col("source"), col("text"))
       val batch = d.filter(pmod(col("doc_id"), lit(10)) === 0)
         .select((col("doc_id") + 10000).as("doc_id"), col("source"), col("text"))
@@ -203,8 +203,8 @@ object StateCatalog {
       val corpusSigs = Dedup.simHashDf(d, col("doc_id"), col("text"))
       // the gate staging chain (text) and the IVF index write+append
       // (embeddings) are INDEPENDENT until the final report join, and
-      // both are eager — Q127AnatomyProbe: gates 2.3 s, IVF 3.7 s of
-      // the 7.1 s entry. Overlapped (StateVersions.par2, §2.6);
+      // both are eager — measured (probe since deleted): gates 2.3 s,
+      // IVF 3.7 s of the 7.1 s entry. Overlapped (StateVersions.par2, §2.6);
       // everything after is lazy until the report action.
       val e = Tables.embeddings(s, dir)
       val path = s"$ivfIngestScratch/${new java.io.File(dir).getName}"
@@ -756,7 +756,7 @@ object StateCatalog {
 
   private[queries] val dailyPipeline = Q(
     "q131_daily_pipeline",
-    (s, dir) => Dedup.withStagingScope(s) {
+    (s, dir) => {
       val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       val batch = cycleBatch(d)
       // the ingest advance and the dup-cluster quotient advance are

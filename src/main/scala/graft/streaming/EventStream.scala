@@ -368,9 +368,9 @@ object EventStream {
 
   /** Recommended `deltaRebaseEvery` for [[ingestAdvanceStream]] and
     * the ingest leg of [[dailyCycleStream]]. The read side does not
-    * bound it: tools/DeltaFanInProbe measured per-advance walls flat
-    * through 16 delta layers over a plain base at sf1. Version count
-    * and retention do: compaction reclaims nothing between a base and
+    * bound it: a fan-in probe (since deleted) measured per-advance
+    * walls flat through 16 delta layers over a plain base at sf1.
+    * Version count and retention do: compaction reclaims nothing between a base and
     * its newest dependent delta, so a chain holds up to this many
     * versions beyond `keepLast`. 4 keeps the chain short and amortizes
     * the sf1 rebase (1.09 s) to ~0.27 s per batch; any value up to 16
@@ -381,7 +381,7 @@ object EventStream {
   val IngestRebaseRecommended: Int = 4
 
   /** MEASURED recommended `rebaseEvery` for [[dupClusterStream]]
-    * (tools/DupFanInProbe: fan-in flat through 16 delta layers over a
+    * (a fan-in probe, since deleted: flat through 16 delta layers over a
     * 500k-doc state — slope ≲ 0.1 s/layer — against a 3.8 s rebase;
     * the cadence is retention-bound, not read-bound). Same constant
     * contract as [[IngestRebaseRecommended]].
@@ -429,7 +429,7 @@ object EventStream {
     * under id-order arrival the persisted family still equals the
     * batch advance chain (IngestDeltaSpec).
     *
-    * Rebase cadence (tools/DeltaFanInProbe, 16-advance chains at
+    * Rebase cadence (a fan-in probe since deleted, 16-advance chains at
     * sf1): the fan-in is flat through 16 layers (the union scan
     * absorbs batch-sized deltas), so the bound is version listing +
     * retention (compaction can reclaim nothing between a base and its
@@ -480,9 +480,9 @@ object EventStream {
     * after each commit and never strands a delta's base.
     *
     * MEASURED rebase cadence on THIS sink's own fan-in curve
-    * (tools/DupFanInProbe, 16-delta chain over a 500k-doc state, r15 —
-    * the dup chain's read cost is a different function than ingest's,
-    * so the ingest Some(4) was not assumed): per-advance wall is FLAT
+    * (measured in round 15, probe since deleted: 16-delta chain over
+    * a 500k-doc state — the dup chain's read cost is a different
+    * function than ingest's, so the ingest Some(4) was not assumed): per-advance wall is FLAT
     * through 16 layers (~9.5 s steady, slope ≲ 0.1 s/layer inside
     * noise — comp's latest-wins merge is bounded by the dup-doc
     * domain, and the append legs are plain multi-dir unions) against a
@@ -495,7 +495,7 @@ object EventStream {
     * signature default — the shipped default stays `None` (full save
     * every batch), so a caller opts into delta persistence explicitly
     * (ADVICE r15: doc and default must agree). Post-rebase compaction
-    * measured by tools/DupCompactProbe: 17 versions / 172 MB reclaimed
+    * measured (probe since deleted): 17 versions / 172 MB reclaimed
     * in 0.2 s with the head still serving.
     *
     * `streamTag` and the checkpoint guard are [[ingestAdvanceStream]]'s.

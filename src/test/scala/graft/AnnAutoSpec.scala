@@ -6,7 +6,7 @@ import graft.sources.Tables
 
 /** Gates the auto-calibrated multi-table LSH knobs (VERDICT r5 #4):
   * lshMultiKnobs derives (nBits, nTables) from a corpus count via the
-  * RecallProbe-measured rule, and the derived configuration must hold
+  * rule a recall probe (since deleted) measured, and the derived configuration must hold
   * recall@10 ≥ 0.7 at BOTH gate scales — 2k real vectors (sf0.1) and
   * the 20k sf1 replica — so the q78 contract is no longer a literal
   * calibrated for one corpus size.

@@ -311,7 +311,7 @@ class DailyCycleSpec extends SparkSpecBase {
 
   test("recommended rebase cadences are pinned to the measured values") {
     // the constants exist so the scaladoc's cited rationale (both
-    // retention-bound: DeltaFanInProbe and DupFanInProbe measured flat
+    // retention-bound: fan-in probes (since deleted) measured flat
     // fan-in; ingest 4, dup a conservative 8) can never drift from what
     // callers are told to wire — a re-measurement must update BOTH,
     // here and there

@@ -4,8 +4,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Deployment profiles are runnable config: the knob set is closed
   * (both profiles pin the same conf keys), sizing scales coherently
-  * local → cluster, and the harness session actually carries the
-  * Local32 values.
+  * local → cluster, the harness session actually carries the Local32
+  * values, and staging honours the profile (cluster1000 refuses to
+  * stage without a reliable checkpoint dir).
   */
 class ProfileSpec extends AnyFunSuite {
 
@@ -91,5 +92,52 @@ class ProfileSpec extends AnyFunSuite {
     assert(sp.conf.get("spark.sql.adaptive.enabled") == "true")
     assert(sp.conf.get("spark.sql.autoBroadcastJoinThreshold") ==
       GraftSession.Local32.broadcastBytes.toString)
+    // SparkContext-level posture: these only take effect on the builder
+    val sc = sp.sparkContext
+    assert(sc.getConf.get("spark.scheduler.mode") == "FAIR")
+    assert(sc.hadoopConfiguration.get("mapreduce.fileoutputcommitter.algorithm.version") == "2")
+    assert(sc.getConf.get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true")
+  }
+
+  test("cluster profile without a checkpoint dir refuses to stage, before any job") {
+    val s = TestSpark.spark.newSession()
+    s.conf.set("spark.graft.profile", "cluster1000")
+    assume(s.sparkContext.getCheckpointDir.isEmpty,
+      "a checkpoint dir routes stageEager to the reliable checkpoint")
+    import s.implicits._
+    val df = (1 to 10).map(i => (i.toLong, s"v$i")).toDF("id", "v")
+    val sc = s.sparkContext
+    val tag = "profile-spec-stage"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.tags", "").split(',')
+            .contains(tag))) { jobs.incrementAndGet(); () }
+    }
+    sc.addSparkListener(listener)
+    sc.addJobTag(tag)
+    try {
+      val e = intercept[IllegalArgumentException](graft.operators.Dedup.stageEager(df))
+      assert(e.getMessage.contains("spark.checkpoint.dir"))
+      // one sentinel job under the same tag (an RDD action: exactly one
+      // job): the listener bus is FIFO, so once it is seen any job the
+      // refused call started is too
+      sc.parallelize(Seq(1), 1).count()
+    } finally sc.removeJobTag(tag)
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.{Seconds, Span}
+    try eventually(timeout(Span(30, Seconds)))(assert(jobs.get >= 1))
+    finally sc.removeSparkListener(listener)
+    assert(jobs.get == 1, s"the refused staging call ran ${jobs.get - 1} job(s)")
+  }
+
+  test("Local32 without a checkpoint dir stages the same rows") {
+    val s = TestSpark.spark
+    assume(s.sparkContext.getCheckpointDir.isEmpty,
+      "a checkpoint dir routes stageEager to the reliable checkpoint")
+    import s.implicits._
+    val df = (1 to 50).map(i => (i.toLong, s"v${i % 7}")).toDF("id", "v").filter($"id" % 3 =!= 0)
+    val staged = graft.operators.Dedup.stageEager(df)
+    assert(staged.orderBy("id").collect().toSeq == df.orderBy("id").collect().toSeq)
   }
 }
