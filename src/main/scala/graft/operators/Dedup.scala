@@ -1489,24 +1489,24 @@ object Dedup {
     * chunk values are heavily biased: at 500k docs the 4×16-bit
     * scheme produced 764M candidate pairs with 58% in the top ten
     * (chunk, cv) buckets (skew probe since deleted), and the verify
-    * volume — not task placement — owned the gate's wall (salting the hot
-    * buckets was measured a net LOSS: 49 s unsalted vs 58-65 s at
-    * salts 4-32, gate probe since deleted). The fix is more specific
-    * candidates: split the signature into m = maxDist + 2 chunks and band on
-    * every PAIR of chunks — C(m, 2) bands whose keys carry TWO chunk
-    * values (~2× the bits of a single-chunk key). Exactness is the
-    * same pigeonhole one level up: ≤ maxDist flipped bits touch
-    * ≤ maxDist chunks, leaving ≥ 2 chunks intact, and that intact
-    * pair is one of the enumerated bands — recall is guaranteed, and
-    * since the dist ≤ maxDist filter is unchanged the OUTPUT is
-    * set-identical to the single-chunk scheme (OperatorsSpec parity).
-    * Pairs are canonical-band unique (first matching band in band
-    * order, the [[simHashFirstMatch]] idea generalized), so no
-    * distinct exchange. For maxDist = 3: 5 chunks of ≤ 13 bits,
-    * 10 bands, 26-bit keys — measured 48.0 → 11.8 s on the 500k-doc
-    * gate with identical gate output (probe since deleted; wider bands lose
-    * again — r = 3 needs 11-bit chunks whose values are MORE biased,
-    * measured 54.9 s — so bandSize stays 2).
+    * volume — not task placement — owned the gate's wall (salting
+    * the hot buckets was measured a net LOSS: 49 s unsalted vs
+    * 58-65 s at salts 4-32, gate probe since deleted). The fix is
+    * more specific candidates: split the signature into
+    * m = maxDist + 2 chunks and band on every PAIR of chunks — C(m, 2)
+    * bands whose keys carry TWO chunk values (~2× the bits of a
+    * single-chunk key). Exactness is the same pigeonhole one level up:
+    * ≤ maxDist flipped bits touch ≤ maxDist chunks, leaving ≥ 2 chunks
+    * intact, and that intact pair is one of the enumerated bands —
+    * recall is guaranteed, and since the dist ≤ maxDist filter is
+    * unchanged the OUTPUT is set-identical to the single-chunk scheme
+    * (OperatorsSpec parity). Pairs are canonical-band unique (first
+    * matching band in band order, the [[simHashFirstMatch]] idea
+    * generalized), so no distinct exchange. For maxDist = 3: 5 chunks
+    * of ≤ 13 bits, 10 bands, 26-bit keys — measured 48.0 → 11.8 s on
+    * the 500k-doc gate with identical gate output (probe since deleted;
+    * wider bands lose again — r = 3 needs 11-bit chunks whose values
+    * are MORE biased, measured 54.9 s — so bandSize stays 2).
     */
   private[graft] def simHashPairsIncrementalBanded(corpusSigs: DataFrame, newDocs: DataFrame,
       id: Column, text: Column, maxDist: Int, bandSize: Int = 2): DataFrame = {

@@ -95,9 +95,9 @@ object DupState {
     * intersection join then over-counts and `na + nb - inter` can
     * reach zero on verbatim copies sharing the collision (found by
     * a layout probe at 200k docs, since deleted; GUARANTEED at lake
-    * scale). Under ANSI that divided to a job-killing error; try_divide yields NULL
-    * → the pair is dropped, exactly what the DuckDB oracle computes
-    * (its double division by zero is NULL).
+    * scale). Under ANSI that divided to a job-killing error;
+    * try_divide yields NULL → the pair is dropped, exactly what the
+    * DuckDB oracle computes (its double division by zero is NULL).
     */
   private def verify(cand: DataFrame, ngrA: DataFrame, ngrB: DataFrame,
       sizesA: DataFrame, sizesB: DataFrame, minJaccard: Double): DataFrame = {

@@ -65,9 +65,9 @@ object Ingest {
     * a staging probe (round 13, since deleted) measured every toggle
     * combination and at 500k docs (sf10) token-table staging is a net
     * LOSS (one row per word occurrence: materializing it costs more
-    * than KMV+CMS's two re-derivations), while corpus staging wins 1.20× and grows with
-    * scale. See PLANS.md round 13 for the paired rows. Semantics-free
-    * — the tables are byte-identical either way
+    * than KMV+CMS's two re-derivations), while corpus staging wins
+    * 1.20× and grows with scale. See PLANS.md round 13 for the paired
+    * rows. Semantics-free — the tables are byte-identical either way
     * (IngestStateSpec/IngestStreamSpec).
     */
   def initStates(corpus: DataFrame, id: Column, text: Column,

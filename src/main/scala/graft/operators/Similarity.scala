@@ -582,8 +582,8 @@ object Similarity {
     * pair-hit probability is p^nBits (p = per-bit agreement, 1 − θ/π),
     * which collapses at moderate neighbor cosine — a recall probe
     * (since deleted) measured 0.03 recall@10 for 1×8 bits on the real
-    * embeddings; OR over L
-    * tables lifts it to 1 − (1 − p^nBits)^L at L× the candidate cost.
+    * embeddings; OR over L tables lifts it to 1 − (1 − p^nBits)^L at
+    * L× the candidate cost.
     *
     * The L tables are SLICES of one wide (nBits·L ≤ 62) signature from
     * the native kernel: table t's key is bits [t·nBits, (t+1)·nBits) —
@@ -600,13 +600,12 @@ object Similarity {
     * expected bucket near targetBucket vectors regardless of corpus
     * size (too narrow → buckets crowd and the candidate set goes
     * quadratic; too wide → per-table hit probability p^nBits collapses
-    * and recall dies), and
-    * the table count L — the recall knob — takes the rest of the
-    * 62-bit signature budget, capped at 12 (more tables past that buy
-    * candidate cost, not recall). targetBucket = 125 is the MEASURED
-    * default: on the real embeddings it yields 4×12 at 2k vectors
-    * (recall@10 0.781) and 7×8 at 20k (0.806) — both above the 0.7
-    * bar, where the former ceil/bucket-16 rule picked 7×8 at 2k
+    * and recall dies), and the table count L — the recall knob — takes
+    * the rest of the 62-bit signature budget, capped at 12 (more tables
+    * past that buy candidate cost, not recall). targetBucket = 125 is
+    * the MEASURED default: on the real embeddings it yields 4×12 at 2k
+    * vectors (recall@10 0.781) and 7×8 at 20k (0.806) — both above the
+    * 0.7 bar, where the former ceil/bucket-16 rule picked 7×8 at 2k
     * (0.276). FLOOR, not ceil: rounding bits down doubles the bucket
     * (bounded extra verify cost); rounding up halves the per-table hit
     * probability ~p-fold (unbounded recall loss).

@@ -170,10 +170,10 @@ object ExtrasCatalog {
   // user_id (Lake.writeBucketed), read the TABLE back, and run the
   // latest-per-key window — the bucketing carries the partitioning, so
   // the window runs with NO Exchange (measured by a probe since
-  // deleted; this query puts the result itself through the oracle gate). This is the
-  // 100 TB answer to the reference's per-station access pattern: lay
-  // the lake out by station/user key once, and every dedup-latest /
-  // rollup on that key becomes shuffle-free.
+  // deleted; this query puts the result itself through the oracle
+  // gate). This is the 100 TB answer to the reference's per-station
+  // access pattern: lay the lake out by station/user key once, and
+  // every dedup-latest / rollup on that key becomes shuffle-free.
 
   private val q36 = Q(
     "q36_bucketed_latest",

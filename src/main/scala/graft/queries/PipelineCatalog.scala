@@ -1563,8 +1563,8 @@ object PipelineCatalog {
   // 4 bits sliced from ONE 48-bit rh-signature; a pair is a candidate
   // if it collides in ANY table (minhash-banding semantics for the
   // embedding side). Single-table recall@10 on this corpus is 0.03
-  // (recall probe since deleted); 4×12 lifts it to 0.78 at similar cost. nBits must
-  // track corpus size (rule: nBits ≈ log2(n_vecs / target_bucket),
+  // (recall probe since deleted); 4×12 lifts it to 0.78 at similar
+  // cost. nBits must track corpus size (rule: nBits ≈ log2(n_vecs / target_bucket),
   // here log2(2000/125) = 4; a 1B-vector lake runs ~20×3) — the table
   // count, not the bucket width, is the recall knob. Oracle replays
   // the wide signature and the shift/mask slicing exactly.

@@ -370,13 +370,14 @@ object EventStream {
     * the ingest leg of [[dailyCycleStream]]. The read side does not
     * bound it: a fan-in probe (since deleted) measured per-advance
     * walls flat through 16 delta layers over a plain base at sf1.
-    * Version count and retention do: compaction reclaims nothing between a base and
-    * its newest dependent delta, so a chain holds up to this many
-    * versions beyond `keepLast`. 4 keeps the chain short and amortizes
-    * the sf1 rebase (1.09 s) to ~0.27 s per batch; any value up to 16
-    * is read-neutral. A named constant, not the signature default, so
-    * the number callers are told to wire cannot drift from the one
-    * DailyCycleSpec pins and the daily-cycle benchmark runs.
+    * Version count and retention do: compaction reclaims nothing
+    * between a base and its newest dependent delta, so a chain holds up
+    * to this many versions beyond `keepLast`. 4 keeps the chain short
+    * and amortizes the sf1 rebase (1.09 s) to ~0.27 s per batch; any
+    * value up to 16 is read-neutral. A named constant, not the
+    * signature default, so the number callers are told to wire cannot
+    * drift from the one DailyCycleSpec pins and the daily-cycle
+    * benchmark runs.
     */
   val IngestRebaseRecommended: Int = 4
 
@@ -482,21 +483,21 @@ object EventStream {
     * MEASURED rebase cadence on THIS sink's own fan-in curve
     * (measured in round 15, probe since deleted: 16-delta chain over
     * a 500k-doc state — the dup chain's read cost is a different
-    * function than ingest's, so the ingest Some(4) was not assumed): per-advance wall is FLAT
-    * through 16 layers (~9.5 s steady, slope ≲ 0.1 s/layer inside
-    * noise — comp's latest-wins merge is bounded by the dup-doc
-    * domain, and the append legs are plain multi-dir unions) against a
-    * 3.8 s full-rebase cost → the RECOMMENDED setting is
-    * `rebaseEvery = Some(DupRebaseRecommended)` (= 8;
-    * √(2·rebase/slope) ≈ 9 at the noisy-slope bound; with slope ~0
-    * the binding term is RETENTION, not read cost — compaction
-    * reclaims nothing between a base and its newest dependent delta,
-    * so longer cadences hold version count, not wall). It is NOT the
+    * function than ingest's, so the ingest Some(4) was not assumed):
+    * per-advance wall is FLAT through 16 layers (~9.5 s steady,
+    * slope ≲ 0.1 s/layer inside noise — comp's latest-wins merge is
+    * bounded by the dup-doc domain, and the append legs are plain
+    * multi-dir unions) against a 3.8 s full-rebase cost → the
+    * RECOMMENDED setting is `rebaseEvery = Some(DupRebaseRecommended)`
+    * (= 8; √(2·rebase/slope) ≈ 9 at the noisy-slope bound; with slope
+    * ~0 the binding term is RETENTION, not read cost — compaction
+    * reclaims nothing between a base and its newest dependent delta, so
+    * longer cadences hold version count, not wall). It is NOT the
     * signature default — the shipped default stays `None` (full save
     * every batch), so a caller opts into delta persistence explicitly
     * (ADVICE r15: doc and default must agree). Post-rebase compaction
-    * measured (probe since deleted): 17 versions / 172 MB reclaimed
-    * in 0.2 s with the head still serving.
+    * measured (probe since deleted): 17 versions / 172 MB reclaimed in
+    * 0.2 s with the head still serving.
     *
     * `streamTag` and the checkpoint guard are [[ingestAdvanceStream]]'s.
     * The state dir must be bootstrapped at v=0

@@ -6,10 +6,10 @@ import graft.sources.Tables
 
 /** Gates the auto-calibrated multi-table LSH knobs (VERDICT r5 #4):
   * lshMultiKnobs derives (nBits, nTables) from a corpus count via the
-  * rule a recall probe (since deleted) measured, and the derived configuration must hold
-  * recall@10 ≥ 0.7 at BOTH gate scales — 2k real vectors (sf0.1) and
-  * the 20k sf1 replica — so the q78 contract is no longer a literal
-  * calibrated for one corpus size.
+  * rule a recall probe (since deleted) measured, and the derived
+  * configuration must hold recall@10 ≥ 0.7 at BOTH gate scales — 2k
+  * real vectors (sf0.1) and the 20k sf1 replica — so the q78 contract
+  * is no longer a literal calibrated for one corpus size.
   */
 class AnnAutoSpec extends SparkSpecBase {
 
