@@ -34,20 +34,25 @@ object Bench {
     Seq("lineitem", "events", "documents", "orders").foreach { t =>
       try spark.read.parquet(s"$sfDir/$t.parquet").count() catch { case _: Throwable => () }
     }
-    final case class Meas(wall: Double, gc: Long, cpu: Double, jobs: Long)
+    // codegen compiles (Janino runs on a cache miss) per query: a
+    // query that recompiles in every timed run has outgrown Spark's
+    // codegen cache (GraftSession.confs sizes it)
+    def codegenCompiles: Long = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    final case class Meas(wall: Double, gc: Long, cpu: Double, jobs: Long, compiles: Long)
     // per-query failed-run counter: min-of-N selection may mask a
     // query that fails on RE-execution behind one good run (leaked
     // temp view / state) — surface the count so a deterministic
     // rerun failure is visible even when the kept time looks healthy
     val runFails = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
     def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Meas = {
-      val (t0, g0, c0, j0) = (System.nanoTime(), gcMs, cpuNs, jobCount.get())
+      val (t0, g0, c0, j0, k0) = (System.nanoTime(), gcMs, cpuNs, jobCount.get(), codegenCompiles)
       // a query that fails fast must NOT be reported as a (very good)
       // number — poison the min with NaN, exported as -1
       val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
       val dt = (System.nanoTime() - t0) / 1e9
       spark.catalog.clearCache() // drop operator-internal persists between queries
-      Meas(if (ok) dt else Double.NaN, gcMs - g0, (cpuNs - c0) / 1e9, jobCount.get() - j0)
+      Meas(if (ok) dt else Double.NaN, gcMs - g0, (cpuNs - c0) / 1e9, jobCount.get() - j0,
+        codegenCompiles - k0)
     }
     // CODE-FROZEN calibration probes (r10 VERDICT: the ±30-40% machine
     // band cost rounds 8-10 an investigation each). Three fixed
@@ -263,7 +268,7 @@ object Bench {
       .foldLeft(0)(math.max) + 1
     val round = sys.env.get("GRAFT_BENCH_ROUND").flatMap(_.toIntOption).getOrElse(inferred)
     val fullQs = resultsR.map { case (k, m) =>
-      s"\"$k\":{\"wall\":${fmt(m.wall)},\"cpu\":${fmt(m.cpu)},\"gc_ms\":${m.gc},\"jobs\":${m.jobs},\"run_fails\":${runFails(k)}}"
+      s"\"$k\":{\"wall\":${fmt(m.wall)},\"cpu\":${fmt(m.cpu)},\"gc_ms\":${m.gc},\"jobs\":${m.jobs},\"compiles\":${m.compiles},\"run_fails\":${runFails(k)}}"
     }.mkString("{", ",", "}")
     // per-pass spread+total pairs (one entry = single pass; two = the
     // committed walls are cross-pass minima — see the merge above)

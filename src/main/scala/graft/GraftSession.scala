@@ -138,9 +138,10 @@ object GraftSession {
     // Visibility-on-crash semantics are NOT load-bearing here: every
     // state-version read is gated by StateVersions' _COMMITTED marker
     // (written after all table writes return), and the IVF tree is
-    // single-maintainer by contract. At cluster scale an object-store
-    // deployment replaces this with the store's manifest committer
-    // anyway; speculative execution stays off.
+    // single-maintainer by contract and rebuilt after a failed append
+    // (Similarity.appendIvfIndex's crash model). At cluster scale an
+    // object-store deployment replaces this with the store's manifest
+    // committer anyway; speculative execution stays off.
     "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version" -> "2",
     // reliable-checkpoint files (staging when spark.checkpoint.dir is
     // set) are deleted by the ContextCleaner once their RDD is
@@ -148,6 +149,17 @@ object GraftSession {
     // instead of piling up in the dir for the application's lifetime.
     // SparkContext-level conf, like the scheduler mode.
     "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true",
+    // Spark's JVM-wide LRU cache of compiled whole-stage-codegen classes
+    // (default 100 entries) sized to the engine's working set, so each
+    // generated class is compiled once per JVM instead of once per
+    // eviction (Janino, ~26 ms per class). Distinct classes, counted
+    // with a cache that never evicts, at sf0.01: corpus_dedup's 5 entries
+    // 329, one daily_cycle day 327, interactive_sql's 53 entries 1,102, the
+    // full 149-entry catalog (graft.Verify) 3,353; pinned at the next
+    // power of two ≥ 1.25× the catalog's. A static conf read once, when
+    // CodeGenerator is first used: it takes effect only if no codegen
+    // runs before the tuned session exists, so it rides the builder.
+    "spark.sql.codegen.cache.maxEntries" -> "8192",
     "spark.sql.shuffle.partitions" -> p.shufflePartitions.toString,
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.adaptive.enabled" -> "true",

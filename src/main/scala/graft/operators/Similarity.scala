@@ -404,6 +404,16 @@ object Similarity {
     * Centroid drift under sustained inserts is handled by the rebuild
     * path ([[writeIvfIndex]] retrain), the standard IVF maintenance
     * trade.
+    *
+    * Crash model: the append is not atomic. Under the pinned
+    * FileOutputCommitter v2 (GraftSession.confs) each task renames its
+    * cell files straight into `path`/cells, so an append that fails
+    * part-way can leave some of its cell files visible. IVF reads are
+    * not gated by a `_COMMITTED` marker (unlike state versions), so a
+    * probe then sees a partial batch. Retrying the append could add
+    * the already-visible rows a second time: after a failed append the
+    * caller must rebuild the index with [[writeIvfIndex]] before it
+    * retries.
     */
   def appendIvfIndex(newVecs: DataFrame, path: String): Unit = {
     val spark = newVecs.sparkSession

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Guards the whole-stage-codegen contract of the native kernels.
+/** Guards the whole-stage-codegen contract of the native kernels, and
+  * that the session's codegen cache holds the engine's working set.
   *
   * Each test places TWO instances of a kernel in ONE projection — the
   * shape real catalog plans produce (two poly-hashes in a dedup staging
@@ -127,5 +128,24 @@ class CodegenSpec extends SparkSpecBase {
     assert(rows.length == 2)
     // self-cosine is exactly 1.0
     rows.foreach(r => assert(math.abs(r.getDouble(1) - 1.0) < 1e-12))
+  }
+
+  test("a working set larger than Spark's default codegen cache is compiled once") {
+    // 150 projections, each inlining its own literal: more distinct
+    // generated classes than Spark's default 100-entry cache holds, so
+    // at that size LRU evicts each class before the next round reaches
+    // it and the second round recompiles every one; at the size
+    // GraftSession.confs pins, the second round finds all of them cached.
+    // (Catalog entries make a flaky working set here: AQE re-plans some
+    // of them by stage-completion order, so a later round can still meet
+    // a few classes it has not compiled yet.)
+    def round(): Unit =
+      (1 to 150).foreach(i => spark.range(4).selectExpr(s"id * $i + 1 AS x").collect())
+    def compiles: Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    round()
+    val before = compiles
+    round()
+    assert(compiles - before == 0, "classes recompiled in the second round")
   }
 }

@@ -20,6 +20,8 @@ class ProfileSpec extends AnyFunSuite {
       "spark.sql.files.openCostInBytes")
     assert(l.view.filterKeys(!sizing(_)).toMap == c.view.filterKeys(!sizing(_)).toMap)
     sizing.foreach(k => assert(l(k) != c(k), k))
+    // the codegen cache holds the catalog's working set under both
+    Seq(l, c).foreach(m => assert(m("spark.sql.codegen.cache.maxEntries") == "8192"))
   }
 
   test("cluster profile scales every sizing knob up from local") {
@@ -97,6 +99,7 @@ class ProfileSpec extends AnyFunSuite {
     assert(sc.getConf.get("spark.scheduler.mode") == "FAIR")
     assert(sc.hadoopConfiguration.get("mapreduce.fileoutputcommitter.algorithm.version") == "2")
     assert(sc.getConf.get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true")
+    assert(sc.getConf.get("spark.sql.codegen.cache.maxEntries") == "8192")
   }
 
   test("cluster profile without a checkpoint dir refuses to stage, before any job") {
